@@ -39,6 +39,10 @@ EXTENT = 8192.0
 AREA_SHAPES = ("rectangle", "circle", "polygon")
 AREA_RULES = ("inside", "intersect", "outside")  # the per-pass rule order
 N_BBOX = 4
+# area shapes and bbox windows have a fixed size and a seeded position, so
+# every seed's queries cover about the same number of entities
+SHAPE_R = 1000.0
+WINDOW_HALF = 600.0
 
 
 def digest(rows) -> dict:
@@ -178,7 +182,7 @@ def area_mask(shape: str, rule: str, args, x0, y0, x1, y1) -> np.ndarray:
 
 def _draw_shape(rng, shape: str):
     cx, cy = (float(v) for v in rng.uniform(1500, EXTENT - 1500, 2))
-    r = float(rng.uniform(600, 1400))
+    r = SHAPE_R
     if shape == "rectangle":
         return [cx - r, cx + r, cy - 0.7 * r, cy + 0.7 * r]
     if shape == "circle":
@@ -189,7 +193,7 @@ def _draw_shape(rng, shape: str):
 
 
 def _window(rng) -> list[float]:
-    (cx, cy), w = rng.uniform(1000, EXTENT - 1000, 2), float(rng.uniform(300, 900))
+    (cx, cy), w = rng.uniform(1000, EXTENT - 1000, 2), WINDOW_HALF
     return [float(cx) - w, float(cy) - w, float(cx) + w, float(cy) + w]
 
 
@@ -216,13 +220,14 @@ def jaccard(a: str, b: str) -> float:
 
 # --- seed inputs ------------------------------------------------------------
 
-def _ensure_pool(spark, work: str) -> str:
+def _ensure_pool(get_spark, work: str) -> str:
     """The corpus documents with indices [0, POOL_DOCS), generated once."""
     from dxf_postgis_converter_spark import corpus
 
     d = os.path.join(work, f"pool-{POOL_DOCS}-v{corpus.CORPUS_VERSION}")
     if not os.path.isdir(d):
         tmp = f"{d}.tmp-{os.getpid()}"
+        spark = get_spark()
         spark.range(0, POOL_DOCS, numPartitions=4 * spark.sparkContext.defaultParallelism) \
             .mapInPandas(corpus._gen_batches, corpus.SPANS_SCHEMA) \
             .write.mode("overwrite").parquet(tmp)
@@ -230,7 +235,7 @@ def _ensure_pool(spark, work: str) -> str:
     return d
 
 
-def _ensure_window(spark, work: str, lo: int, n: int) -> str:
+def _ensure_window(get_spark, work: str, lo: int, n: int, cpus: int) -> str:
     """Pool documents [lo, lo + n) as an input table, written once."""
     from dxf_postgis_converter_spark import corpus
 
@@ -238,18 +243,20 @@ def _ensure_window(spark, work: str, lo: int, n: int) -> str:
     if not os.path.isdir(d):
         tmp = f"{d}.tmp-{os.getpid()}"
         ids = [corpus.doc_id_for(i) for i in range(lo, lo + n)]
-        window = pq.read_table(_ensure_pool(spark, work), filters=[("doc_id", "in", ids)])
+        window = pq.read_table(_ensure_pool(get_spark, work), filters=[("doc_id", "in", ids)])
         os.makedirs(tmp)
-        n_files = 2 * spark.sparkContext.defaultParallelism  # one scan task per file
+        n_files = 2 * cpus  # one scan task per file
         for i, rows in enumerate(np.array_split(np.arange(window.num_rows), n_files)):
             pq.write_table(window.take(rows), os.path.join(tmp, f"part-{i:05d}.parquet"))
         _publish(tmp, d)
     return d
 
 
-def ensure_inputs(spark, work: str, seed: int, n: int, first: int | None = None) -> dict:
+def ensure_inputs(get_spark, work: str, seed: int, n: int, cpus: int,
+                  first: int | None = None) -> dict:
     """Generate (once) the seed's documents + derived inputs and oracles.
     The document window starts at a seeded pool offset, or at ``first``.
+    ``get_spark()`` starts a session, called only to generate the pool.
     Returns the manifest: input paths, sizes, query parameters, oracles."""
     from dxf_postgis_converter_spark import corpus
     from dxf_postgis_converter_spark.functions.decode import convert_entity
@@ -263,7 +270,7 @@ def ensure_inputs(spark, work: str, seed: int, n: int, first: int | None = None)
         return dict(man, dir=d)
     tmp = f"{d}.tmp-{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
-    docs_dir = _ensure_window(spark, work, lo, n)
+    docs_dir = _ensure_window(get_spark, work, lo, n, cpus)
     zones = corpus.build_zones()
     os.makedirs(os.path.join(tmp, "zones"))
     pq.write_table(pa.Table.from_pandas(zones, preserve_index=False),
@@ -349,7 +356,7 @@ def ensure_inputs(spark, work: str, seed: int, n: int, first: int | None = None)
     return dict(_load(d), dir=d)
 
 
-def ensure_store(spark, work: str, man: dict, src_hash: str) -> dict:
+def ensure_store(get_spark, work: str, man: dict, src_hash: str) -> dict:
     """Entity store that the code under test writes from the manifest's
     documents, built once per (document window, package source hash), plus
     the oracles derived from its bounding boxes (the seed's area shapes
@@ -362,7 +369,7 @@ def ensure_store(spark, work: str, man: dict, src_hash: str) -> dict:
     if _load(d) is None:
         tmp = f"{d}.tmp-{os.getpid()}"
         shutil.rmtree(tmp, ignore_errors=True)
-        docs = spark.read.parquet(man["docs_dir"])
+        docs = get_spark().read.parquet(man["docs_dir"])
         write_entities(decode_documents(docs, keep_media_ref=False),
                        os.path.join(tmp, "entities"))
         with open(os.path.join(tmp, "manifest.json"), "w") as f:
