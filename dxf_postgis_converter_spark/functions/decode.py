@@ -540,17 +540,30 @@ def _decode_batches(batches, emit_media_ref: bool = True):
         yield pd.DataFrame(data, columns=cols)
 
 
-def _bytes_string_array(vals: list):
-    """Arrow string array from a list of utf-8 bytes objects, assembled
-    via from_buffers (no per-value Python str, no re-validation — the
-    bytes came from a validated Arrow string column or a JSON encoder)."""
+def bytes_string_array(vals: list):
+    """Arrow string array from a list of utf-8 bytes objects (None →
+    null), assembled via from_buffers (no per-value Python str, no
+    re-validation — the bytes came from a validated Arrow string column
+    or a JSON encoder). The output owns fresh buffers, never the input
+    batch's. Raises OverflowError once the values total 2**31 bytes,
+    which int32 string offsets cannot address."""
     import pyarrow as pa
 
-    data = b"".join(vals)
-    offs = np.zeros(len(vals) + 1, dtype=np.int32)
+    n = len(vals)
+    validity = None
+    if None in vals:
+        valid = np.fromiter((v is not None for v in vals), dtype=bool, count=n)
+        validity = pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
+        vals = [b"" if v is None else v for v in vals]
+    offs = np.zeros(n + 1, dtype=np.int64)
     np.cumsum([len(v) for v in vals], out=offs[1:])
+    if offs[-1] >= 2**31:
+        raise OverflowError(
+            f"{offs[-1]} bytes of strings in one Arrow batch; int32 offsets "
+            "stop at 2**31 - 1 (lower spark.sql.execution.arrow.maxBytesPerBatch)")
     return pa.StringArray.from_buffers(
-        len(vals), pa.py_buffer(offs.tobytes()), pa.py_buffer(data))
+        n, pa.py_buffer(offs.astype(np.int32).tobytes()),
+        pa.py_buffer(b"".join(vals)), validity)
 
 
 def _decode_arrow_batches(batches, emit_media_ref: bool = True):
@@ -600,7 +613,7 @@ def _decode_arrow_batches(batches, emit_media_ref: bool = True):
             if f.name == "media_ref":
                 # fresh buffers (bytes are copies, offsets built here) —
                 # values identical to the input strings
-                arrays.append(_bytes_string_array(refs))
+                arrays.append(bytes_string_array(refs))
             else:
                 arrays.append(pa.array(cols[f.name], f.type))
         yield pa.RecordBatch.from_arrays(arrays, schema=pa_schema)

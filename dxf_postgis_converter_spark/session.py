@@ -68,13 +68,10 @@ def get_spark(
         # per-task overhead beats wave smoothing when tasks are already
         # balanced) and the 64-file entities table it writes costs
         # +0.2-0.5s on EVERY downstream scan (per-file reader init ×2).
-        # The env override remains for corpora whose file sizes genuinely
-        # skew; default = Spark's defaultParallelism behaviour.
-        .config("spark.sql.files.minPartitionNum",
-                os.environ.get("SPARK_GRAFT_MIN_PARTITION_NUM",
-                               str(_cpu_count())))
+        # So spark.sql.files.minPartitionNum is left unset: Spark's own
+        # default (the cluster's defaultParallelism) applies.
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.ui.enabled", "false")
         # Shuffle/spill scratch space. Measured on this box: pointing it
@@ -94,6 +91,18 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY`` (deployment override), else ≈60 % of the
+    machine's physical RAM capped at 16g: the rest is for the Python
+    workers, the JVM's off-heap memory and the page cache. In local mode
+    the driver JVM runs every task, so a fixed 16g overcommits a 15 GB
+    box."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") * 6 // 10 >> 20
+    return f"{min(mib, 16 << 10)}m"
 
 
 def _cpu_count() -> int:

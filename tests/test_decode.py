@@ -235,3 +235,52 @@ def test_no_orjson_fallback_importable_and_equivalent():
         sys.modules.pop(dec.__name__, None)
         sys.modules.update(saved)
         importlib.import_module(dec.__name__)
+
+
+def test_null_media_ref_is_an_error_row(spark):
+    """A null media_ref becomes one error row (null media_ref out); it
+    must not fail the Arrow batch or disturb the document's other rows."""
+    from dxf_postgis_converter_spark.corpus import SPANS_SCHEMA, build_document
+    from dxf_postgis_converter_spark.functions.decode import decode_documents
+
+    doc_id, spans = build_document(0)
+    media = [i for i, s in enumerate(spans) if s["kind"] == "media"]
+    broken = [dict(s, media_ref=None) if i == media[0] else s
+              for i, s in enumerate(spans)]
+    cols = ["span_offset", "entity_type", "geometry_wkb", "media_ref", "error"]
+
+    def decode(sp):
+        df = spark.createDataFrame([(doc_id, sp)], schema=SPANS_SCHEMA)
+        return {r["span_offset"]: r for r in
+                decode_documents(df, keep_media_ref=True).select(cols).collect()}
+
+    good, got = decode(spans), decode(broken)
+    bad = spans[media[0]]["offset"]
+    assert got.keys() == good.keys() and len(got) == len(media) > 1
+    assert got[bad]["media_ref"] is None
+    assert got[bad]["error"] == "Unsupported entity type: UNKNOWN"
+    assert all(got[o] == good[o] for o in good if o != bad)
+
+
+def test_bytes_string_array_nulls():
+    from dxf_postgis_converter_spark.functions.decode import bytes_string_array
+
+    vals = [b"a", None, "été".encode(), b"", None]
+    arr = bytes_string_array(vals)
+    assert arr.null_count == 2
+    assert arr.to_pylist() == [None if v is None else v.decode() for v in vals]
+    arr.validate(full=True)
+
+
+class _LongBytes(bytes):
+    """Reports 2**30 bytes without holding them."""
+
+    def __len__(self):
+        return 2**30
+
+
+def test_bytes_string_array_refuses_int32_offset_overflow():
+    from dxf_postgis_converter_spark.functions.decode import bytes_string_array
+
+    with pytest.raises(OverflowError, match="2\\*\\*31"):
+        bytes_string_array([_LongBytes(), _LongBytes()])
