@@ -630,36 +630,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.sum(token_count(F.col("text"))).alias("total_tokens"))
     q["q_text_span_tokens"] = q_text_span_tokens
 
-    def q_knn_points(spark, sf_dir):  # J11 kNN join — oneshot strategy
-        # Pins strategy="oneshot" so the radius-proof formulation stays
-        # driver-gated at sf0.01 (the "auto" default would dispatch this
-        # tiny probe side to the ladder, which q_knn_dense already gates;
-        # auto itself is a count + the two gated paths, unit-tested).
+    def q_knn_points(spark, sf_dir):  # J11 kNN join
+        # counts-pyramid radius proof + one candidate join at res 7
         pts = _media(spark, sf_dir).filter(F.col("entity_type") == "POINT").select(
             F.col("handle"), F.col("xmin").alias("x"), F.col("ymin").alias("y"))
         probes = pts.filter(F.col("handle").endswith("7a")).select(
             F.col("handle").alias("probe_id"), "x", "y")
         targets = pts.select(F.col("handle").alias("target_id"), "x", "y")
-        out = knn_join(probes, targets, k=5, res=7, strategy="oneshot")
+        out = knn_join(probes, targets, k=5, res=7)
         return out.select("probe_id", "target_id", F.round("dist", 6).alias("dist"), "rank")
     q["q_knn_points"] = q_knn_points
 
-    def q_knn_dense(spark, sf_dir):  # J11 density-mapped ladder (hot-cell path)
-        """Same exact-kNN contract as q_knn_points, but hot_cell_threshold
-        is forced low so the driver gate exercises the density-mapped
-        multi-resolution schedule (per-probe starting levels from the
-        cell-population map, single r=2 round per level, size-based join
-        side selection) instead of the plain coarse ring walk. Pins
-        strategy="ladder": with "oneshot" the default since r5, this row
-        is what keeps the iterative ladder driver-gated (q_knn_points
-        drives the default oneshot path against the same oracle)."""
+    def q_knn_dense(spark, sf_dir):  # J11 kNN join, coarse grid
+        """Same exact-kNN contract as q_knn_points at a second operating
+        point: the counts pyramid starts from the coarser res-6 grid,
+        with k=3 and a different probe set."""
         pts = _media(spark, sf_dir).filter(F.col("entity_type") == "POINT").select(
             F.col("handle"), F.col("xmin").alias("x"), F.col("ymin").alias("y"))
         probes = pts.filter(F.col("handle").endswith("3f")).select(
             F.col("handle").alias("probe_id"), "x", "y")
         targets = pts.select(F.col("handle").alias("target_id"), "x", "y")
-        out = knn_join(probes, targets, k=3, res=6, hot_cell_threshold=200,
-                       strategy="ladder")
+        out = knn_join(probes, targets, k=3, res=6)
         return out.select("probe_id", "target_id", F.round("dist", 6).alias("dist"), "rank")
     q["q_knn_dense"] = q_knn_dense
 

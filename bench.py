@@ -221,17 +221,13 @@ def main() -> None:
 
     # stage 5 — kNN join: probe points vs all points, k=5.
     # BENCH_KNN_PROBES (default 2000) scales the probe side toward the
-    # production regime (10^5-10^6 probes) — the per-round ring-schedule
-    # barriers are a fixed cost whose COUNT is input-independent, so the
-    # parallel work must dominate once probes grow (VERDICT r3 item 5)
+    # production regime (10^5-10^6 probes) — the join's job count is
+    # fixed, so the parallel work must dominate once probes grow
     if pts is not None:
         all_pts = pts.select(F.col("handle").alias("target_id"), "x", "y")
         n_probes = int(os.environ.get("BENCH_KNN_PROBES", "2000"))
         probes = pts.limit(n_probes).select(F.col("handle").alias("probe_id"), "x", "y")
-        # default strategy="auto": one probe-count action, then the ladder
-        # below 2M probes (barrier floor beats the oneshot's
-        # target-proportional pyramid there) or the oneshot at scale —
-        # SPARK_GRAFT_KNN_STRATEGY pins either for A/B runs
+        # counts-pyramid radius proof, then one candidate join + rank
         timed("knn_join", lambda: _force(
             knn_join(probes, all_pts, k=5, res=7)))
 

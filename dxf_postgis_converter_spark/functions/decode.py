@@ -1,5 +1,5 @@
 """Entity→geometry decode: the reference's 37 converters as ONE
-Arrow-batched mapInPandas stage.
+Arrow-batched mapInArrow stage.
 
 Reference dispatch table: postgis_entity_converter.py:29-70 (`to_db`
 driver :72-110). Each `_cv_*` below reproduces the corresponding
@@ -11,7 +11,7 @@ entity bounding boxes, not exact geometry).
 Spark shape:  documents(doc_id, spans)
   → explode(spans)                      [JVM]
   → filter kind='media'                 [JVM]
-  → mapInPandas(_decode_batches)        [one Arrow-batched Python stage]
+  → mapInArrow(_decode_arrow_batches)   [one Arrow-batched Python stage]
   → entities(doc_id, span_offset, handle, layer, entity_type, name,
              geometry_wkb, geom_type, xmin, ymin, xmax, ymax,
              data_json, media_ref)
@@ -36,7 +36,6 @@ except ImportError:  # pragma: no cover
     _orjson = None
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -513,33 +512,6 @@ ENTITY_SCHEMA_NOREF = T.StructType(
     [f for f in ENTITY_SCHEMA.fields if f.name != "media_ref"])
 
 
-def _decode_batches(batches, emit_media_ref: bool = True):
-    schema = ENTITY_SCHEMA if emit_media_ref else ENTITY_SCHEMA_NOREF
-    cols = [f.name for f in schema.fields]
-    for pdf in batches:
-        n = len(pdf)
-        if n == 0:
-            continue
-        refs = pdf["media_ref"].to_numpy()
-        # one list per output column, appended in lock-step (≈2x faster
-        # than per-row dict scatter at 10^4-row Arrow batches)
-        recs = []
-        append = recs.append
-        loads = _loads
-        for i in range(n):
-            try:
-                payload = loads(refs[i])
-            except (TypeError, ValueError):
-                payload = {"entity_type": "UNKNOWN"}
-            append(_convert_entity_rec(payload))
-        data = dict(zip(_REC_COLS, zip(*recs)))
-        data["doc_id"] = pdf["doc_id"].to_numpy()
-        data["span_offset"] = pdf["offset"].astype("int32").to_numpy()
-        if emit_media_ref:
-            data["media_ref"] = refs
-        yield pd.DataFrame(data, columns=cols)
-
-
 def bytes_string_array(vals: list):
     """Arrow string array from a list of utf-8 bytes objects (None →
     null), assembled via from_buffers (no per-value Python str, no
@@ -567,8 +539,8 @@ def bytes_string_array(vals: list):
 
 
 def _decode_arrow_batches(batches, emit_media_ref: bool = True):
-    """mapInArrow twin of _decode_batches: same per-payload conversion,
-    but rows enter/leave as pyarrow RecordBatches — no pandas block
+    """mapInArrow body: convert_entity's columns for every media span,
+    rows entering and leaving as pyarrow RecordBatches — no pandas block
     construction on either side of the boundary."""
     import pyarrow as pa
 
@@ -619,13 +591,12 @@ def _decode_arrow_batches(batches, emit_media_ref: bool = True):
         yield pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
 
 
-def decode_documents(documents: DataFrame, keep_media_ref: bool = True,
-                     use_arrow: bool = True) -> DataFrame:
+def decode_documents(documents: DataFrame,
+                     keep_media_ref: bool = True) -> DataFrame:
     """documents(doc_id, spans) -> entities DataFrame (see module doc).
 
     The explode + filter stay JVM-side (whole-stage codegen); only the
-    media spans cross into Python, in Arrow batches (mapInArrow by
-    default — the pandas twin is kept for A/B equality testing).
+    media spans cross into Python, in Arrow batches (mapInArrow).
     """
     spans = documents.select(
         "doc_id",
@@ -637,12 +608,8 @@ def decode_documents(documents: DataFrame, keep_media_ref: bool = True,
         F.col("span.kind").alias("kind"),
     ).filter(F.col("kind") == "media").drop("kind")
     schema = ENTITY_SCHEMA if keep_media_ref else ENTITY_SCHEMA_NOREF
-    if use_arrow:
-        return spans.mapInArrow(
-            lambda it: _decode_arrow_batches(it, emit_media_ref=keep_media_ref),
-            schema=schema)
-    return spans.mapInPandas(
-        lambda it: _decode_batches(it, emit_media_ref=keep_media_ref),
+    return spans.mapInArrow(
+        lambda it: _decode_arrow_batches(it, emit_media_ref=keep_media_ref),
         schema=schema)
 
 

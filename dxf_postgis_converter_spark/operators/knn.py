@@ -1,92 +1,80 @@
 """kNN join (J11) — for each probe point, the k nearest target points.
 
-Two strategies implement one contract (output-identical row for row,
-ties broken by (dist, target_id)):
+One algorithm: prove each probe's search radius up front from a
+per-(level, cell) counts pyramid, then run ONE candidate join and one
+rank. There is no driver-side round loop, so the number of Spark jobs
+depends neither on the probe count nor on the targets' density profile.
 
-- "oneshot" — knn_join_oneshot: proves each probe's search radius up
-  front from a per-(level, cell) counts pyramid and runs ONE candidate
-  join. Zero driver rounds, 2 internal barriers — the scale-first
-  formulation (the ladder's per-round barrier floor capped measured
-  N→4N efficiency at ~0.64, BENCH_SCALING_KNN1M.json; the oneshot
-  measures 0.899 at the 5.3M-probe self-join,
-  BENCH_SCALING_KNN5M_ONESHOT.json).
-- "ladder" — the iterative ring-expansion loop below (SURVEY §4.3 "kNN
-  ring expansion loop — driver-side iterative algorithm"), kept as the
-  driver-gated second implementation and for explicitly pinned
-  schedules.
-- "auto" (default) — ONE cheap probe-side count, then dispatch on the
-  measured crossover: the pyramid/selection phase costs a
-  target-proportional floor (~6s at 530k targets on this box) that only
-  pays off once per-probe work dominates, while the ladder's per-round
-  barriers GROW with probe count (fit f: 13.5s→20s→75s at
-  200k→10^6→5.3M probes). Measured walls cross between 10^6 and 5.3M
-  probes (at local[32]: ladder wins 4.4s vs 7.6s at 2k probes, oneshot
-  wins 82.1s vs 100.1s at 5.3M — BENCH_SCALING_KNN5M_X32.json), so
-  auto picks the ladder below auto_oneshot_min probes and the oneshot
-  at or above it. Callers with an expensive probe pipeline should
-  persist it or pin a strategy (the count re-executes the probe plan).
+  1. DENSITY-LOCAL counts pyramid. One aggregate returns the exact
+     per-res-cell target counts; every level ≤ res is rolled up
+     DRIVER-side from them (≤65k dict entries, no Spark job). Each cell
+     gets an even depth d*(n) = even-floor(log4(9n/k)) — the deepest
+     level where its ring-1 neighborhood can still hold k targets
+     (9·n/4^d ≥ k). Targets explode only to levels res+2 ..
+     res+dil2(cell), where dil2 is d* dilated over the Chebyshev-≤2
+     res-neighborhood: flat regions add no rows, typical density 2-3
+     levels, and only a hot sheet pays for the full chain.
+  2. 3×3-neighborhood counts cnt3(L, c) = Σ count over c's ring-1, by
+     exploding each counted cell to its 9 neighbors.
+  3. Level selection: each probe takes the FINEST level L with
+     cnt3(L, ancestor(p, L)) ≥ k, its ancestor chain limited to
+     res+dil1(cell) (Chebyshev-≤1 dilation: a probe's fine ring-1 can
+     only reach one res-neighbor over). Every target in ring-1 of p's
+     cell lies within |Δx|,|Δy| < 2·s_L of p, so the kth-NN distance is
+     ≤ 2√2·s_L — and every point that close lies in ring-3 (7×7 cells)
+     of p's cell. One ring-3 candidate join at L therefore provably
+     contains the true top-k: no count test, no retry round. An
+     undercounted cnt3 (a neighbor cell not exploded that deep) only
+     makes selection coarser, never wrong. The floor level (≤ 1, where
+     ring-1 spans the whole clamped grid) makes selection total whenever
+     n_targets ≥ k; with fewer targets every probe is absent.
+  4. ONE candidate join keyed on the cell id (the level lives in the id's
+     high bits, so a single key joins all levels at once). The probe side
+     explodes ring-3 minus the cells whose closest point to p lies beyond
+     the 2√2·s_L safe radius (most of the 24 outer cells). The target
+     side unions one narrow projection per used level, fine levels
+     filtered to cells with dil2 ≥ L−res — exact, because a probe
+     selecting L has a depth-≥(L−res) cell within Chebyshev 1, and every
+     ring-3 target cell at L is within Chebyshev 2 of that same cell.
+     Then a map-side dist ≤ 2√2·s_L filter, a per-(probe, cell) top-k
+     pre-prune on the coarse branch (caps a dense ring cell — e.g. a
+     10^5-point CAD sheet two cells away — at k rows per probe), and one
+     ranking window.
 
-Ladder algorithm:
+Out-of-extent coordinates (grid.py clamps them to border cells) would
+break every radius proof above, so clamped targets are excluded from the
+count statistics and surface only at the floor level, clamped probes go
+straight to the floor, and the floor is exempt from both distance
+prunes: its completeness comes from whole-grid ring coverage, not from a
+radius.
 
-  round r (r = 1, 2, 4, ... doubling):
-    candidates = unresolved probes ⋈ targets on cell ∈ k_ring(probe_cell, r)
-    a probe is RESOLVED when ≥ k candidates lie within the safe radius
-    r·cell_size (any target outside the ring is farther than that bound,
-    so those k are provably the true nearest)
-  unresolved probes re-enter with doubled r; once the ring covers the whole
-  grid every probe resolves (guaranteed termination when ≥k targets exist).
-
-Skew (the north-star "dense CAD sheet" case): one coarse cell holding
-10^5+ targets makes the candidate join itself quadratic for probes in
-that cell — no post-join pruning can help because the join OUTPUT is the
-cost. The fix is a DENSITY-MAPPED multi-resolution schedule: a one-job
-density probe returns the per-coarse-cell population, each probe starts
-at the level whose cells hold ~k/4 of its own cell's targets (for local
-density ρ the kth-NN sits at r_k ≈ √(k/πρ); the cheapest level that
-proves it in one round has cell size ≈ r_k/2 — i.e. ~2k candidates in
-an r=2 ring whose safe radius 2s covers r_k), and every fine level runs
-a single r=2 round. Stragglers descend the complete even chain toward
-the coarse grid (hole-free: skipping a level joins 16× denser cells),
-where the classic ring doubling finishes. Each round's safe-radius
-proof is independent of resolution and history, so exactness is
-preserved no matter how the schedule is cut.
-
-All candidate generation is JVM column arithmetic (k_ring is sequence/
-transform algebra); join sides are chosen per round from exact
-driver-side counts (broadcast small probe rings / broadcast a ≲1.5M-row
-target table / shuffle at cluster scale), and ranking is one row_number
-window per round — plus a per-(probe, cell) pre-prune only where ring
-cells can be heavy (coarse grid, legacy explicit-fine_res path).
+Everything is JVM column arithmetic. Join sides are picked from exact
+driver-side counts (checkpointed sources defeat Catalyst's estimates):
+broadcast the small exploded probe ring, else the level-exploded target
+union when it fits, else shuffle both on cell. The placement is decided
+per cell from observed density — the adaptive-replication idea of
+*Parallel Spatial Join Processing with Adaptive Replication* (EDBT
+2025) — not from a fixed probe-count threshold.
 """
 
 from __future__ import annotations
 
-import os
-import time
+import math
 from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..index.grid import (
-    EXTENT, cell_col, cell_ix, cell_iy, cell_size, k_ring_col,
-    _IX_SHIFT, _RES_SHIFT,
+    EXTENT, cell_col, cell_ix, cell_iy, k_ring_col, _IX_SHIFT, _RES_SHIFT,
 )
 
-_DEBUG = bool(os.environ.get("SPARK_GRAFT_KNN_DEBUG"))
-# scaling-harness A/B knob: pins every default-strategy knn_join call to
-# "oneshot", "ladder", or "auto" (default — probe-count dispatch, see
-# module doc) without touching call sites
-_DEFAULT_STRATEGY = os.environ.get("SPARK_GRAFT_KNN_STRATEGY", "auto")
-
-# trace of the most recent knn_join's executed rounds as (res, ring_r)
-# tuples — introspection hook for tests/bench asserting the dynamic
-# ladder actually cut rounds; "fallback" marks the crossJoin tail;
-# the one-shot strategy records [("oneshot", sorted(levels_used))]
+# levels the most recent knn_join selected, as [("oneshot", sorted
+# levels)] — an introspection hook for tests
 _LAST_SCHEDULE: list = []
 
 
-def knn_join_oneshot(
+def knn_join(
     probes: DataFrame,
     targets: DataFrame,
     k: int,
@@ -95,112 +83,36 @@ def knn_join_oneshot(
     target_id_col: str = "target_id",
     x_col: str = "x",
     y_col: str = "y",
-    broadcast_limit: int = 1_500_000,
-    cell_prune: bool = True,
 ) -> DataFrame:
-    """Exact kNN join with NO iterative rounds — the scale-first strategy.
+    """-> (probe_id, target_id, dist, rank) with rank in 1..k per probe.
 
-    The ring-expansion ladder (knn_join below, SURVEY §4.3) is exact but
-    pays a driver barrier per round (5-7 rounds at production probe
-    counts), a fixed cost that caps measured N→4N scaling efficiency at
-    ~0.64 on one box even after the round count was minimized
-    (BENCH_SCALING_KNN1M.json). This formulation removes the loop
-    entirely by PROVING each probe's search radius up front from grid
-    statistics:
+    probes: (probe_id, x, y); targets: (target_id, x, y). Ties break by
+    (dist, target_id). res is the level of the exact per-cell target
+    counts the pyramid starts from (module doc). With fewer than k
+    targets in total every probe is absent from the result.
 
-      1. DENSITY-LOCAL counts pyramid. The density probe's exact
-         per-res-cell counts are rolled up DRIVER-side for every level
-         ≤ res (≤65k dict entries — no Spark job at all below res), and
-         each cell gets an even depth d*(n) = even-floor(log4(9n/k)) —
-         the deepest level where its ring-1 neighborhood can still hold
-         k targets (9·n/4^d ≥ k). Targets explode ONLY to levels
-         res+2 .. res+dil2(cell), where dil2 is d* dilated over the
-         Chebyshev-≤2 res-neighborhood. The first cut of this strategy
-         exploded every target to every chain level globally (8 levels
-         × 5.3M targets + a ×9 neighbor explode ≈ 160M aggregated rows)
-         and the stats phase alone cost 48s at local[8]/10^6 probes;
-         density-local explosion does the same proof work on the ~2-3
-         levels each neighborhood actually needs;
-      2. 3×3-neighborhood counts cnt3(L, c) = Σ count over c's ring-1,
-         by exploding each counted cell (fine Spark rows ∪ the
-         driver-built sub-res rows) to its 9 neighbors;
-      3. level selection: each probe takes the FINEST level L with
-         cnt3(L, ancestor(p, L)) ≥ k, its ancestor chain limited to
-         res+dil1(cell) (Chebyshev-≤1 dilation — a probe's fine ring-1
-         can only reach one res-neighbor over). Every target in ring-1
-         of p's cell lies within |Δx|,|Δy| < 2·s_L of p, so the kth-NN
-         distance is ≤ 2√2·s_L — and every point that close lies in
-         ring-3 (7×7 cells) of p's cell. One ring-3 candidate join at
-         L therefore provably contains the true top-k: no count test,
-         no retry round. Undercounted cnt3 (a neighbor cell not
-         exploded that deep) only makes selection coarser — never
-         wrong. The sub-res floor (level ≤ 1, where ring-1 spans the
-         whole clamped grid) makes selection total whenever n_targets
-         ≥ k; probes stay absent otherwise (sub-k contract, same as
-         the ladder);
-      4. ONE candidate join keyed on the cell id (level lives in the id's
-         high bits, so a single key joins all levels at once). The
-         probe side explodes ring-3 minus an exact geometric prune
-         (a ring cell whose closest point to p exceeds the 2√2·s_L
-         safe radius — most of the 24 outer cells — cannot contribute;
-         ~35% fewer join rows). The target side unions one narrow
-         projection per used level, fine levels filtered to cells with
-         dil2 ≥ L−res — exact, because a probe selecting L has a
-         depth-≥(L−res) cell within Chebyshev 1, and every ring-3
-         target cell at L is within Chebyshev 2 of that same cell. A
-         map-side dist ≤ 2√2·s_L prefilter, an optional per-(probe,
-         cell) top-k pre-prune (skew defense: caps any one dense ring
-         cell — e.g. a 10^5-point CAD sheet 2 cells away — at k rows
-         per probe before the global sort), then one ranking window.
-
-    Out-of-extent coordinates (grid.py clamps them to border cells)
-    would break every radius proof above, so they are handled by
-    construction: clamped targets are excluded from all count
-    statistics and surface only at the FLOOR level; clamped probes are
-    routed straight to the floor; and the floor — where ring-3 covers
-    the whole clamped grid — is exempt from both distance prunes, so
-    its completeness argument is coverage, not radius (the ladder's
-    full-ring round plays the same role).
-
-    Spark shape: 2 internal barriers (target count; level-selection
-    materialization) + the caller's action — versus 5-7 sequential
-    rounds each with its own barrier and broadcast build. Everything is
-    JVM column arithmetic; join sides are size-picked from exact
-    driver-side counts (broadcast the small exploded probe ring /
-    broadcast the filtered target union when it fits broadcast_limit /
-    else shuffle on cell — the standard path at cluster scale).
-
-    Ties break by (dist, target_id) — identical to the ladder, so the
-    two strategies are output-equal row for row.
+    Spark shape: 2 internal barriers (the target count; the
+    level-selection materialization) plus the eager checkpoint of the
+    result, whatever the input's size or density.
     """
-    import math
-
     spark = probes.sparkSession
     t = targets.select(
         F.col(target_id_col),
         F.col(x_col).alias("t_x"),
         F.col(y_col).alias("t_y"),
     ).persist()
-    # density probe (ONE action — materializes the cache too, exactly as
-    # the ladder's): exact per-res-cell counts. Everything scheduled from
-    # here is driver arithmetic over ≤4^res dict entries — at cluster
-    # scale this is the query you'd answer from catalog statistics.
-    t0 = time.time() if _DEBUG else 0.0
-    # cell assignment CLAMPS out-of-extent coordinates to border cells
-    # (grid.py keeps the algebra total), which would break every radius
-    # proof below — a clamped target counts toward a border cell but can
-    # be arbitrarily far from it. Split the counts: only in-extent
-    # targets feed the pyramid/selection statistics; out-of-extent ones
-    # ride the FLOOR level, where completeness comes from whole-grid
-    # ring coverage, not from a radius (same role as the ladder's
-    # full-ring round).
+    # density probe (ONE action, which also materializes the cache):
+    # exact per-res-cell counts. Everything scheduled from here is driver
+    # arithmetic over ≤4^res dict entries — at cluster scale this is the
+    # query you'd answer from catalog statistics. Counts are split by
+    # in-extent: a clamped target counts toward a border cell but can be
+    # arbitrarily far from it, so only in-extent targets feed the
+    # pyramid; out-of-extent ones ride the floor level.
     in_t = ((F.col("t_x") >= 0) & (F.col("t_x") < F.lit(EXTENT))
             & (F.col("t_y") >= 0) & (F.col("t_y") < F.lit(EXTENT)))
     counts0 = (t.groupBy(cell_col(F.col("t_x"), F.col("t_y"), res).alias("c"),
                          in_t.alias("i"))
                .agg(F.count(F.lit(1)).alias("n")).collect())
-    if _DEBUG:
-        print(f"[knn1s] density probe wall={time.time() - t0:.2f}s", flush=True)
     n_targets = sum(r["n"] for r in counts0)
     global _LAST_SCHEDULE
     if n_targets < k:
@@ -232,8 +144,7 @@ def knn_join_oneshot(
     # ≤ one res-neighbor over (3·s_L < s_res for L ≥ res+2) → dil1 for
     # the probe ancestor chain; a ring-3 candidate cell sits ≤ Chebyshev
     # 2 from the depth-carrying cell that justified the probe's level →
-    # dil2 for the target explode + candidate union (the exactness
-    # argument in the docstring).
+    # dil2 for the target explode + candidate union (module doc, step 4).
     _m = (1 << (_RES_SHIFT - _IX_SHIFT)) - 1
     hi_ix = (1 << res) - 1
     dil1: dict = {}
@@ -259,11 +170,9 @@ def knn_join_oneshot(
     max_fine = max(dil2.values(), default=0)
     fine_levels = list(range(res + 2, res + max_fine + 1, 2))
 
-    # sub-res pyramid + its floor rolled up DRIVER-side from the exact
-    # density probe (the first cut exploded 5.3M targets × 4 sub-res
-    # levels through a Spark aggregation to recompute numbers this dict
-    # roll-up derives in microseconds). Floor level ≤ 1: ring-1 covers
-    # the whole clamped grid, so cnt3 = n_targets ≥ k — selection total.
+    # sub-res pyramid + its floor, rolled up driver-side from the exact
+    # density probe. Floor level ≤ 1: ring-1 covers the whole clamped
+    # grid, so cnt3 = n_targets ≥ k — selection is total.
     sub_levels = list(range(res, -1, -2))
     lvl_counts = {res: {}}
     for c, n in cells.items():
@@ -286,9 +195,7 @@ def knn_join_oneshot(
     sub_df = spark.createDataFrame(sub_rows, "cell long, n long")
 
     # 1. fine counts pyramid, density-local: each target explodes only to
-    #    the levels its dilated res-neighborhood can select (zero rows in
-    #    flat regions, 2-3 levels at typical density, the full chain only
-    #    under the hot sheet).
+    #    the levels its dilated res-neighborhood can select
     depth_rows = sorted(set(dil1) | set(dil2))
     depth_df = spark.createDataFrame(
         [(c, dil1.get(c, 0), dil2.get(c, 0)) for c in depth_rows],
@@ -323,13 +230,11 @@ def knn_join_oneshot(
         F.col(x_col).alias("p_x"),
         F.col(y_col).alias("p_y"),
     )
-    t0 = time.time() if _DEBUG else 0.0
     par = spark.sparkContext.defaultParallelism
     if p0.rdd.getNumPartitions() < par:
-        # a LIMIT upstream leaves ONE partition — same guard as the ladder
+        # a LIMIT upstream leaves ONE partition, which would serialize the
+        # ancestor/ring explode into a single task
         p0 = p0.repartition(par * 4)
-    if _DEBUG:
-        print(f"[knn1s] p0.rdd probe wall={time.time() - t0:.2f}s", flush=True)
     # ancestor-chain cells: every sub-res level (selection floor) plus
     # the fine levels the probe's dilated res-neighborhood can justify
     sub_arr = F.array(*[cell_col(F.col("p_x"), F.col("p_y"), L)
@@ -358,11 +263,9 @@ def knn_join_oneshot(
         F.array(cell_col(F.col("p_x"), F.col("p_y"), floor_lvl)))
     anc = p1.select(
         probe_id_col, "p_x", "p_y", F.explode(anc_cells).alias("cell"))
-    # lazy checkpoint + the distinct-levels collect as its materializing
-    # action (same single-barrier trick as the ladder's round state):
+    # lazy checkpoint + the per-level count as its materializing action:
     # one job computes the counts pyramid + selection, truncates their
     # lineage, and returns the level set the join below needs
-    t0 = time.time() if _DEBUG else 0.0
     sel = (anc.join(cnt3, "cell", "inner")
            .filter(F.col("n3") >= k)
            .groupBy(probe_id_col, "p_x", "p_y")
@@ -375,18 +278,10 @@ def knn_join_oneshot(
            # enough for every core to get several waves
            .repartition(par * 4)
            .localCheckpoint(eager=False))
-    if _DEBUG:
-        print(f"[knn1s] sel plan build wall={time.time() - t0:.2f}s", flush=True)
-    t0 = time.time() if _DEBUG else 0.0
     by_lvl = {r["lvl"]: r["n"] for r in
               sel.groupBy("lvl").agg(F.count(F.lit(1)).alias("n")).collect()}
     used = sorted(by_lvl)
-    n_sel = sum(by_lvl.values())
     _LAST_SCHEDULE = [("oneshot", used)]
-    if _DEBUG:
-        print(f"[knn1s] selection wall={time.time() - t0:.2f}s "
-              f"fine={fine_levels} sub={sub_levels} by_lvl={by_lvl}",
-              flush=True)
     if not used:  # pragma: no cover — unreachable once n_targets ≥ k
         t.unpersist()
         return spark.createDataFrame(
@@ -395,11 +290,10 @@ def knn_join_oneshot(
 
     # 4. single candidate join: probe ring-3 cells vs targets keyed at
     #    each USED level (union of narrow per-level projections of the
-    #    cached table — one broadcast build total, not one per round).
-    #    Fine branches keep only targets whose dilated res-neighborhood
-    #    justifies that level (exact — see docstring; the driver knows
-    #    each branch's row count EXACTLY from the density probe, so the
-    #    join-side decision needs no Catalyst estimate).
+    #    cached table — one broadcast build in total). Fine branches keep
+    #    only targets whose dilated res-neighborhood justifies that level;
+    #    the driver knows each branch's row count exactly from the
+    #    density probe, so the join-side decision needs no estimate.
     s_lvl = F.lit(EXTENT) / F.pow(F.lit(2.0), F.col("lvl").cast("double"))
     # kth-NN dist is ≤ 2√2·s_L by the selection proof; the tiny relative
     # margin only guards FP noise in the distance evaluation
@@ -410,9 +304,8 @@ def knn_join_oneshot(
         levels_part. Splitting fine (> res) from coarse (≤ res) keeps the
         per-(probe, cell) skew prune OFF the fine branch — at a selected
         fine level every ring cell holds ~k/9 targets by construction,
-        so the prune's extra full shuffle+sort of the candidate set
-        removes ~nothing (the ladder measured the same); the coarse
-        branch (hot cells can hold 10^5+ targets) keeps it."""
+        so the prune's extra shuffle+sort would remove ~nothing; the
+        coarse branch (hot cells can hold 10^5+ targets) keeps it."""
         n_part = sum(by_lvl.get(L, 0) for L in levels_part)
         if n_part == 0:
             return None
@@ -454,23 +347,21 @@ def knn_join_oneshot(
         at_floor = F.col("lvl") == F.lit(floor_lvl)
         ring = ring.filter(
             at_floor | (gap_x * gap_x + gap_y * gap_y <= safe * safe))
-        # join-side pick from exact driver-side counts (checkpointed
-        # sources defeat Catalyst's estimates — same rationale as the
-        # ladder's): broadcast the exploded probe ring when small
-        # (streams the cached target branches map-side with no shuffle
-        # at all), else broadcast the level-exploded target side when it
-        # fits, else shuffle both on cell — the standard path at
-        # cluster scale.
+        # join side from exact driver-side counts: broadcast the exploded
+        # probe ring when small (streams the cached target branches
+        # map-side with no shuffle at all), else broadcast the
+        # level-exploded target side when it fits (≲50 MB keyed), else
+        # shuffle both on cell — the standard path at cluster scale
         if n_part * 49 <= 400_000:
             ring = F.broadcast(ring)
-        elif est_texp <= broadcast_limit:
+        elif est_texp <= 1_500_000:
             t_exp = F.broadcast(t_exp)
         cand = (ring.join(t_exp, "cell", "inner")
                 .withColumn("dist", F.sqrt(
                     (F.col("p_x") - F.col("t_x")) ** 2
                     + (F.col("p_y") - F.col("t_y")) ** 2))
                 .filter(at_floor | (F.col("dist") <= safe)))
-        if cell_prune and coarse:
+        if coarse:
             w_cell = Window.partitionBy(probe_id_col, "cell") \
                 .orderBy(F.col("dist"), F.col(target_id_col))
             cand = cand.withColumn("_cr", F.row_number().over(w_cell)) \
@@ -482,518 +373,13 @@ def knn_join_oneshot(
              if b is not None]
     cand = reduce(DataFrame.unionByName, parts)
     w = Window.partitionBy(probe_id_col).orderBy(F.col("dist"), F.col(target_id_col))
-    t0 = time.time() if _DEBUG else 0.0
     out = (cand.withColumn("rank", F.row_number().over(w))
            .filter(F.col("rank") <= k)
            .select(probe_id_col, target_id_col, "dist", "rank")
            .localCheckpoint())
-    if _DEBUG:
-        print(f"[knn1s] candidate join wall={time.time() - t0:.2f}s "
-              f"n_sel={n_sel} used={used}", flush=True)
-    # the EAGER checkpoint is the strategy's one heavy job; with the
-    # result materialized and its lineage truncated, the target cache
-    # has no remaining consumer (sel's checkpoint blocks are freed when
-    # the DataFrame is garbage-collected)
+    # the EAGER checkpoint is the join's one heavy job; with the result
+    # materialized and its lineage truncated, the target cache has no
+    # remaining consumer (sel's checkpoint blocks are freed when the
+    # DataFrame is garbage-collected)
     t.unpersist()
     return out
-
-
-def knn_join(
-    probes: DataFrame,
-    targets: DataFrame,
-    k: int,
-    res: int = 8,
-    probe_id_col: str = "probe_id",
-    target_id_col: str = "target_id",
-    x_col: str = "x",
-    y_col: str = "y",
-    max_rounds: int = 24,
-    fine_res: int | None | str = "auto",
-    hot_cell_threshold: int = 75_000,
-    strategy: str | None = None,
-    auto_oneshot_min: int = 2_000_000,
-    n_probes_hint: int | None = None,
-) -> DataFrame:
-    """-> (probe_id, target_id, dist, rank) with rank in 1..k per probe.
-
-    probes: (probe_id, x, y); targets: (target_id, x, y). Ties broken by
-    target_id for determinism.
-
-    strategy="oneshot" runs the non-iterative formulation
-    (knn_join_oneshot above — provable per-probe search radius from grid
-    statistics, zero driver rounds); it is output-identical to the
-    ladder. strategy="ladder", or an explicit integer/None fine_res,
-    runs the iterative ring-expansion ladder documented below — kept
-    both as the driver-gated second implementation of the same contract
-    and for schedules the tests pin explicitly. strategy="auto" (the
-    default) counts the probe side once and picks the ladder below
-    auto_oneshot_min probes, the oneshot at or above it — the measured
-    crossover regime (module doc); the decision is recorded as a
-    leading ("auto", [n_probes]) entry in _LAST_SCHEDULE.
-
-    Ladder: the default fine_res="auto" measures the
-    per-coarse-cell target population (one hash-aggregate that also
-    materializes the target cache) and, when the hottest cell exceeds
-    hot_cell_threshold, schedules each probe from the level its OWN
-    cell's density asks for (see module doc) — fine rounds cost fixed
-    per-round overhead, which only pays once a hot cell would otherwise
-    flood the candidate join. Measured at 200k probes vs a 130k-point
-    sheet (sf0.4, local[8]): 25.8s density-mapped vs 166s for a naive
-    fine→coarse jump; fit fixed cost 13.5s vs 26.9s for the r4
-    whole-cohort ladder. An explicit integer fine_res (legacy path)
-    instead runs every probe through r=1,2 rounds at every even level
-    from fine_res down to res."""
-    global _LAST_SCHEDULE
-    if strategy is None:
-        strategy = _DEFAULT_STRATEGY
-    if strategy == "auto":
-        if fine_res != "auto":
-            strategy = "ladder"  # an explicitly pinned schedule IS the ladder
-        else:
-            # one cheap action (narrow scan + count, no shuffle) buys the
-            # regime dispatch — see module doc for the measured crossover.
-            # A caller that already knows the probe count passes
-            # n_probes_hint and the action is skipped entirely (VERDICT
-            # r6 item 7: at 100 TB that count is a full probe-table scan)
-            n_probes_auto = (int(n_probes_hint) if n_probes_hint is not None
-                             else probes.count())
-            strategy = ("oneshot" if n_probes_auto >= auto_oneshot_min
-                        else "ladder")
-            # forward the measured count: the ladder's FIRST round has no
-            # by-depth state yet, and without a probe count it defaulted
-            # to broadcasting the (much larger) target side — a ~1M-row
-            # broadcast build per call that the 2k-probe bench path paid
-            # for nothing (guide §3.1: broadcast the side that is small)
-            out = knn_join(
-                probes, targets, k, res=res, probe_id_col=probe_id_col,
-                target_id_col=target_id_col, x_col=x_col, y_col=y_col,
-                max_rounds=max_rounds, fine_res=fine_res,
-                hot_cell_threshold=hot_cell_threshold, strategy=strategy,
-                n_probes_hint=n_probes_auto)
-            _LAST_SCHEDULE.insert(0, ("auto", [n_probes_auto]))
-            return out
-    if strategy == "oneshot":
-        if fine_res != "auto":
-            # silently running the ladder here would hand back a
-            # different physical strategy than the caller named
-            raise ValueError(
-                "strategy='oneshot' has no fine_res schedule — leave "
-                "fine_res='auto' (default) or use strategy='ladder'")
-        return knn_join_oneshot(
-            probes, targets, k, res=res, probe_id_col=probe_id_col,
-            target_id_col=target_id_col, x_col=x_col, y_col=y_col)
-    auto = fine_res == "auto"
-    n_targets = None  # known after the auto density probe
-    # deepest even offset the grid supports (res 16 is the global cap);
-    # the auto depth below clamps to this SAME bound, so the ladder can
-    # always reach the depth the density estimate asks for (ADVICE r4:
-    # offsets hard-coded to ≤8 silently topped the ladder out at res+8
-    # while the densest-descendant estimate assumed deeper cells)
-    max_depth = ((16 - res) // 2) * 2
-    if auto:
-        # candidate even-offset levels, decided AFTER the density probe —
-        # precomputing their (cheap, 8-byte) cell columns lets the probe
-        # run on the persisted cache instead of as a second full scan of
-        # the target table (scan-bound I/O was ~1/3 of the fit's fixed
-        # cost at 200k probes/local[2])
-        cand_levels = sorted({res + o for o in range(2, max_depth + 1, 2)},
-                             reverse=True)
-    elif fine_res:
-        cand_levels = []
-        L = fine_res
-        while L > res:
-            cand_levels.append(L)
-            L -= 2
-    else:
-        cand_levels = []
-    t = targets.select(
-        F.col(target_id_col),
-        F.col(x_col).alias("t_x"),
-        F.col(y_col).alias("t_y"),
-        cell_col(F.col(x_col), F.col(y_col), res).alias(f"cell_{res}"),
-        *[cell_col(F.col(x_col), F.col(y_col), ri).alias(f"cell_{ri}")
-          for ri in cand_levels],
-    ).persist()
-    spark = probes.sparkSession
-    depth_df = None
-    if auto:
-        t_probe = time.time() if _DEBUG else 0.0
-        # ONE action: materializes the target cache AND returns the
-        # per-coarse-cell population (at cluster scale this collect is
-        # the query you'd answer from catalog column statistics / a
-        # maintained stats table; ≤4^res rows, ≤65k at the res-8 cap)
-        counts = (t.groupBy(F.col(f"cell_{res}").alias("c"))
-                  .agg(F.count(F.lit(1)).alias("n")).collect())
-        hottest = max((r["n"] for r in counts), default=0)
-        n_targets = sum(r["n"] for r in counts)
-        if hottest > hot_cell_threshold:
-            # Per-probe starting resolution (VERDICT r4 item 1): split a
-            # cell until its densest descendant holds a few dozen targets
-            # (each +1 res divides per-cell population ~4x) — but assign
-            # that depth PER COARSE CELL from its own population instead
-            # of starting every probe at the globally-hottest depth. The
-            # old global schedule pushed all 200k bench probes through
-            # res+6 rounds that only the ~5% inside the dense sheet
-            # needed (8.7s round-1 wall at local[8]); with local depths,
-            # each fine round joins only the probes whose neighborhood
-            # density asks for it. Exactness is per-round (safe-radius
-            # proof), so where a probe STARTS is pure scheduling.
-            import math
-            # Target per-cell occupancy ≈ k/4, NOT dozens: for a probe in
-            # density ρ the kth-NN sits at r_k ≈ sqrt(k/πρ), and the
-            # cheapest level that proves it in one r=2 round has cell
-            # size s ≈ r_k/2 — i.e. ρs² = k/4π ≈ k/12 targets per cell,
-            # giving ~2k ring candidates (just enough to pass the count
-            # test, nothing more to sort). The old max(32, 4k) target
-            # made every level ~2 steps too coarse: the uniform-density
-            # bench cohort joined 56 candidates/probe at its assigned
-            # level (10M-row round, 15-19s) where the k/4 target joins
-            # ~4/probe and resolves in the same two rounds.
-            target_cell = max(1.0, k / 4.0)
-
-            def depth_of(n):
-                if n <= target_cell:
-                    return 0
-                d = math.ceil(math.log(n / target_cell, 4))
-                d += d % 2  # even offsets match the precomputed cells
-                if d > max_depth and _DEBUG:
-                    # grid cap reached: the densest fine cell will hold
-                    # ~4^(d-max_depth)× more targets than the k/4 design
-                    # point — say so instead of silently degrading
-                    print(f"[knn] depth {d} clamped to {max_depth} "
-                          f"(res {res}+{max_depth} is the finest grid)",
-                          flush=True)
-                return min(d, max_depth)
-
-            # depth is each probe's STARTING level, so it must come from
-            # the probe's OWN cell density — no dilation: a neighbor of a
-            # dense cell gains nothing from starting deep (its own kth-NN
-            # distance is set by its own density, so fine rounds cannot
-            # resolve it), and at its proper level the dense neighbor
-            # contributes at most ring_cells × that level's (much
-            # smaller) per-cell population — bounded, and measured small.
-            all_depths = ((r0["c"], depth_of(r0["n"])) for r0 in counts)
-            depth_map = {c: d for c, d in all_depths if d > 0}
-            fine_res = res + max(depth_map.values(), default=0)
-            depth_df = spark.createDataFrame(
-                [(c, d) for c, d in depth_map.items()],
-                "p_coarse long, p_depth int")
-        else:
-            fine_res = None
-        if _DEBUG:
-            print(f"[knn] density probe wall={time.time() - t_probe:.2f}s "
-                  f"hottest={hottest} fine_res={fine_res} "
-                  f"deep_cells={len(depth_map) if fine_res else 0}",
-                  flush=True)
-
-    p0 = probes.select(
-        F.col(probe_id_col),
-        F.col(x_col).alias("p_x"),
-        F.col(y_col).alias("p_y"),
-    )
-    # A probe side arriving in fewer partitions than cores serializes
-    # round 1's cell/ring-explode work into those few tasks — a LIMIT
-    # upstream (GlobalLimit → ONE partition) made the whole probe prep
-    # single-threaded, which measured as a per-probe cost that scaled
-    # with input but not with cores (f 6.5s→11.7s going 100k→200k
-    # probes, capping 2→8 efficiency at ~0.76). One narrow shuffle of
-    # the small probe table restores per-core balance — UNLESS the
-    # dispatch count already proves the exploded ring will be broadcast
-    # (round 1 builds it in one tiny task either way), where the
-    # repartition is a pure extra shuffle + a wide no-op job per call.
-    par = spark.sparkContext.defaultParallelism
-    ring_broadcastable = (n_probes_hint is not None
-                          and int(n_probes_hint) * 9 <= 400_000)
-    if not ring_broadcastable and p0.rdd.getNumPartitions() < par:
-        p0 = p0.repartition(par * 4)  # 4 task waves smooth stragglers
-    if depth_df is not None:
-        p1 = (p0.withColumn("_pc", cell_col(F.col("p_x"), F.col("p_y"), res))
-              .join(F.broadcast(depth_df), F.col("_pc") == F.col("p_coarse"),
-                    "left")
-              .withColumn("p_depth", F.coalesce(F.col("p_depth"), F.lit(0)))
-              .drop("_pc", "p_coarse"))
-        # cell columns for the whole chain the CELL depths could ask for
-        # (known driver-side, so the probe cache can be built and
-        # persisted before any probe-side job runs)
-        chain = [res + o for o in
-                 range(max(depth_map.values(), default=0), 0, -2)] + [res]
-    else:
-        # explicit fine_res (or no ladder): every probe runs every level
-        p1 = p0.withColumn("p_depth", F.lit(127))
-        chain = sorted({res} | {L for L in cand_levels
-                                if fine_res and L <= fine_res}, reverse=True)
-    unresolved = unresolved0 = p1.select(
-        "*",
-        *[cell_col(F.col("p_x"), F.col("p_y"), ri).alias(f"p_cell_{ri}") for ri in chain],
-    ).persist()
-    if depth_df is not None:
-        # ONE job: materializes the probe cache AND seeds the by-depth
-        # counts the schedule + broadcast decisions need before round 1.
-        # Scheduled levels = the COMPLETE even chain below the deepest
-        # depth any PROBE carries. The chain must not have holes: a
-        # dense-sheet straggler descending 13→9 directly joins its ring
-        # against res-9 sheet cells holding ~4^2× more targets than its
-        # own-depth cells — measured as a 19s round at 200k probes when
-        # levels came from the depths PRESENT ({13,9}) instead of the
-        # chain {13,11,9}.
-        unres_by_depth = {r["p_depth"]: r["n"] for r in
-                          unresolved0.groupBy("p_depth")
-                          .agg(F.count(F.lit(1)).alias("n")).collect()}
-        max_pd = max((d for d in unres_by_depth if d), default=0)
-        levels = [res + o for o in range(max_pd, 0, -2)] + [res]
-    else:
-        levels = chain
-        unres_by_depth = {}  # unknown until the first round's state count
-
-    results = None
-    # beyond this ring radius the (2r+1)^2 cell explosion costs more than
-    # just scanning all targets for the (by then few) unresolved probes —
-    # the fallback is exact and bounds the worst case on sparse targets
-    max_ring = 32
-    rounds = 0
-    # Dynamic ladder schedule (VERDICT r4 item 1a): with per-probe
-    # depths each fine level runs ONE round at r=2 — the level was
-    # chosen so the r=2 ring holds ~2k candidates AND its safe radius
-    # 2·cell_size covers the kth-NN distance the local density implies,
-    # so an extra r=1 pass at 9/25 of the candidates would just double
-    # the round count (the ~1.4s/round job-scheduling floor was half the
-    # 200k-probe wall). Descent lands on the next level with a live
-    # audience (exact by-depth counts come back with every round's state
-    # count). On the explicit-fine_res path (no depth map: every probe
-    # attends every level) the legacy r=1,2-per-level schedule with the
-    # <1%-resolved skip applies instead. Exactness is untouched: every
-    # round's safe-radius proof is independent of which rounds ran
-    # before it.
-    level_idx = 0
-    r = 2 if depth_df is not None and levels[0] != res else 1
-    level_entering = None  # probe count entering the current level
-    level_done = 0         # probes resolved so far within the level
-    min_level_frac = 0.01
-
-    def active_at(offset: int) -> int:
-        return sum(n for d, n in unres_by_depth.items() if d >= offset)
-    _LAST_SCHEDULE = sched = []
-    while rounds < max_rounds:
-        res_i = levels[level_idx]
-        rounds += 1
-        sched.append((res_i, r))
-        size_i = cell_size(res_i)
-        grid_n = 1 << res_i
-        if res_i == res and r > max_ring and r < grid_n:
-            sched[-1] = ("fallback", r)
-            w = Window.partitionBy(probe_id_col).orderBy(F.col("dist"), F.col(target_id_col))
-            rest = (
-                unresolved.crossJoin(t.select(target_id_col, "t_x", "t_y"))
-                .withColumn("dist", F.sqrt((F.col("p_x") - F.col("t_x")) ** 2
-                                           + (F.col("p_y") - F.col("t_y")) ** 2))
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select(probe_id_col, target_id_col, "dist", "rank")
-            )
-            # keep the sub-k-targets contract: such probes stay absent
-            full = rest.groupBy(probe_id_col).count().filter(F.col("count") == k) \
-                .select(probe_id_col)
-            # materialize (≤k rows per unresolved probe) so the target
-            # cache has no lazy consumer left and can be dropped below —
-            # repeated fallback-path calls in a long session leaked t
-            # and unresolved0 otherwise (ADVICE r3)
-            rest = rest.join(full, probe_id_col, "left_semi").localCheckpoint()
-            results = rest if results is None else results.unionByName(rest)
-            break
-        # at a fine level only the probes whose local density asked for
-        # that depth participate; the rest ride along unresolved (they
-        # are filtered out BEFORE the ring explode, so an idle probe
-        # costs nothing this round)
-        active = unresolved if res_i == res else \
-            unresolved.filter(F.col("p_depth") >= res_i - res)
-        exploded = active.withColumn(
-            "cell", F.explode(k_ring_col(F.col(f"p_cell_{res_i}"), r)))
-        # Broadcast the exploded probe side when the by-depth counts say
-        # it is small: a shuffled join re-partitions the WHOLE target
-        # cache by this round's cell column every round (~50 MB at 850k
-        # targets — a per-round cost independent of how few probes are
-        # left), while a broadcast join streams the cached target
-        # partitions in place. Checkpointed sources defeat Catalyst's
-        # size estimate, so the driver-side counts make the call.
-        est_rows = (active_at(res_i - res) if res_i != res
-                    else sum(unres_by_depth.values())
-                    or (int(n_probes_hint) if n_probes_hint is not None
-                        else 0)) * (2 * r + 1) ** 2
-        t_side = t.select(target_id_col, "t_x", "t_y",
-                          F.col(f"cell_{res_i}").alias("cell"))
-        if est_rows > 0 and est_rows <= 400_000:
-            # known-small probe ring (by-depth state counts, or the auto
-            # dispatch's probe count on the first round): broadcast it
-            exploded = F.broadcast(exploded)
-        elif ring_broadcastable and active.rdd.getNumPartitions() < par:
-            # the initial repartition was skipped on the broadcast-ring
-            # promise; a later ring escalation outgrew it — restore the
-            # per-core balance before the wide explode (rare tail path)
-            exploded = active.repartition(par * 4).withColumn(
-                "cell", F.explode(k_ring_col(F.col(f"p_cell_{res_i}"), r)))
-        elif n_targets is not None and n_targets <= 1_500_000:
-            # neither side shuffles: a ~1M-target table is ≲50 MB keyed
-            # (id, x, y, cell) — broadcasting it streams the big probe
-            # side map-side, and only the join OUTPUT reaches the top-k
-            # window's shuffle. (Measured at 10^6 probes: routing the
-            # mid-size 400k..4M-row probe sides through the shuffled
-            # path instead was WORSE at both parallelism levels — T2
-            # 128.8→133.1s, T8 49.7→53.5s — the per-round broadcast
-            # build is ~2s of driver time but the shuffles it avoids
-            # cost more at every level.) At cluster scale a billion-row
-            # target table fails this test and takes the shuffled path —
-            # the standard Spark size-based join strategy, decided from
-            # the density probe's exact count instead of Catalyst's
-            # estimate (checkpointed sources defeat it).
-            t_side = F.broadcast(t_side)
-        cand = (
-            exploded
-            .join(t_side, "cell", "inner")
-            .withColumn(
-                "dist",
-                F.sqrt((F.col("p_x") - F.col("t_x")) ** 2 + (F.col("p_y") - F.col("t_y")) ** 2),
-            )
-            # same target can surface via several ring cells only at the
-            # clipped border — k_ring dedups, so pairs are unique
-        )
-        safe = float(r) * size_i
-        full_ring = r >= grid_n  # ring covers the whole grid: all exact
-        if not full_ring:
-            # candidates beyond the safe radius can NEVER be in a
-            # resolved probe's answer (resolution requires kth_dist ≤
-            # safe, and every point within safe lies inside the ring), so
-            # dropping them before the ranking window is exact and cuts
-            # its shuffle+sort input ~40% (an r=2 ring spans ~2.8·s at
-            # the corners vs the 2·s safe circle). An unresolved probe's
-            # surviving candidates are discarded either way — the next
-            # round rebuilds from scratch. Full-ring rounds resolve on
-            # count alone and must keep everything.
-            cand = cand.filter(F.col("dist") <= safe)
-        # two-level top-k: prune to the k nearest per (probe, cell) first —
-        # the global top-k is a subset of the per-cell top-ks, and the
-        # count test below survives (sum(min(c_i, k)) >= k iff sum(c_i)
-        # >= k). This moves the big sort into finer, skew-free
-        # (probe, cell) partitions and caps the final window input. It
-        # earns its extra shuffle only where a ring cell can be heavy —
-        # the coarse grid (a hot cell holds 10^5+ targets) and the legacy
-        # whole-cohort ladder; at a depth-scheduled fine level every ring
-        # cell holds ~k/4 targets by construction, so the prune would
-        # shuffle the full candidate set once more to remove ~nothing.
-        if depth_df is None or res_i == res:
-            w_cell = Window.partitionBy(probe_id_col, "cell") \
-                .orderBy(F.col("dist"), F.col(target_id_col))
-            cand = cand.withColumn("_cr", F.row_number().over(w_cell)) \
-                .filter(F.col("_cr") <= k).drop("_cr")
-        w = Window.partitionBy(probe_id_col).orderBy(F.col("dist"), F.col(target_id_col))
-        # `ranked` is the shared parent of done rows, done_ids and the
-        # next round's unresolved set; the done checkpoint below is the
-        # round's heavy materialization and pulls it through the cache.
-        ranked = cand.withColumn("rank", F.row_number().over(w)) \
-            .filter(F.col("rank") <= k).persist()
-        per_probe = ranked.groupBy(probe_id_col).agg(
-            F.count("*").alias("n_cand"), F.max("dist").alias("kth_dist"))
-        done_ids = per_probe.filter(
-            (F.col("n_cand") >= k) & ((F.col("kth_dist") <= safe) | F.lit(full_ring))
-        ).select(probe_id_col)
-        # p_depth rides along on done rows so the state count below can
-        # report the remaining probes PER DEPTH — the schedule needs
-        # active_at(level) to skip rounds nobody attends
-        done = ranked.join(done_ids, probe_id_col, "left_semi") \
-            .select(probe_id_col, target_id_col, "dist", "rank", "p_depth")
-        if res_i == res and full_ring:
-            # last possible round: no next unresolved set to carry —
-            # materialize the done rows alone
-            results_round = done.drop("p_depth").localCheckpoint()
-            results = results_round if results is None \
-                else results.unionByName(results_round)
-            ranked.unpersist()
-            break
-        # ONE materialization per round (VERDICT r3 item 6: the former
-        # done/unresolved checkpoint PAIR was ~0.3-0.6s/round of pure
-        # barrier cost): a single tagged union carries both this round's
-        # done rows (_st=1) and the next round's unresolved probes
-        # (_st=0); the local checkpoint also truncates lineage — without
-        # it the analyzed plan tree doubles per round and OOMs the driver
-        # after ~7 rounds (same pattern as components.py). The checkpoint
-        # is LAZY and the counting aggregate below is the round's single
-        # materializing action (VERDICT r4 item 1b: the former eager
-        # checkpoint + isEmpty pair was one extra job of barrier cost per
-        # round) — it persists the state RDD and returns the done /
-        # unresolved counts that drive both the termination test and the
-        # dynamic ladder schedule.
-        t_round = time.time() if _DEBUG else 0.0
-        next_unresolved = unresolved.join(done_ids, probe_id_col, "left_anti")
-        probe_side = [c for c in unresolved.columns if c != probe_id_col]
-        state = (
-            done.withColumn("_st", F.lit(1))
-            .withColumns({c: F.lit(None).cast(unresolved.schema[c].dataType)
-                          for c in probe_side if c != "p_depth"})
-            .unionByName(
-                next_unresolved.withColumn("_st", F.lit(0))
-                .withColumns({target_id_col: F.lit(None).cast(
-                                  t.schema[target_id_col].dataType),
-                              "dist": F.lit(None).cast("double"),
-                              "rank": F.lit(None).cast("int")}))
-            .localCheckpoint(eager=False)
-        )
-        cnt = state.groupBy("_st", "p_depth") \
-            .agg(F.count(F.lit(1)).alias("n")).collect()
-        n_done_rows = sum(row["n"] for row in cnt if row["_st"] == 1)
-        unres_by_depth = {row["p_depth"]: row["n"]
-                          for row in cnt if row["_st"] == 0}
-        n_unres = sum(unres_by_depth.values())
-        done_m = state.filter(F.col("_st") == 1) \
-            .select(probe_id_col, target_id_col, "dist", "rank")
-        results = done_m if results is None else results.unionByName(done_m)
-        unresolved = state.filter(F.col("_st") == 0) \
-            .select(probe_id_col, *probe_side)
-        # both halves are materialized — this round's cache is no longer
-        # referenced (long-lived sessions run many queries; leaked caches
-        # accumulate)
-        ranked.unpersist()
-        round_done = n_done_rows // k  # exactly k rows per resolved probe
-        if level_entering is None:
-            level_entering = round_done + n_unres
-        level_done += round_done
-        if _DEBUG:
-            print(f"[knn] round {rounds} res={res_i} r={r} "
-                  f"wall={time.time() - t_round:.2f}s resolved={round_done} "
-                  f"unresolved={n_unres}", flush=True)
-        if n_unres == 0:
-            break
-        # schedule advance: coarse rounds double the ring. With per-probe
-        # depths a level is done after its one r=2 round; the descent
-        # lands on the next level with a non-empty audience (exact from
-        # the by-depth counts). The legacy <1% rule (min_level_frac)
-        # covers the explicit-fine_res path, where every probe attends
-        # every level and a level can be pure overhead.
-        if res_i == res:
-            r *= 2
-        elif depth_df is not None:
-            o = res_i - res
-            nxt = next((o2 for o2 in range(o - 2, 0, -2)
-                        if active_at(o2) > 0), 0)
-            level_idx = levels.index(res + nxt) if nxt else len(levels) - 1
-            r = 2 if nxt else 1
-        elif r == 1 and round_done >= min_level_frac * level_entering:
-            r = 2
-        else:
-            if level_done < min_level_frac * level_entering:
-                if _DEBUG:
-                    print(f"[knn] level {res_i} resolved "
-                          f"{level_done}/{level_entering} — skipping to "
-                          f"coarse res {res}", flush=True)
-                level_idx = len(levels) - 1
-            else:
-                level_idx += 1
-            r = 1
-            level_entering = n_unres
-            level_done = 0
-    # every returned branch is materialized (round checkpoints / fallback
-    # checkpoint) — the target cache and the initial probe cache have no
-    # remaining consumers on ANY path (unpersist is a safe no-op when the
-    # loop never ran)
-    t.unpersist()
-    unresolved0.unpersist()
-    return results if results is not None else probes.sparkSession.createDataFrame(
-        [], schema=f"{probe_id_col} string, {target_id_col} string, dist double, rank int")

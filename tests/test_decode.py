@@ -198,13 +198,32 @@ def test_corpus_decodes_cleanly(media_payloads):
     assert all(e is None for e in errs)
 
 
-def test_arrow_and_pandas_paths_identical(spark, docs_df):
-    from dxf_postgis_converter_spark.functions.decode import decode_documents
-    a = decode_documents(docs_df, use_arrow=True)
-    b = decode_documents(docs_df, use_arrow=False)
-    assert a.schema == b.schema
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+def test_decode_documents_matches_convert_entity(docs_df):
+    """Golden for the Spark decode stage: every row of decode_documents
+    equals convert_entity (the reference implementation) applied to the
+    span's payload, plus the span's doc_id, offset and media_ref."""
+    from dxf_postgis_converter_spark.functions.decode import (
+        ENTITY_SCHEMA, decode_documents,
+    )
+    cols = [f.name for f in ENTITY_SCHEMA.fields]
+
+    def canon(row):
+        return tuple(bytes(v) if isinstance(v, bytearray) else v for v in row)
+
+    exp = []
+    for doc in docs_df.collect():
+        for span in doc.spans:
+            if span.kind != "media":
+                continue
+            rec = convert_entity(json.loads(span.media_ref))
+            rec.update(doc_id=doc.doc_id, span_offset=span.offset,
+                       media_ref=span.media_ref)
+            exp.append(canon(rec[c] for c in cols))
+    got = decode_documents(docs_df)
+    assert got.columns == cols
+    got_rows = [canon(r) for r in got.collect()]
+    assert len(exp) > 1000
+    assert sorted(got_rows, key=repr) == sorted(exp, key=repr)
 
 
 def test_no_orjson_fallback_importable_and_equivalent():

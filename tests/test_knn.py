@@ -1,4 +1,4 @@
-"""kNN ring-expansion join vs brute-force O(N^2) oracle."""
+"""kNN join (counts-pyramid radius proof) vs brute-force O(N^2) oracle."""
 
 import numpy as np
 import pytest
@@ -10,7 +10,7 @@ from dxf_postgis_converter_spark.operators.knn import knn_join
 @pytest.fixture(scope="module")
 def knn_data(spark):
     rng = np.random.default_rng(5)
-    # clustered + uniform targets so rings resolve at different rounds
+    # clustered + uniform targets so probes select different levels
     t1 = rng.uniform(0, 8192, size=(400, 2))
     t2 = rng.normal(loc=(1500, 1500), scale=30, size=(100, 2))
     targets = np.vstack([t1, t2])
@@ -34,11 +34,10 @@ def brute_knn(probes, targets, k):
     return exp
 
 
-@pytest.mark.parametrize("strategy", ["oneshot", "ladder"])
 @pytest.mark.parametrize("k,res", [(3, 8), (5, 6), (1, 10)])
-def test_knn_vs_bruteforce(knn_data, k, res, strategy):
+def test_knn_vs_bruteforce(knn_data, k, res):
     pdf, tdf, probes, targets = knn_data
-    got = knn_join(pdf, tdf, k=k, res=res, strategy=strategy).collect()
+    got = knn_join(pdf, tdf, k=k, res=res).collect()
     exp = brute_knn(probes, targets, k)
     by_probe = {}
     for r in got:
@@ -51,178 +50,65 @@ def test_knn_vs_bruteforce(knn_data, k, res, strategy):
             assert dg == pytest.approx(de, rel=1e-12)
 
 
-@pytest.mark.parametrize("strategy", ["oneshot", "ladder"])
-def test_knn_fewer_targets_than_k(spark, strategy):
-    """With < k targets total, probes never reach k candidates; both
-    strategies terminate with such probes absent from the result
-    (documented semantics — no partial rows, no hang)."""
+@pytest.mark.parametrize("targets,probes,k", [
+    # two targets, one probe between them
+    ([(10.0, 10.0), (20.0, 20.0)], [(15.0, 15.0)], 5),
+    # a dense 30-point cluster: one probe inside it, one far away
+    (np.random.default_rng(4).normal(loc=(100, 100), scale=2, size=(30, 2)),
+     [(100.0, 100.0), (5000.0, 5000.0)], 50),
+], ids=["two_targets", "dense_cluster"])
+def test_knn_fewer_targets_than_k(spark, targets, probes, k):
+    """With < k targets total no probe can have k neighbours: every probe
+    is absent from the result (documented semantics — no partial rows,
+    no hang), also when the targets are packed into one hot cell."""
     tdf = spark.createDataFrame(
-        [("t0", 10.0, 10.0), ("t1", 20.0, 20.0)], "target_id string, x double, y double")
-    pdf = spark.createDataFrame([("p0", 15.0, 15.0)], "probe_id string, x double, y double")
-    got = knn_join(pdf, tdf, k=5, res=4, strategy=strategy)
-    assert got.count() == 0
+        [(f"t{i}", float(x), float(y)) for i, (x, y) in enumerate(targets)],
+        "target_id string, x double, y double")
+    pdf = spark.createDataFrame(
+        [(f"p{i}", float(x), float(y)) for i, (x, y) in enumerate(probes)],
+        "probe_id string, x double, y double")
+    assert knn_join(pdf, tdf, k=k, res=4).collect() == []
 
 
-@pytest.mark.parametrize("strategy", ["oneshot", "ladder"])
-def test_knn_exact_k_targets(spark, strategy):
+def test_knn_exact_k_targets(spark):
     tdf = spark.createDataFrame(
         [(f"t{i}", float(i * 100), 0.0) for i in range(5)],
         "target_id string, x double, y double")
     pdf = spark.createDataFrame([("p0", 0.0, 0.0)], "probe_id string, x double, y double")
-    rows = knn_join(pdf, tdf, k=5, res=6, strategy=strategy).orderBy("rank").collect()
+    rows = knn_join(pdf, tdf, k=5, res=6).orderBy("rank").collect()
     assert [r.target_id for r in rows] == ["t0", "t1", "t2", "t3", "t4"]
     assert [r.rank for r in rows] == [1, 2, 3, 4, 5]
 
 
-@pytest.mark.parametrize("strategy", ["oneshot", "ladder"])
-def test_knn_tie_determinism(spark, strategy):
+def test_knn_tie_determinism(spark):
     """Four equidistant targets: ranks break ties by target_id."""
     tdf = spark.createDataFrame(
         [("a", 10.0, 0.0), ("b", -10.0, 0.0), ("c", 0.0, 10.0), ("d", 0.0, -10.0)],
         "target_id string, x double, y double")
     pdf = spark.createDataFrame([("p", 0.0, 0.0)], "probe_id string, x double, y double")
     r1 = [(r.target_id, r.rank) for r in
-          knn_join(pdf, tdf, k=3, res=5, strategy=strategy).orderBy("rank").collect()]
+          knn_join(pdf, tdf, k=3, res=5).orderBy("rank").collect()]
     r2 = [(r.target_id, r.rank) for r in
-          knn_join(pdf, tdf, k=3, res=5, strategy=strategy).orderBy("rank").collect()]
+          knn_join(pdf, tdf, k=3, res=5).orderBy("rank").collect()]
     assert r1 == r2 == [("a", 1), ("b", 2), ("c", 3)]
 
 
-@pytest.mark.parametrize("strategy", ["oneshot", "ladder"])
-def test_knn_probe_on_target(spark, strategy):
+def test_knn_probe_on_target(spark):
     """A probe colocated with a target gets it at dist 0, rank 1."""
     tdf = spark.createDataFrame(
         [("t0", 50.0, 50.0), ("t1", 60.0, 60.0)], "target_id string, x double, y double")
     pdf = spark.createDataFrame([("p", 50.0, 50.0)], "probe_id string, x double, y double")
-    top = knn_join(pdf, tdf, k=1, res=6, strategy=strategy).first()
+    top = knn_join(pdf, tdf, k=1, res=6).first()
     assert top.target_id == "t0" and top.dist == 0.0 and top.rank == 1
 
 
-def test_knn_dense_hot_cell_ladder_exact(spark):
-    """A dense hot cell triggers the auto multi-resolution ladder; the
-    result must still match brute force exactly (the ladder + dynamic
-    skip change the schedule, never the answer)."""
-    import dxf_postgis_converter_spark.operators.knn as knn_mod
-    rng = np.random.default_rng(9)
-    dense = rng.normal(loc=(700, 700), scale=12, size=(3000, 2))
-    sparse = rng.uniform(0, 8192, size=(200, 2))
-    targets = np.vstack([dense, sparse])
-    probes = np.vstack([
-        rng.normal(loc=(700, 700), scale=12, size=(25, 2)),  # in the core
-        rng.uniform(0, 8192, size=(25, 2)),                  # scattered
-    ])
-    tdf = spark.createDataFrame(
-        [(f"t{i}", float(x), float(y)) for i, (x, y) in enumerate(targets)],
-        "target_id string, x double, y double")
-    pdf = spark.createDataFrame(
-        [(f"p{i}", float(x), float(y)) for i, (x, y) in enumerate(probes)],
-        "probe_id string, x double, y double")
-    got = knn_join(pdf, tdf, k=3, res=6, hot_cell_threshold=1000,
-                   strategy="ladder").collect()
-    sched = list(knn_mod._LAST_SCHEDULE)
-    # the ladder ran: at least one round at a finer grid than res
-    assert any(isinstance(s, int) and s > 6 for s, _ in sched), sched
-    exp = brute_knn(probes, targets, 3)
-    by_probe = {}
-    for r in got:
-        by_probe.setdefault(r.probe_id, []).append((r.rank, r.target_id, r.dist))
-    assert set(by_probe) == set(exp)
-    for pid, rows in by_probe.items():
-        rows.sort()
-        assert [t for _, t, _ in rows] == [t for t, _ in exp[pid]]
-
-
-def test_knn_ladder_skips_dead_levels(spark):
-    """Dynamic ladder (VERDICT r4 item 1a): once the dense-core probes
-    resolve at the deepest level, the remaining fine levels resolve <1%
-    of their entering probes and must be SKIPPED — the schedule jumps
-    straight to the coarse grid instead of paying 2 rounds per level."""
-    import dxf_postgis_converter_spark.operators.knn as knn_mod
-    rng = np.random.default_rng(3)
-    # one extreme hot cell (forces a deep ladder) + faraway sparse probes
-    # that only the coarse grid can resolve
-    dense = rng.normal(loc=(400, 400), scale=5, size=(5000, 2))
-    tdf = spark.createDataFrame(
-        [(f"t{i}", float(x), float(y)) for i, (x, y) in enumerate(dense)],
-        "target_id string, x double, y double")
-    # all probes inside the core: they resolve at the deepest level(s)
-    probes = rng.normal(loc=(400, 400), scale=5, size=(40, 2))
-    pdf = spark.createDataFrame(
-        [(f"p{i}", float(x), float(y)) for i, (x, y) in enumerate(probes)],
-        "probe_id string, x double, y double")
-    got = knn_join(pdf, tdf, k=3, res=4, hot_cell_threshold=1000,
-                   strategy="ladder").collect()
-    sched = list(knn_mod._LAST_SCHEDULE)
-    fine_levels_run = {s for s, _ in sched if isinstance(s, int) and s > 4}
-    # a full ladder from the auto depth would run every even level down
-    # to res; the skip rule must cut at least one dead level once
-    # everything resolves deep (all probes are in the core)
-    import math
-    hottest_depth = ((16 - 4) // 2) * 2
-    target = max(32, 12)
-    depth = max(4, math.ceil(math.log(5000 / target, 4)))
-    depth += depth % 2
-    full_ladder = {4 + o for o in range(2, min(depth, hottest_depth) + 1, 2)}
-    assert fine_levels_run < full_ladder or len(sched) < 2 * len(full_ladder) + 1, \
-        (sched, full_ladder)
-    # and the answers stay exact
-    exp = brute_knn(probes, dense, 3)
-    by_probe = {}
-    for r in got:
-        by_probe.setdefault(r.probe_id, []).append((r.rank, r.target_id))
-    assert set(by_probe) == set(exp)
-
-
-def test_knn_explicit_fine_res_legacy_path(spark):
-    """An explicit integer fine_res takes the legacy whole-cohort ladder
-    (r=1,2 per level, <1%-skip heuristic) — exactness must hold there
-    too after the depth-path restructure."""
-    rng = np.random.default_rng(21)
-    targets = rng.uniform(0, 8192, size=(500, 2))
-    probes = rng.uniform(0, 8192, size=(40, 2))
-    tdf = spark.createDataFrame(
-        [(f"t{i}", float(x), float(y)) for i, (x, y) in enumerate(targets)],
-        "target_id string, x double, y double")
-    pdf = spark.createDataFrame(
-        [(f"p{i}", float(x), float(y)) for i, (x, y) in enumerate(probes)],
-        "probe_id string, x double, y double")
-    got = knn_join(pdf, tdf, k=4, res=6, fine_res=10).collect()
-    exp = brute_knn(probes, targets, 4)
-    by_probe = {}
-    for r in got:
-        by_probe.setdefault(r.probe_id, []).append((r.rank, r.target_id))
-    assert set(by_probe) == set(exp)
-    for pid, rows in by_probe.items():
-        rows.sort()
-        assert [t for _, t in rows] == [t for t, _ in exp[pid]]
-
-
-def test_knn_ladder_with_fewer_targets_than_k(spark):
-    """Dense cell triggers the ladder while k exceeds the TOTAL target
-    count: no probe can resolve, the loop must terminate via full ring /
-    fallback with every probe absent (sub-k contract) — no hang, no
-    partial rows."""
-    rng = np.random.default_rng(4)
-    dense = rng.normal(loc=(100, 100), scale=2, size=(30, 2))
-    tdf = spark.createDataFrame(
-        [(f"t{i}", float(x), float(y)) for i, (x, y) in enumerate(dense)],
-        "target_id string, x double, y double")
-    pdf = spark.createDataFrame(
-        [("p0", 100.0, 100.0), ("p1", 5000.0, 5000.0)],
-        "probe_id string, x double, y double")
-    out = knn_join(pdf, tdf, k=50, res=4, hot_cell_threshold=10,
-                   strategy="ladder").collect()
-    assert out == []
-
-
-# --- one-shot strategy specifics --------------------------------------------
+# --- level selection and the floor ----------------------------------------
 
 
 def test_knn_oneshot_dense_hot_cell_exact(spark):
-    """The one-shot strategy on a dense hot cell + scattered probes:
-    level selection must pick fine levels for the core and coarse for
-    the sparse region, and the answer must equal brute force exactly —
-    the same workload shape as the ladder's hot-sheet gate."""
+    """A dense hot cell + scattered probes: level selection must pick
+    fine levels for the core and coarse for the sparse region, and the
+    answer must equal brute force exactly."""
     import dxf_postgis_converter_spark.operators.knn as knn_mod
     rng = np.random.default_rng(9)
     dense = rng.normal(loc=(700, 700), scale=12, size=(3000, 2))
@@ -238,7 +124,7 @@ def test_knn_oneshot_dense_hot_cell_exact(spark):
     pdf = spark.createDataFrame(
         [(f"p{i}", float(x), float(y)) for i, (x, y) in enumerate(probes)],
         "probe_id string, x double, y double")
-    got = knn_join(pdf, tdf, k=3, res=6, strategy="oneshot").collect()
+    got = knn_join(pdf, tdf, k=3, res=6).collect()
     tag, used = knn_mod._LAST_SCHEDULE[0]
     assert tag == "oneshot"
     # core probes select a finer level than the sparse ones
@@ -253,41 +139,6 @@ def test_knn_oneshot_dense_hot_cell_exact(spark):
         assert [t for _, t, _ in rows] == [t for t, _ in exp[pid]]
         for (_, _, dg), (_, de) in zip(rows, exp[pid]):
             assert dg == pytest.approx(de, rel=1e-12)
-
-
-def test_knn_oneshot_equals_ladder(knn_data):
-    """The two strategies implement ONE contract: identical rows on the
-    shared fixture (rank, ids, and distances)."""
-    pdf, tdf, _, _ = knn_data
-    a = sorted(map(tuple, knn_join(pdf, tdf, k=4, res=7,
-                                   strategy="oneshot").collect()))
-    b = sorted(map(tuple, knn_join(pdf, tdf, k=4, res=7,
-                                   strategy="ladder").collect()))
-    assert a == b
-
-
-def test_knn_auto_dispatch(knn_data):
-    """strategy="auto" (the default) counts the probe side and picks the
-    ladder below auto_oneshot_min, the oneshot at or above it — the
-    decision is recorded as a leading ("auto", [n_probes]) entry, and
-    the output equals the pinned strategies either way."""
-    import dxf_postgis_converter_spark.operators.knn as knn_mod
-    pdf, tdf, _, _ = knn_data
-    pinned = sorted(map(tuple, knn_join(pdf, tdf, k=4, res=7,
-                                        strategy="ladder").collect()))
-    n_probes = pdf.count()
-
-    low = sorted(map(tuple, knn_join(pdf, tdf, k=4, res=7, strategy="auto",
-                                     auto_oneshot_min=1).collect()))
-    assert knn_mod._LAST_SCHEDULE[0] == ("auto", [n_probes])
-    assert knn_mod._LAST_SCHEDULE[1][0] == "oneshot"
-    assert low == pinned
-
-    high = sorted(map(tuple, knn_join(pdf, tdf, k=4, res=7, strategy="auto",
-                                      auto_oneshot_min=10**9).collect()))
-    assert knn_mod._LAST_SCHEDULE[0] == ("auto", [n_probes])
-    assert knn_mod._LAST_SCHEDULE[1][0] != "oneshot"  # ladder rounds follow
-    assert high == pinned
 
 
 def test_knn_oneshot_sparse_probe_near_cluster(spark):
@@ -306,7 +157,7 @@ def test_knn_oneshot_sparse_probe_near_cluster(spark):
     pdf = spark.createDataFrame(
         [(f"p{i}", float(x), float(y)) for i, (x, y) in enumerate(probes)],
         "probe_id string, x double, y double")
-    got = knn_join(pdf, tdf, k=5, res=7, strategy="oneshot").collect()
+    got = knn_join(pdf, tdf, k=5, res=7).collect()
     exp = brute_knn(probes, targets, 5)
     by_probe = {}
     for r in got:
@@ -317,13 +168,11 @@ def test_knn_oneshot_sparse_probe_near_cluster(spark):
         assert [t for _, t in rows] == [t for t, _ in exp[pid]]
 
 
-@pytest.mark.parametrize("strategy", ["oneshot", "ladder"])
-def test_knn_out_of_extent_points_exact(spark, strategy):
+def test_knn_out_of_extent_points_exact(spark):
     """grid.py clamps out-of-extent coordinates to border cells, which
-    voids every cell-radius argument for those rows. Both strategies
-    must stay exact: the ladder resolves on measured kth_dist (full-ring
-    tail), the one-shot strategy excludes clamped targets from its count
-    statistics and routes clamped probes to the whole-grid floor."""
+    voids every cell-radius argument for those rows. The join must stay
+    exact: clamped targets are excluded from the count statistics and
+    clamped probes are routed to the whole-grid floor."""
     rng = np.random.default_rng(23)
     inside = rng.uniform(0, 8192, size=(300, 2))
     out_t = np.array([[-500.0, 4000.0], [9000.0, 9500.0], [4000.0, -50.0]])
@@ -340,7 +189,7 @@ def test_knn_out_of_extent_points_exact(spark, strategy):
     pdf = spark.createDataFrame(
         [(f"p{i}", float(x), float(y)) for i, (x, y) in enumerate(probes)],
         "probe_id string, x double, y double")
-    got = knn_join(pdf, tdf, k=4, res=6, strategy=strategy).collect()
+    got = knn_join(pdf, tdf, k=4, res=6).collect()
     exp = brute_knn(probes, targets, 4)
     by_probe = {}
     for r in got:
@@ -354,14 +203,14 @@ def test_knn_out_of_extent_points_exact(spark, strategy):
 
 
 def test_knn_oneshot_all_targets_clamped(spark):
-    """Every target out of extent: the one-shot floor must still answer
-    every probe (counts live only on the floor row)."""
+    """Every target out of extent: the floor must still answer every
+    probe (counts live only on the floor row)."""
     targets = [("t0", -10.0, -10.0), ("t1", 9000.0, 9000.0),
                ("t2", -5.0, 9000.0)]
     probes = [("p0", 100.0, 100.0), ("p1", 8000.0, 8000.0)]
     tdf = spark.createDataFrame(targets, "target_id string, x double, y double")
     pdf = spark.createDataFrame(probes, "probe_id string, x double, y double")
-    got = knn_join(pdf, tdf, k=2, res=6, strategy="oneshot").collect()
+    got = knn_join(pdf, tdf, k=2, res=6).collect()
     tarr = np.array([[x, y] for _, x, y in targets])
     parr = np.array([[x, y] for _, x, y in probes])
     exp = brute_knn(parr, tarr, 2)
@@ -372,31 +221,3 @@ def test_knn_oneshot_all_targets_clamped(spark):
     for pid, rows in by_probe.items():
         rows.sort()
         assert [t for _, t in rows] == [t for t, _ in exp[pid]]
-
-
-def test_knn_oneshot_rejects_explicit_fine_res(knn_data):
-    """strategy='oneshot' with a pinned fine_res is contradictory (the
-    oneshot has no ladder schedule) — it must fail loudly instead of
-    silently running the other strategy."""
-    pdf, tdf, _, _ = knn_data
-    with pytest.raises(ValueError, match="oneshot"):
-        knn_join(pdf, tdf, k=3, res=7, fine_res=11, strategy="oneshot")
-
-
-def test_knn_auto_dispatch_probe_hint_skips_count(knn_data):
-    """VERDICT r6 item 7: a caller that already knows the probe count
-    passes n_probes_hint and the dispatch count action is skipped — the
-    hint (not a fresh count) drives the engine choice, proven by a hint
-    that contradicts the actual probe count."""
-    import dxf_postgis_converter_spark.operators.knn as knn_mod
-    pdf, tdf, _, _ = knn_data
-    pinned = sorted(map(tuple, knn_join(pdf, tdf, k=4, res=7,
-                                        strategy="ladder").collect()))
-    # tiny data + a hint above the crossover: only the hint can explain
-    # an oneshot pick (a real count would have chosen the ladder)
-    got = sorted(map(tuple, knn_join(
-        pdf, tdf, k=4, res=7, strategy="auto",
-        n_probes_hint=5_000_000).collect()))
-    assert knn_mod._LAST_SCHEDULE[0] == ("auto", [5_000_000])
-    assert knn_mod._LAST_SCHEDULE[1][0] == "oneshot"
-    assert got == pinned

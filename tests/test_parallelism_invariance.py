@@ -50,8 +50,7 @@ def test_pip_join_partitioning_invariant(pts, zones_df):
         assert got == base
 
 
-@pytest.mark.parametrize("strategy", ["oneshot", "ladder"])
-def test_knn_partitioning_invariant(spark, strategy):
+def test_knn_partitioning_invariant(spark):
     rng = np.random.default_rng(11)
     t = np.vstack([rng.uniform(0, 4096, size=(300, 2)),
                    rng.normal(loc=(900, 900), scale=20, size=(80, 2))])
@@ -63,12 +62,11 @@ def test_knn_partitioning_invariant(spark, strategy):
         [(f"p{i}", float(x), float(y)) for i, (x, y) in enumerate(p)],
         "probe_id string, x double, y double")
     sel = ["probe_id", "rank", "target_id"]
-    base = _multiset(knn_join(pdf, tdf, k=3, res=6,
-                              strategy=strategy).select(*sel))
+    base = _multiset(knn_join(pdf, tdf, k=3, res=6).select(*sel))
     assert sum(base.values()) == 40 * 3
     for layout in LAYOUTS[:2]:
-        got = _multiset(knn_join(layout(pdf), layout(tdf), k=3, res=6,
-                                 strategy=strategy).select(*sel))
+        got = _multiset(knn_join(layout(pdf), layout(tdf), k=3, res=6)
+                        .select(*sel))
         assert got == base
 
 
