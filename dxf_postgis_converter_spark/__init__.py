@@ -8,14 +8,15 @@ re-expressed Spark-first:
   ``documents(doc_id string, spans array<struct<kind,text,media_ref,offset>>)``
   where ``kind='media'`` spans carry one DXF entity payload (JSON) and
   ``kind='text'`` spans carry annotation text.
-- Decode: one Arrow-batched ``mapInPandas`` UDF implementing the reference's
+- Decode: one Arrow-batched ``mapInArrow`` UDF implementing the reference's
   37 entity→geometry converters (``postgis_entity_converter.py:29-747``)
   bit-identically (same 100-point tessellation, same formulas).
 - Index: planar quadtree cell grid (H3/S2-analogue; those libs are not
   available here) implemented as pure Spark column arithmetic — cell
   assignment, covers, k-ring and tile ids never leave the JVM.
-- Joins: point-in-polygon (broadcast + shuffled + salted), kNN ring
-  expansion, raster-tile↔vector alignment.
+- Joins: point-in-polygon (broadcast + shuffled + salted; the exact
+  refine is JVM column arithmetic), kNN by counts-pyramid radius proof,
+  raster-tile↔vector alignment.
 - Training-data ops: dedup (exact/minhash-LSH/simhash/ngram-jaccard/
   embedding), ANN similarity, text quality/lang-id/tokens, multimodal
   plumbing.

@@ -544,7 +544,6 @@ def _decode_arrow_batches(batches, emit_media_ref: bool = True):
     construction on either side of the boundary."""
     import pyarrow as pa
 
-    schema = ENTITY_SCHEMA if emit_media_ref else ENTITY_SCHEMA_NOREF
     pa_schema = pa.schema(
         [pa.field("doc_id", pa.string()), pa.field("span_offset", pa.int32()),
          pa.field("handle", pa.string()), pa.field("layer", pa.string()),

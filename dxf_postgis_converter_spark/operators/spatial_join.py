@@ -2,20 +2,30 @@
 
 Plan shape (SURVEY §2.4 J10, §4.3/§4.4):
 
-  zones  --covers(res)-->  zone_cells(zone_id, cell [, salt])     [JVM]
-  probes --cell(res)---->  probe cell [, salt]                    [JVM]
+  zones  --covers(res)-->  zone_cells(zone_id, kind, bbox, cell [, salt]) [JVM]
+  zones  --edges------->   (zone_id, parts)                 [one Arrow pass]
+  probes --cell(res)---->  probe cell [, salt]                            [JVM]
   equi-join on cell (broadcast when the cover table is small,
-  shuffled otherwise; optional salting for hot cells)             [JVM]
-  exact refine: ONE Arrow-batched mapInPandas pass over all
-  candidates — rect zones by a vectorized bbox compare, circle/
-  poly zones by ray casting (single consumer of the join: a
-  rect/other branch union would scan the probe side twice)        [Arrow]
+  shuffled otherwise; optional salting for hot cells)                     [JVM]
+  left join the edges on zone_id (same broadcast choice)                  [JVM]
+  exact refine: one Filter — rect zones by a bbox compare, every other
+  zone by boundary-inclusive even-odd ray casting over its edge arrays    [JVM]
+
+The refine is ``geometry.predicates.points_covered`` (shapely ``covers``)
+written as column arithmetic: per polygon part, the horizontal-ray
+crossing count summed over the edges of all its rings is odd, or the
+point lies on any edge. Same edges, same operand order and the same
+on-segment tolerance as the numpy kernel, so the two agree exactly.
+Only the zones cross into Python, once per call, to turn WKB into edges;
+the probe side never does.
 
 Scale notes:
-- the cover table is tiny relative to probes (zones × cells-per-zone), so
-  the default is an explicit ``broadcast()`` — no shuffle of the 10^12-row
+- the cover and edge tables are tiny relative to probes, so the default
+  is an explicit ``broadcast()`` of both — no shuffle of the 10^12-row
   probe side at all; set broadcast_zones=False for a truly huge polygon
   side and AQE handles the shuffled variant.
+- the edges join on zone_id after the cell join, so each zone's edges
+  are stored once, not once per covering cell (or per cell × salt).
 - salting (n_salt>1) splits each hot cell's probe stream across n_salt
   reducers by replicating the zone-cover rows — use with the shuffled
   path on skewed corpora (dense CAD sheets; see skew.py for detection).
@@ -24,31 +34,22 @@ Scale notes:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..geometry.predicates import points_covered
 from ..geometry.wkb import parse_wkb
 from ..index.grid import cell_col, covers_col
 
 DEFAULT_RES = 6  # cell = 128 world units; zone covers stay small
 
-# non-rect zone geometries ride a broadcast {zone_id: wkb} up to this many
-# zones (same memory class as the cover broadcast); beyond it the wkb
-# falls back to per-row carriage through the candidate join
-MAX_RING_BROADCAST = 100_000
+_EDGES_SCHEMA = "zone_id string, parts array<array<struct<x1:double,y1:double,x2:double,y2:double>>>"
 
 
-def zone_cover_cells(zones: DataFrame, res: int = DEFAULT_RES, n_salt: int = 1,
-                     with_wkb: bool = True) -> DataFrame:
-    """zones(zone_id, kind, xmin..ymax, geometry_wkb) → one row per
-    (zone, covering cell [, salt]); all column arithmetic. with_wkb=False
-    drops the geometry column (the refine gets rings via broadcast —
-    see point_in_polygon_join)."""
+def zone_cover_cells(zones: DataFrame, res: int = DEFAULT_RES, n_salt: int = 1) -> DataFrame:
+    """zones(zone_id, kind, xmin..ymax) → one row per (zone, covering
+    cell [, salt]); all column arithmetic, no geometry."""
     cover = zones.select(
-        "zone_id", "kind", *(["geometry_wkb"] if with_wkb else []),
+        "zone_id", "kind",
         F.col("xmin").alias("z_xmin"), F.col("ymin").alias("z_ymin"),
         F.col("xmax").alias("z_xmax"), F.col("ymax").alias("z_ymax"),
         F.explode(covers_col(F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"), res)).alias("cell"),
@@ -58,60 +59,77 @@ def zone_cover_cells(zones: DataFrame, res: int = DEFAULT_RES, n_salt: int = 1,
     return cover
 
 
-def _refine_batches(batches, x_col: str, y_col: str, bc_rings=None):
-    """Exact containment refine, ONE pass over all candidate kinds:
-    rect zones by a vectorized bbox compare (no WKB parse), circle/poly
-    zones by ray casting with the zone ring parsed once per partition.
-    Handling rects here (instead of a separate JVM branch) keeps the
-    candidate join single-consumer — a two-branch union would recompute
-    the probe-side scan + join twice (see git history).
+def _ring_edges(ring: np.ndarray) -> np.ndarray:
+    """(m, 4) edges x1, y1, x2, y2 of one ring, built as
+    ``predicates._ring_crossings`` builds them: the closing vertex is
+    dropped when it repeats the first, then the ring wraps around."""
+    ring = ring[:, :2]
+    if len(ring) and np.array_equal(ring[0], ring[-1]):
+        ring = ring[:-1]
+    return np.hstack([ring, np.roll(ring, -1, axis=0)])
 
-    bc_rings: broadcast {zone_id: wkb bytes} for non-rect zones — the
-    geometry crosses the Arrow boundary ONCE PER EXECUTOR instead of once
-    per candidate row. Shipping ~KB rings per row both multiplied the
-    Python-boundary volume ~100x and could saturate the worker socket in
-    BOTH directions at once, deadlocking Spark's single-threaded
-    PythonRunner flow control (observed at sf0.4/local[2]). None → the
-    wkb travels as a candidate column (huge-zone-set fallback); a zone
-    missing from the broadcast also falls back to the per-row column when
-    the candidates carry one (defensive: a zone inserted between the
-    driver's collect and the refine)."""
-    geom_cache: dict[str, object] = {}
 
-    def geom_of(zid, grp):
-        geom = geom_cache.get(zid)
-        if geom is None:
-            wkb = bc_rings.value.get(zid) if bc_rings is not None else None
-            if wkb is None:
-                if "geometry_wkb" not in grp:
-                    raise KeyError(
-                        f"zone {zid!r} absent from ring broadcast and no "
-                        f"per-row geometry_wkb column on the candidates")
-                wkb = bytes(grp["geometry_wkb"].iloc[0])
-            _, geom = parse_wkb(bytes(wkb))  # all rings + MultiPolygon parts
-            geom_cache[zid] = geom
-        return geom
+def _edge_batches(batches):
+    """mapInArrow body: (zone_id, geometry_wkb) → (zone_id, parts), one
+    inner list per polygon part holding the edges of all its rings."""
+    import pyarrow as pa
 
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        pdf = pdf.reset_index(drop=True)
-        keep = np.zeros(len(pdf), dtype=bool)
-        xs = pdf[x_col].to_numpy()
-        ys = pdf[y_col].to_numpy()
-        is_rect = (pdf["kind"] == "rect").to_numpy()
-        if is_rect.any():
-            keep[is_rect] = (
-                (xs[is_rect] >= pdf["z_xmin"].to_numpy()[is_rect])
-                & (xs[is_rect] <= pdf["z_xmax"].to_numpy()[is_rect])
-                & (ys[is_rect] >= pdf["z_ymin"].to_numpy()[is_rect])
-                & (ys[is_rect] <= pdf["z_ymax"].to_numpy()[is_rect])
-            )
-        rest = pdf[~is_rect]
-        for zid, grp in rest.groupby("zone_id", sort=False):
-            keep[grp.index.to_numpy()] = points_covered(
-                grp[x_col].to_numpy(), grp[y_col].to_numpy(), geom_of(zid, grp))
-        yield pdf[keep]
+    def offsets(lens):
+        offs = np.zeros(len(lens) + 1, dtype=np.int32)
+        np.cumsum(lens, out=offs[1:])
+        return pa.array(offs)
+
+    for batch in batches:
+        edges, part_lens, zone_lens = [], [], []
+        for wkb in batch.column(1).to_pylist():
+            _, geom = parse_wkb(wkb)
+            parts = geom if len(geom) and isinstance(geom[0], list) else [geom]
+            for rings in parts:
+                ring_edges = [_ring_edges(r) for r in rings]
+                edges.extend(ring_edges)
+                part_lens.append(sum(map(len, ring_edges)))
+            zone_lens.append(len(parts))
+        e = np.vstack(edges) if edges else np.empty((0, 4))
+        flat = pa.StructArray.from_arrays(
+            [pa.array(e[:, i]) for i in range(4)], names=["x1", "y1", "x2", "y2"])
+        parts_arr = pa.ListArray.from_arrays(
+            offsets(zone_lens), pa.ListArray.from_arrays(offsets(part_lens), flat))
+        # zone ids as fresh buffers: the output never references the input batch
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(batch.column(0).to_pylist(), pa.string()), parts_arr],
+            names=["zone_id", "parts"])
+
+
+def _zone_edges(zones: DataFrame) -> DataFrame:
+    """Non-rect zones (NULL kind included) → (zone_id, parts). A zone
+    without geometry has no row, so it covers nothing."""
+    return (zones.filter((F.col("kind").isNull() | (F.col("kind") != "rect"))
+                         & F.col("geometry_wkb").isNotNull())
+            .select("zone_id", "geometry_wkb")
+            .mapInArrow(_edge_batches, schema=_EDGES_SCHEMA))
+
+
+def _covered(px: Column, py: Column) -> Column:
+    """``predicates.points_covered`` over the ``parts`` column. The
+    division runs only on edges that straddle the ray (y1 != y2), so a
+    horizontal edge never divides by zero under ANSI."""
+    eps = F.lit(1e-12)
+
+    def crossing(acc, e):
+        hit = F.when((e.y1 > py) != (e.y2 > py),
+                     px < e.x1 + ((py - e.y1) * (e.x2 - e.x1)) / (e.y2 - e.y1))
+        return acc + F.when(hit, 1).otherwise(0)
+
+    def on_edge(e):
+        dx, dy = e.x2 - e.x1, e.y2 - e.y1
+        cross = (px - e.x1) * dy - (py - e.y1) * dx
+        scale = F.greatest(F.abs(dx), F.abs(dy)) + 1.0
+        return ((F.abs(cross) <= eps * scale)
+                & (F.least(e.x1, e.x2) - eps <= px) & (px <= F.greatest(e.x1, e.x2) + eps)
+                & (F.least(e.y1, e.y2) - eps <= py) & (py <= F.greatest(e.y1, e.y2) + eps))
+
+    return (F.exists("parts", lambda p: F.aggregate(p, F.lit(0), crossing) % 2 == 1)
+            | F.exists(F.flatten("parts"), on_edge))
 
 
 def point_in_polygon_join(
@@ -126,54 +144,27 @@ def point_in_polygon_join(
 ) -> DataFrame:
     """probes(any cols incl. x_col/y_col) ⋈ zones → probe cols + zone_id.
 
-    Exact containment (boundary-inclusive ray casting ≙ shapely covers).
-
-    Non-rect zone geometries reach the refine via a Spark broadcast
-    variable ({zone_id: wkb}, one copy per executor) rather than as a
-    join column repeated per candidate row — up to
-    ``max_ring_broadcast`` zones (driver-guarded; beyond it the wkb
-    falls back to per-row carriage and the cogroup-by-zone design in the
-    module doc becomes the right tool)."""
-    # NULL-kind zones are non-rect too (a plain != would drop them from the
-    # broadcast while the refine still routes them to the polygon branch)
-    nonrect_rows = (zones.filter(F.col("kind").isNull() | (F.col("kind") != "rect"))
-                    .select("zone_id", "geometry_wkb")
-                    .limit(MAX_RING_BROADCAST + 1).collect())
-    bc_rings = None
-    if len(nonrect_rows) <= MAX_RING_BROADCAST:
-        bc_rings = probes.sparkSession.sparkContext.broadcast(
-            {r.zone_id: bytes(r.geometry_wkb) for r in nonrect_rows})
-
-    cover = zone_cover_cells(zones, res=res, n_salt=n_salt,
-                             with_wkb=bc_rings is None)
+    Exact containment (boundary-inclusive ray casting ≙ shapely covers);
+    rect zones by their bbox, zones of any other kind (or NULL kind) by
+    their WKB's edges."""
+    cover = zone_cover_cells(zones, res=res, n_salt=n_salt)
+    edges = _zone_edges(zones)
     if broadcast_zones:
-        cover = F.broadcast(cover)
+        cover, edges = F.broadcast(cover), F.broadcast(edges)
 
     probe_cols = probes.columns
-    p = probes.withColumn("cell", cell_col(F.col(x_col), F.col(y_col), res))
+    px, py = F.col(x_col), F.col(y_col)
+    p = probes.withColumn("cell", cell_col(px, py, res))
     join_keys = ["cell"]
     if n_salt > 1:
         p = p.withColumn("salt", F.pmod(F.xxhash64(F.col(probe_id_col)), F.lit(n_salt)).cast("int"))
         join_keys.append("salt")
 
-    cand = p.join(cover, join_keys, "inner")
-
-    # one Arrow-batched refine pass over ALL candidates (rect rows are a
-    # vectorized bbox compare inside the same stage — no WKB parse, and no
-    # second consumer of the candidate join)
-    extra = ["zone_id", "kind", "z_xmin", "z_ymin", "z_xmax", "z_ymax"] \
-        + ([] if bc_rings is not None else ["geometry_wkb"])
-    refine_in = cand.select(*probe_cols, *extra)
-    schema = T.StructType(
-        [probes.schema[c] for c in probe_cols]
-        + [T.StructField("zone_id", T.StringType()), T.StructField("kind", T.StringType()),
-           T.StructField("z_xmin", T.DoubleType()), T.StructField("z_ymin", T.DoubleType()),
-           T.StructField("z_xmax", T.DoubleType()), T.StructField("z_ymax", T.DoubleType())]
-        + ([] if bc_rings is not None else [T.StructField("geometry_wkb", T.BinaryType())])
-    )
-    return refine_in.mapInPandas(
-        lambda it: _refine_batches(it, x_col, y_col, bc_rings), schema=schema
-    ).select(*probe_cols, "zone_id")
+    cand = p.join(cover, join_keys, "inner").join(edges, "zone_id", "left")
+    in_bbox = ((px >= F.col("z_xmin")) & (px <= F.col("z_xmax"))
+               & (py >= F.col("z_ymin")) & (py <= F.col("z_ymax")))
+    return (cand.filter(F.when(F.col("kind") == "rect", in_bbox).otherwise(_covered(px, py)))
+            .select(*probe_cols, "zone_id"))
 
 
 def bbox_intersects_join(

@@ -37,8 +37,8 @@ def get_spark(
         # bytes cap complements the record cap (whichever hits first):
         # bounds the Arrow batch for wide rows (multimodal binary
         # payloads can be MBs each), which keeps the Python-worker socket
-        # from saturating in both directions at once — the PythonRunner
-        # flow-control deadlock documented in operators/spatial_join.py
+        # from saturating in both directions at once (a PythonRunner
+        # flow-control deadlock)
         .config("spark.sql.execution.arrow.maxBytesPerBatch", "16777216")
         # interleaved documents carry ~100KB span arrays per row: the
         # stock 4096-row vectorized-reader batch reserves 100s of MB of

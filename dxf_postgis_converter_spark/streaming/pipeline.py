@@ -2,9 +2,10 @@
 documents → decode → point-in-polygon join.
 
 The batch operators compose unchanged onto a readStream source —
-``decode_documents`` is explode + filter + mapInPandas and
-``point_in_polygon_join`` is a broadcast equi-join + mapInPandas refine,
-all streaming-compatible stateless transformations. That composability
+``decode_documents`` is explode + filter + mapInArrow and
+``point_in_polygon_join`` is a broadcast equi-join + JVM filter refine
+(its one Python pass runs over the static zones), all
+streaming-compatible stateless transformations. That composability
 (same function objects, batch or stream) is the point: ingest backfills
 run availableNow against the same code that serves the live stream.
 

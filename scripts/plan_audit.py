@@ -37,6 +37,19 @@ def plan_of(df, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+def _refine_above_join(simple: str) -> bool:
+    lines = simple.splitlines()
+    refine = [i for i, ln in enumerate(lines) if "Filter" in ln and "aggregate(" in ln]
+    cand_join = [i for i, ln in enumerate(lines) if "Join [cell" in ln]
+    return len(refine) == 1 and len(cand_join) == 1 and refine[0] < cand_join[0]
+
+
+def _only_python_is_edge_decode(simple: str) -> bool:
+    python = [ln for ln in simple.splitlines()
+              if re.search(r"MapIn|EvalPython|InPandas", ln)]
+    return len(python) == 1 and "MapInArrow" in python[0] and "parts#" in python[0]
+
+
 def audit(sections, name, df, checks, excerpt_markers=()):
     """checks: list of (label, predicate over {'formatted','simple'})."""
     plans = {"formatted": plan_of(df), "simple": plan_of(df, "simple")}
@@ -76,8 +89,6 @@ def main() -> int:
 
     entities = decode_documents(docs).cache()
     entities.count()
-    pts = entities.filter("geom_type = 'POINT'").select(
-        "doc_id", "handle", F.col("xmin").alias("x"), F.col("ymin").alias("y"))
 
     sections, all_ok = [], True
 
@@ -126,7 +137,17 @@ def main() -> int:
           in p["formatted"])],
         excerpt_markers=("PushedFilters", "ReadSchema"))
 
-    # 2. PIP broadcast path: the 10^12-row probe side never shuffles
+    # 2. PIP broadcast path: the 10^12-row probe side never shuffles.
+    # Probes come from the entities parquet, so the only Python node a
+    # PIP plan may show is the operator's own zone-side edge decode.
+    pts = spark.read.parquet(epq).filter("geom_type = 'POINT'").select(
+        "doc_id", "handle", F.col("xmin").alias("x"), F.col("ymin").alias("y"))
+    pip_refine_checks = [
+        ("zero MapInPandas", lambda p: "MapInPandas" not in p["simple"]),
+        ("exact refine is a JVM Filter above the candidate (cell) join",
+         lambda p: _refine_above_join(p["simple"])),
+        ("the only Python node is the zone-side edge decode (MapInArrow)",
+         lambda p: _only_python_is_edge_decode(p["simple"]))]
     all_ok &= audit(
         sections, "point-in-polygon join (broadcast cover path)",
         point_in_polygon_join(pts, zones, res=6),
@@ -134,10 +155,9 @@ def main() -> int:
           lambda p: "BroadcastHashJoin" in p["simple"]),
          ("probe side NEVER hash-repartitioned",
           lambda p: "Exchange hashpartitioning" not in p["simple"]),
-         ("exactly ONE Arrow refine pass (MapInPandas)",
-          lambda p: p["simple"].count("MapInPandas") == 1)])
+         *pip_refine_checks])
 
-    # 3. PIP salted shuffle path — the >100k-zones / hot-cell regime
+    # 3. PIP salted shuffle path — the huge-zone-side / hot-cell regime
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -151,8 +171,7 @@ def main() -> int:
               "n_salt reducers",
               lambda p: "Exchange hashpartitioning(cell" in p["simple"]
               and "salt" in p["simple"]),
-             ("exactly ONE Arrow refine pass",
-              lambda p: p["simple"].count("MapInPandas") == 1)])
+             *pip_refine_checks])
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 

@@ -72,7 +72,7 @@ def main() -> None:
         # per-STAGE minima across repeats (not whole-run best): external
         # contention only inflates walls, so each stage's minimum is the
         # closest observable to its uncontended wall even when no single
-        # run was clean end-to-end (scripts/scaling_merge.py rationale)
+        # run was clean end-to-end
         best = dict(max(runs, key=lambda r: r["geoms_per_sec"]))
         best["queries"] = {k: min(r["queries"][k] for r in runs)
                            for k in runs[0]["queries"]}

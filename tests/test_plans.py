@@ -8,6 +8,7 @@ makes the operator scale, not exact plan text.
 
 import contextlib
 import io
+import re
 
 import pyspark.sql.functions as F
 
@@ -36,29 +37,47 @@ def test_decode_plan_one_python_stage_pushdown(spark, docs_df, tmp_path):
     assert "ReadSchema: struct<doc_id:string,spans:array" in plan_pq
 
 
-def test_pip_broadcast_plan(entities_df, zones_df):
+def _parquet_points(spark, entities_df, tmp_path):
+    """POINT probes from a parquet scan, so the only Python node in a
+    PIP plan can be the operator's own."""
+    pq = str(tmp_path / "points")
+    entities_df.filter("geom_type = 'POINT'").select(
+        "doc_id", "handle", F.col("xmin").alias("x"), F.col("ymin").alias("y")
+    ).write.parquet(pq)
+    return spark.read.parquet(pq)
+
+
+def assert_pip_refine_in_jvm(simple: str):
+    """Zero MapInPandas; the refine is a JVM Filter above the candidate
+    (cell) join; the only Python node is the zone-side edge decode."""
+    lines = simple.splitlines()
+    refine = [i for i, ln in enumerate(lines) if "Filter" in ln and "aggregate(" in ln]
+    cand_join = [i for i, ln in enumerate(lines) if "Join [cell" in ln]
+    python = [ln for ln in lines if re.search(r"MapIn|EvalPython|InPandas", ln)]
+    assert "MapInPandas" not in simple
+    assert len(refine) == 1 and len(cand_join) == 1 and refine[0] < cand_join[0], simple
+    assert len(python) == 1 and "MapInArrow" in python[0] and "parts#" in python[0], python
+
+
+def test_pip_broadcast_plan(spark, entities_df, zones_df, tmp_path):
     from dxf_postgis_converter_spark.operators.spatial_join import (
         point_in_polygon_join,
     )
 
-    pts = entities_df.filter("geom_type = 'POINT'").select(
-        "doc_id", "handle", F.col("xmin").alias("x"), F.col("ymin").alias("y"))
+    pts = _parquet_points(spark, entities_df, tmp_path)
     plan = plan_of(point_in_polygon_join(pts, zones_df, res=6))
     # cover table broadcast: the 10^12-row probe side is never shuffled
     assert "BroadcastHashJoin" in plan
     assert "Exchange hashpartitioning" not in plan
-    # ONE Arrow refine pass over all candidate kinds
-    assert plan_of(point_in_polygon_join(pts, zones_df, res=6),
-                   "simple").count("MapInPandas") == 1
+    assert_pip_refine_in_jvm(plan_of(point_in_polygon_join(pts, zones_df, res=6), "simple"))
 
 
-def test_pip_salted_plan_shuffles_without_broadcast(spark, entities_df, zones_df):
+def test_pip_salted_plan_shuffles_without_broadcast(spark, entities_df, zones_df, tmp_path):
     from dxf_postgis_converter_spark.operators.spatial_join import (
         point_in_polygon_join,
     )
 
-    pts = entities_df.filter("geom_type = 'POINT'").select(
-        "doc_id", "handle", F.col("xmin").alias("x"), F.col("ymin").alias("y"))
+    pts = _parquet_points(spark, entities_df, tmp_path)
     # broadcast_zones=False doesn't FORCE a shuffle — at test scale
     # Catalyst still auto-broadcasts the tiny cover side (correct). Pin
     # the huge-polygon-side regime the way a 10^12-row run would see it:
@@ -74,7 +93,7 @@ def test_pip_salted_plan_shuffles_without_broadcast(spark, entities_df, zones_df
         assert "BroadcastHashJoin" not in plan
         assert "Exchange hashpartitioning(cell" in plan
         assert "salt" in plan
-        assert plan.count("MapInPandas") == 1
+        assert_pip_refine_in_jvm(plan)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 

@@ -39,13 +39,62 @@ def brute_pip(points, zone_rings):
     return pairs
 
 
-@pytest.mark.parametrize("res,n_salt,broadcast", [(6, 1, True), (8, 1, False), (6, 4, True), (7, 4, False)])
-def test_pip_join_vs_bruteforce(points_df, zones_df, zone_rings, res, n_salt, broadcast):
+@pytest.fixture(scope="module")
+def adversarial_probes(spark, zones_df, zone_rings):
+    """Probes where ray casting goes wrong first, against the zones plus
+    one poly zone copied with kind NULL: every ring vertex and edge
+    midpoint (hole boundaries and the horizontal edges of rect-shaped
+    rings included), each midpoint moved 1e-9 off its edge to either
+    side, points a quarter of the way along each horizontal edge and
+    just off its ends at the same y, and random points in each zone's
+    bbox."""
+    rng = np.random.default_rng(11)
+    poly = zones_df.filter("kind = 'poly'").orderBy("zone_id").first()
+    zones = zones_df.unionByName(spark.createDataFrame(
+        [poly.asDict() | {"zone_id": "null_kind", "kind": None}], zones_df.schema))
+    rings = dict(zone_rings, null_kind=zone_rings[poly.zone_id])
+    xy = []
+    for z in zones_df.collect():
+        geom = zone_rings[z.zone_id]
+        for ring in (r for part in (geom if isinstance(geom[0], list) else [geom])
+                     for r in part):
+            a, b = ring[:-1, :2], ring[1:, :2]  # WKB rings are closed
+            mid = (a + b) / 2
+            xy += [*a, *mid]
+            d = b - a
+            normal = np.stack([-d[:, 1], d[:, 0]], 1) / np.hypot(d[:, 0], d[:, 1])[:, None]
+            xy += [*(mid + 1e-9 * normal), *(mid - 1e-9 * normal)]
+            flat = a[:, 1] == b[:, 1]
+            xy += [*(0.75 * a[flat] + 0.25 * b[flat])]
+            lo, hi = np.minimum(a[flat, 0], b[flat, 0]), np.maximum(a[flat, 0], b[flat, 0])
+            xy += [*np.stack([lo - 1.0, a[flat, 1]], 1), *np.stack([hi + 1.0, a[flat, 1]], 1)]
+        xy += [*rng.uniform((z.xmin, z.ymin), (z.xmax, z.ymax), (40, 2))]
+    probes = spark.createDataFrame(
+        [("adv", f"p{i}", float(x), float(y)) for i, (x, y) in enumerate(xy)],
+        "doc_id string, handle string, x double, y double")
+    return probes, zones, rings
+
+
+_PIP_CASES = [(6, 1, True), (8, 1, False), (6, 4, True), (7, 4, False)]
+
+
+@pytest.mark.parametrize(
+    "probe_set,res,n_salt,broadcast",
+    [pytest.param("corpus", *c, id="-".join(map(str, c))) for c in _PIP_CASES]
+    + [pytest.param("adversarial", *c, id="adversarial-" + "-".join(map(str, c)))
+       for c in _PIP_CASES])
+def test_pip_join_vs_bruteforce(request, spark, points_df, zones_df, zone_rings,
+                                probe_set, res, n_salt, broadcast):
+    probes, zones, rings = points_df, zones_df, zone_rings
+    if probe_set == "adversarial":
+        # the session default: horizontal edges must not divide by zero
+        assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+        probes, zones, rings = request.getfixturevalue("adversarial_probes")
     got = {(r.doc_id, r.handle, r.zone_id) for r in point_in_polygon_join(
-        points_df, zones_df, res=res, n_salt=n_salt, broadcast_zones=broadcast,
+        probes, zones, res=res, n_salt=n_salt, broadcast_zones=broadcast,
         probe_id_col="handle").collect()}
-    pts = [(r.doc_id, r.handle, r.x, r.y) for r in points_df.collect()]
-    exp = brute_pip(pts, zone_rings)
+    pts = [(r.doc_id, r.handle, r.x, r.y) for r in probes.collect()]
+    exp = brute_pip(pts, rings)
     assert got == exp
     assert len(exp) > 50  # non-degenerate
 
@@ -62,20 +111,6 @@ def test_bbox_intersects_join_vs_bruteforce(entities_df, zones_df):
             if p.xmin <= zx1 and p.xmax >= zx0 and p.ymin <= zy1 and p.ymax >= zy0:
                 exp.add((p.doc_id, p.handle, zid))
     assert got == exp
-
-
-def test_pip_join_per_row_wkb_fallback(monkeypatch, points_df, zones_df, zone_rings):
-    """Huge-zone-set path: with the ring broadcast disabled (threshold 0)
-    the wkb travels as a candidate column — rows must be identical to the
-    broadcast-rings path and the brute-force oracle."""
-    import dxf_postgis_converter_spark.operators.spatial_join as sj
-
-    monkeypatch.setattr(sj, "MAX_RING_BROADCAST", 0)
-    got = {(r.doc_id, r.handle, r.zone_id)
-           for r in sj.point_in_polygon_join(points_df, zones_df, res=6).collect()}
-    points = [(r.doc_id, r.handle, r.x, r.y) for r in points_df.collect()]
-    assert got == brute_pip(points, zone_rings)
-    assert len(got) > 0
 
 
 def test_pip_join_holed_and_multipolygon_zones(spark):
