@@ -202,14 +202,16 @@ def doc_id_for(index: int) -> str:
     return str(uuid.UUID(int=(index * 0x9E3779B97F4A7C15 + SEED) % (1 << 128)))
 
 
-def _jdump(obj) -> str:
+def canonical_dumps(obj) -> str:
+    """Canonical JSON: sorted keys, compact separators, no ASCII escaping
+    (stdlib float notation)."""
     return json.dumps(obj, ensure_ascii=False, sort_keys=True, separators=(",", ":"))
 
 
 def canonical_media_ref(etype, name, handle, layer, attributes, geometries, extra_data) -> str:
     """THE canonical payload serialization — generator and reconstructor
     must both use this for span-sequence equality to be byte-exact."""
-    return _jdump({
+    return canonical_dumps({
         "attributes": attributes,
         "entity_type": etype,
         "extra_data": extra_data,
@@ -442,7 +444,7 @@ def build_zones() -> pd.DataFrame:
             "xmin": float(ring[:, 0].min()), "ymin": float(ring[:, 1].min()),
             "xmax": float(ring[:, 0].max()), "ymax": float(ring[:, 1].max()),
             "geometry_wkb": wkb_polygon(ring),
-            "params_json": _jdump(params),
+            "params_json": canonical_dumps(params),
         })
 
     # 8x8 grid of rects over ~60% of the extent (staggered gaps)
@@ -507,8 +509,8 @@ def build_zones() -> pd.DataFrame:
             "xmin": ox0, "ymin": oy0, "xmax": ox1, "ymax": oy1,
             "geometry_wkb": wkb_polygon(rect_ring(ox0, oy0, ox1, oy1),
                                         holes=[rect_ring(hx0, hy0, hx1, hy1)]),
-            "params_json": _jdump({"outer": [ox0, oy0, ox1, oy1],
-                                   "hole": [hx0, hy0, hx1, hy1]}),
+            "params_json": canonical_dumps({"outer": [ox0, oy0, ox1, oy1],
+                                            "hole": [hx0, hy0, hx1, hy1]}),
         })
 
     parts = [(5200.0, 700.0, 6000.0, 1500.0), (6400.0, 1900.0, 7200.0, 2700.0)]
@@ -517,7 +519,7 @@ def build_zones() -> pd.DataFrame:
         "xmin": min(p[0] for p in parts), "ymin": min(p[1] for p in parts),
         "xmax": max(p[2] for p in parts), "ymax": max(p[3] for p in parts),
         "geometry_wkb": wkb_multipolygon([rect_ring(*p) for p in parts]),
-        "params_json": _jdump({"parts": [list(p) for p in parts]}),
+        "params_json": canonical_dumps({"parts": [list(p) for p in parts]}),
     })
     return pd.DataFrame(rows)
 

@@ -27,18 +27,12 @@ from __future__ import annotations
 import json
 import math
 
-try:  # optional fast path; byte format of data_json is NOT contractual
-    # (only the reconstructed media_ref must byte-match the corpus
-    # canonical form — see operators/reconstruct.py), so orjson's float
-    # notation differences are harmless here
-    import orjson as _orjson
-except ImportError:  # pragma: no cover
-    _orjson = None
-
 import numpy as np
+import orjson  # required: the JSON parser and serialiser of every entity-path stage
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..geometry import tessellate as tess
 from ..geometry.wkb import (
@@ -411,21 +405,16 @@ def _encode(kind, coords):
     return wkb_multipolygon(arrs), "MULTIPOLYGON", (xs.min(), ys.min(), xs.max(), ys.max())
 
 
-if _orjson is not None:
-    def _dumps(obj) -> str:
-        try:
-            return _orjson.dumps(obj, option=_orjson.OPT_SORT_KEYS).decode()
-        except TypeError:  # exotic value types: defer to stdlib
-            return json.dumps(obj, ensure_ascii=False, sort_keys=True,
-                              separators=(",", ":"))
-
-    _loads = _orjson.loads
-else:  # pragma: no cover
-    def _dumps(obj) -> str:
+def _dumps(obj) -> str:
+    """Sorted-key JSON for data_json. Its byte format is not contractual
+    (only the reconstructed media_ref must byte-match the corpus canonical
+    form — see operators/reconstruct.py), so orjson's float notation is
+    fine here."""
+    try:
+        return orjson.dumps(obj, option=orjson.OPT_SORT_KEYS).decode()
+    except TypeError:  # exotic value types: defer to stdlib
         return json.dumps(obj, ensure_ascii=False, sort_keys=True,
                           separators=(",", ":"))
-
-    _loads = json.loads
 
 
 def convert_entity(payload: dict):
@@ -544,17 +533,9 @@ def _decode_arrow_batches(batches, emit_media_ref: bool = True):
     construction on either side of the boundary."""
     import pyarrow as pa
 
-    pa_schema = pa.schema(
-        [pa.field("doc_id", pa.string()), pa.field("span_offset", pa.int32()),
-         pa.field("handle", pa.string()), pa.field("layer", pa.string()),
-         pa.field("entity_type", pa.string()), pa.field("name", pa.string()),
-         pa.field("geometry_wkb", pa.binary()), pa.field("geom_type", pa.string()),
-         pa.field("xmin", pa.float64()), pa.field("ymin", pa.float64()),
-         pa.field("xmax", pa.float64()), pa.field("ymax", pa.float64()),
-         pa.field("data_json", pa.string())]
-        + ([pa.field("media_ref", pa.string())] if emit_media_ref else [])
-        + [pa.field("error", pa.string())])
-    loads = _loads
+    pa_schema = to_arrow_schema(
+        ENTITY_SCHEMA if emit_media_ref else ENTITY_SCHEMA_NOREF)
+    loads = orjson.loads
     for batch in batches:
         n = batch.num_rows
         if n == 0:

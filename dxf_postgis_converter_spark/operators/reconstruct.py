@@ -12,7 +12,7 @@ entities + text spans, and the gate is **span-sequence equality
 
 Spark shape (one narrow Python stage, everything else JVM):
 
-  entities --mapInPandas--> (doc_id, span_offset, media_ref')   [Arrow]
+  entities --mapInArrow--> (doc_id, span_offset, media_ref')    [Arrow]
   text spans ---------------------------------------- select     [JVM]
   union → groupBy(doc_id) → array_sort(collect_list(struct))     [JVM]
   → documents'(doc_id, spans)
@@ -27,20 +27,14 @@ extra_data; we strip it back off).
 
 from __future__ import annotations
 
-import json
 import re
 
-try:
-    import orjson as _orjson
-except ImportError:  # pragma: no cover
-    _orjson = None
-
-import pandas as pd
+import orjson
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..corpus import SPANS_SCHEMA, canonical_media_ref
+from ..corpus import SPANS_SCHEMA, canonical_dumps
 from ..functions.decode import bytes_string_array
 
 # source-payload extra_data keys (corpus contract; everything else in the
@@ -61,44 +55,13 @@ _REF_SCHEMA = T.StructType([
 
 # floats whose rendering might differ between orjson and stdlib json:
 # fixed-notation values below 1e-4 (stdlib switches to exponent there) or
-# any exponent-notation number. Payloads matching this re-serialize with
-# stdlib json — the canonical format. Sound because every disagreement
-# case necessarily leaves one of these byte patterns in the orjson output;
-# false positives only cost the slow path on that row.
+# any exponent-notation number. Rows whose orjson bytes match this
+# re-serialize through corpus.canonical_dumps — the canonical format.
+# Sound because every disagreement case necessarily leaves one of these
+# byte patterns in the orjson output; false positives only cost the slow
+# path on that row. _risky_rows is the batched scan; this regex is the
+# reference it must match exactly.
 _FLOAT_RISK = re.compile(rb"0\.0000|\d[eE][-+]?\d")
-
-
-def _canonical_dumps_fast(d: dict) -> str:
-    """Byte-compatible fast canonical serialization: orjson (≈4x faster)
-    when its output provably matches stdlib json's canonical form, else
-    stdlib json (ensure_ascii=False, sort_keys, compact separators)."""
-    if _orjson is not None:
-        try:
-            out = _orjson.dumps(d, option=_orjson.OPT_SORT_KEYS)
-        except TypeError:
-            pass
-        else:
-            if not _FLOAT_RISK.search(out):
-                return out.decode()
-    return json.dumps(d, ensure_ascii=False, sort_keys=True, separators=(",", ":"))
-
-
-_loads = json.loads if _orjson is None else _orjson.loads
-
-
-def _rebuild_one(dj: str) -> str:
-    d = _loads(dj)
-    extra = d.get("extra_data", {}) or {}
-    src_extra = {k: extra[k] for k in RT_EXTRA_KEYS if k in extra}
-    return _canonical_dumps_fast({
-        "attributes": d.get("attributes", {}) or {},
-        "entity_type": d.get("entity_type", ""),
-        "extra_data": src_extra,
-        "geometries": d.get("geometries", {}) or {},
-        "handle": d.get("handle", ""),
-        "layer": d.get("layer", ""),
-        "name": d.get("name", ""),
-    })
 
 
 def _risky_rows(outs: list, n_rows: int) -> set[int]:
@@ -151,62 +114,51 @@ def _risky_rows(outs: list, n_rows: int) -> set[int]:
     return set(np.unique(np.searchsorted(offs, pos, side="right") - 1).tolist())
 
 
+def _rt_payload(d: dict) -> dict:
+    """A parsed data_json cut to the media_ref payload, IN PLACE: the
+    seven canonical keys with their defaults, extra_data filtered to
+    RT_EXTRA_KEYS (orjson preserves the stored canonical key order, and
+    OPT_SORT_KEYS re-canonicalizes the rebuilt extra_data)."""
+    extra = d.get("extra_data", {}) or {}
+    d["attributes"] = d.get("attributes", {}) or {}
+    d["entity_type"] = d.get("entity_type", "")
+    d["extra_data"] = {k: extra[k] for k in RT_EXTRA_KEYS if k in extra}
+    d["geometries"] = d.get("geometries", {}) or {}
+    d["handle"] = d.get("handle", "")
+    d["layer"] = d.get("layer", "")
+    d["name"] = d.get("name", "")
+    if len(d) != 7:  # stored payload carried extra top-level keys
+        d = {k: d[k] for k in ("attributes", "entity_type", "extra_data",
+                               "geometries", "handle", "layer", "name")}
+    return d
+
+
 def _rebuild_arrow_batches(batches):
     """mapInArrow rebuild: doc_id/span_offset pass through untouched as
     Arrow arrays; data_json is parsed from BYTES (zero-copy binary view
-    of the string column — no utf-8 → str decode), extra_data is
-    filtered IN PLACE (orjson preserves the stored canonical key order,
-    and OPT_SORT_KEYS re-canonicalizes the rebuilt extra_data), and the
-    output string column is assembled straight from the serialized
-    bytes via Array.from_buffers — no pandas block, no per-row str."""
+    of the string column — no utf-8 → str decode), cut by _rt_payload,
+    and the output string column is assembled straight from the
+    serialized bytes via Array.from_buffers — no pandas block, no
+    per-row str."""
+    import numpy as np
     import pyarrow as pa
 
+    loads, dumps = orjson.loads, orjson.dumps
+    opt = orjson.OPT_SORT_KEYS
     for batch in batches:
         n = batch.num_rows
         if n == 0:
             continue
         idx = batch.schema.get_field_index
         djs = batch.column(idx("data_json")).cast(pa.binary()).to_pylist()
-        outs: list[bytes] = []
-        append = outs.append
-        loads, dumps = _orjson.loads, _orjson.dumps
-        opt = _orjson.OPT_SORT_KEYS
-        for dj in djs:
-            d = loads(dj)
-            extra = d.get("extra_data", {}) or {}
-            d["attributes"] = d.get("attributes", {}) or {}
-            d["entity_type"] = d.get("entity_type", "")
-            d["extra_data"] = {k: extra[k] for k in RT_EXTRA_KEYS
-                               if k in extra}
-            d["geometries"] = d.get("geometries", {}) or {}
-            d["handle"] = d.get("handle", "")
-            d["layer"] = d.get("layer", "")
-            d["name"] = d.get("name", "")
-            if len(d) != 7:  # stored payload carried extra top-level keys
-                d = {k: d[k] for k in ("attributes", "entity_type",
-                                       "extra_data", "geometries",
-                                       "handle", "layer", "name")}
-            append(dumps(d, option=opt))
-        # rows whose orjson rendering has a float-risk pattern re-dump via
-        # stdlib json — the canonical format (same rule as
-        # _canonical_dumps_fast, batched; risk is already established, so
-        # go straight to the stdlib serializer instead of retrying orjson)
+        outs = [dumps(_rt_payload(loads(dj)), option=opt) for dj in djs]
+        # rows whose orjson rendering has a float-risk pattern re-dump
+        # through the canonical stdlib serializer. They are parsed again
+        # rather than kept: holding every row's dict until the scan makes
+        # the cyclic GC re-traverse them (measured +50 % on this loop
+        # over 12 740 stored rows).
         for i in _risky_rows(outs, n):
-            d = loads(djs[i])
-            extra = d.get("extra_data", {}) or {}
-            outs[i] = json.dumps({
-                "attributes": d.get("attributes", {}) or {},
-                "entity_type": d.get("entity_type", ""),
-                "extra_data": {k: extra[k] for k in RT_EXTRA_KEYS
-                               if k in extra},
-                "geometries": d.get("geometries", {}) or {},
-                "handle": d.get("handle", ""),
-                "layer": d.get("layer", ""),
-                "name": d.get("name", ""),
-            }, ensure_ascii=False, sort_keys=True,
-                separators=(",", ":")).encode()
-        import numpy as np
-
+            outs[i] = canonical_dumps(_rt_payload(loads(djs[i]))).encode()
         refs = bytes_string_array(outs)
         # deep-copy the passthrough columns (take allocates fresh
         # buffers): the output batch must not reference the input
@@ -219,24 +171,12 @@ def _rebuild_arrow_batches(batches):
             names=["doc_id", "span_offset", "media_ref"])
 
 
-def _rebuild_batches(batches):
-    for pdf in batches:
-        refs = [_rebuild_one(dj) for dj in pdf["data_json"].tolist()]
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"], "span_offset": pdf["span_offset"], "media_ref": refs})
-
-
 def rebuild_media_refs(entities: DataFrame) -> DataFrame:
     """entities → (doc_id, span_offset, media_ref) with the media_ref
-    payload re-serialized canonically from the stored data_json.
-
-    Arrow-native by default (see _rebuild_arrow_batches); the pandas twin
-    is kept for A/B equality testing, and is the only path when orjson is
-    unavailable (the batched fast path IS the orjson fast path)."""
-    src = entities.select("doc_id", "span_offset", "data_json")
-    if _orjson is None:  # pragma: no cover
-        return src.mapInPandas(_rebuild_batches, schema=_REF_SCHEMA)
-    return src.mapInArrow(_rebuild_arrow_batches, schema=_REF_SCHEMA)
+    payload re-serialized canonically from the stored data_json, in one
+    Arrow-batched stage (see _rebuild_arrow_batches)."""
+    return entities.select("doc_id", "span_offset", "data_json").mapInArrow(
+        _rebuild_arrow_batches, schema=_REF_SCHEMA)
 
 
 def reconstruct_documents(entities: DataFrame, texts: DataFrame) -> DataFrame:

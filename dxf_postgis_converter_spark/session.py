@@ -46,8 +46,7 @@ def get_spark(
         # scans at local[32] OOM the JVM (observed r6: sf0.4 contamination
         # stage, three concurrent documents scans). 512 rows ≈ tens of MB
         # per task on blob columns, unnoticeable on narrow ones.
-        .config("spark.sql.parquet.columnarReaderBatchSize",
-                os.environ.get("SPARK_GRAFT_READER_BATCH", "512"))
+        .config("spark.sql.parquet.columnarReaderBatchSize", "512")
         # 32m, not the stock 128m: scan partitions feed Arrow→Python
         # stages, so a stage needs ≥3-4 waves of tasks per core for
         # straggler smoothing. Spark's split formula (totalBytes /

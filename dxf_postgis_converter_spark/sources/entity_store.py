@@ -52,9 +52,7 @@ DEFAULT_PREFIX_RES = 3  # 8x8 grid → at most 64 + 1 partitions
 # 26s (zstd, contended) / ~8.5s (zstd, quiet) for the sf0.1 decode write
 # at +33% size — write throughput beats storage for short-lived tables.
 # Final/exported tables keep the session-level zstd default (session.py).
-import os as _os
-
-INTERMEDIATE_CODEC = _os.environ.get("SPARK_GRAFT_INTERMEDIATE_CODEC", "lz4")
+INTERMEDIATE_CODEC = "lz4"
 
 
 @dataclass

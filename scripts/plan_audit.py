@@ -124,8 +124,10 @@ def main() -> int:
     all_ok &= audit(
         sections, "insert_expand (entities parquet → virtual entities)",
         expand_inserts(spark.read.parquet(epq)),
-        [("exactly ONE Arrow-batched Python crossing (MapInPandas)",
-          lambda p: p["simple"].count("MapInPandas") == 1),
+        [("exactly ONE Arrow-batched Python crossing (MapInArrow), "
+          "zero MapInPandas",
+          lambda p: p["simple"].count("MapInArrow") == 1
+          and "MapInPandas" not in p["simple"]),
          ("narrow plan — ZERO exchanges scan→virtual entities",
           lambda p: "Exchange" not in p["simple"]),
          ("entity_type = INSERT pushed to the parquet scan",

@@ -226,36 +226,6 @@ def test_decode_documents_matches_convert_entity(docs_df):
     assert sorted(got_rows, key=repr) == sorted(exp, key=repr)
 
 
-def test_no_orjson_fallback_importable_and_equivalent():
-    """ADVICE r2 (high): the no-orjson branch must bind _loads to
-    json.loads, not reference itself. Re-import the module with orjson
-    masked and check _dumps/_loads round-trip matches the fast path."""
-    import importlib
-    import sys
-
-    import dxf_postgis_converter_spark.functions.decode as dec
-
-    payload = mk("CIRCLE", {"center": [1, 2, 0], "radius": 3.5})
-    fast = dec.convert_entity(payload)
-
-    saved = {k: sys.modules.pop(k) for k in list(sys.modules)
-             if k == "orjson" or k == dec.__name__}
-    sys.modules["orjson"] = None  # import orjson raises ImportError
-    try:
-        slow_mod = importlib.import_module(dec.__name__)
-        assert slow_mod._orjson is None
-        assert slow_mod._loads is json.loads
-        slow = slow_mod.convert_entity(payload)
-        assert slow["geometry_wkb"] == fast["geometry_wkb"]
-        assert json.loads(slow["data_json"]) == json.loads(fast["data_json"])
-        assert slow_mod._loads(slow_mod._dumps({"a": [1, 2.5]})) == {"a": [1, 2.5]}
-    finally:
-        sys.modules.pop("orjson", None)
-        sys.modules.pop(dec.__name__, None)
-        sys.modules.update(saved)
-        importlib.import_module(dec.__name__)
-
-
 def test_null_media_ref_is_an_error_row(spark):
     """A null media_ref becomes one error row (null media_ref out); it
     must not fail the Arrow batch or disturb the document's other rows."""

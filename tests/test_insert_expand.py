@@ -165,7 +165,7 @@ def test_max_depth_bounds_expansion():
 
 def test_expand_inserts_spark_no_shuffle(spark):
     """The Spark wrapper: INSERT rows expand, non-INSERT rows are
-    ignored, and the plan has no Exchange (single mapInPandas stage)."""
+    ignored, and the plan has no Exchange (single mapInArrow stage)."""
     pay = _payload([
         _be("LINE", {"start": [0.0, 0.0, 0.0], "end": [1.0, 0.0, 0.0]}),
         _be("POINT", {"location": [2.0, 2.0, 0.0]}),
@@ -181,6 +181,7 @@ def test_expand_inserts_spark_no_shuffle(spark):
     out = expand_inserts(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
     got = out.collect()
     assert len(got) == 2 and {r.insert_handle for r in got} == {"A1"}
     line = [r for r in got if r.entity_type == "LINE"][0]
@@ -348,12 +349,15 @@ def test_expand_inserts_streaming_twin(spark, docs_df, tmp_path_factory):
 
 def test_corrupt_data_json_yields_error_record(spark):
     """A corrupt INSERT payload must surface as an ERROR row (decode's
-    no-silent-drops contract), never as a vanished insert."""
+    no-silent-drops contract), never as a vanished insert. A NULL
+    span_offset still expands (NULL offset out); a NULL data_json yields
+    nothing (decode already reported that row)."""
+    good = json.dumps(_payload([_be("POINT", {"location": [0.0, 0.0, 0.0]})]))
     rows = [
         ("d1", 0, "A1", "{not json", "INSERT"),
-        ("d1", 1, "A2",
-         json.dumps(_payload(
-             [_be("POINT", {"location": [0.0, 0.0, 0.0]})])), "INSERT"),
+        ("d1", 1, "A2", good, "INSERT"),
+        ("d1", None, "A3", good, "INSERT"),
+        ("d1", 3, "A4", None, "INSERT"),
     ]
     df = spark.createDataFrame(
         rows, "doc_id string, span_offset int, handle string, "
@@ -361,3 +365,6 @@ def test_corrupt_data_json_yields_error_record(spark):
     got = {r.insert_handle: r for r in expand_inserts(df).collect()}
     assert "unparseable" in got["A1"].error and got["A1"].geometry_wkb is None
     assert got["A2"].error is None and got["A2"].entity_type == "POINT"
+    assert got["A3"].error is None and got["A3"].span_offset is None
+    assert got["A3"].entity_type == "POINT"
+    assert set(got) == {"A1", "A2", "A3"}

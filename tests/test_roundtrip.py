@@ -97,23 +97,37 @@ def test_save_selected_by_handles(spark, docs):
     assert bad.count() == 0
 
 
-def test_rebuild_arrow_matches_pandas_twin(spark, docs):
-    """r8 optimization pin: the Arrow-native rebuild (batched float-risk
-    scan, in-place extra_data filter, from_buffers output) is row-for-row
-    byte-identical to the per-row _rebuild_one twin — including rows that
-    trip the float-risk fallback to stdlib json."""
+def test_rebuild_matches_canonical_media_ref(spark, docs):
+    """Golden: the Arrow rebuild (batched float-risk scan, in-place
+    extra_data filter, from_buffers output) equals corpus
+    canonical_media_ref of each stored payload with extra_data cut to
+    RT_EXTRA_KEYS — including rows that trip the float-risk fallback to
+    the stdlib serializer — and the batched risk scan equals the
+    _FLOAT_RISK regex row by row."""
+    import json
+
+    import orjson
+    import pyarrow as pa
+
+    from dxf_postgis_converter_spark.corpus import canonical_media_ref
     from dxf_postgis_converter_spark.operators import reconstruct as rc
-    from dxf_postgis_converter_spark.functions.decode import decode_documents
+
+    def golden(dj):
+        d = json.loads(dj)
+        extra = d["extra_data"]
+        return canonical_media_ref(
+            d["entity_type"], d["name"], d["handle"], d["layer"],
+            d["attributes"], d["geometries"],
+            {k: extra[k] for k in rc.RT_EXTRA_KEYS if k in extra})
 
     ents = decode_documents(docs).select("doc_id", "span_offset", "data_json")
     via_arrow = {(r.doc_id, r.span_offset): r.media_ref
                  for r in rc.rebuild_media_refs(ents).collect()}
-    via_rows = {(r.doc_id, r.span_offset): rc._rebuild_one(r.data_json)
-                for r in ents.collect()}
-    assert via_arrow == via_rows
+    stored = ents.collect()
+    assert via_arrow == {(r.doc_id, r.span_offset): golden(r.data_json)
+                         for r in stored}
     # synthetic risky payloads: exponent-notation and sub-1e-4 floats must
-    # take the stdlib path in BOTH twins (byte-identical canonical form)
-    import json as _json
+    # come out in the stdlib canonical form
     risky = [
         {"attributes": {}, "entity_type": "POINT",
          "extra_data": {"dxftype": "POINT", "v": 1e30},
@@ -123,13 +137,24 @@ def test_rebuild_arrow_matches_pandas_twin(spark, docs):
          "extra_data": {}, "geometries": {}, "handle": "a2", "layer": "L",
          "name": "x"},
     ]
-    djs = [_json.dumps(p, ensure_ascii=False, sort_keys=True,
-                       separators=(",", ":")) for p in risky]
-    import pyarrow as pa
+    djs = [json.dumps(p, ensure_ascii=False, sort_keys=True,
+                      separators=(",", ":")) for p in risky]
     batch = pa.RecordBatch.from_arrays(
         [pa.array(["d"] * len(djs)), pa.array(range(len(djs)), pa.int32()),
          pa.array(djs)], names=["doc_id", "span_offset", "data_json"])
     out = list(rc._rebuild_arrow_batches([batch]))[0].column(2).to_pylist()
-    assert out == [rc._rebuild_one(dj) for dj in djs]
+    assert out == [golden(dj) for dj in djs]
     assert "1e-07" in out[0]          # stdlib exponent form, not orjson's
     assert "1.234e-05" in out[1]
+    # the vectorized scan against its reference regex over a batch of
+    # serialized rows: the stored corpus, the risky payloads and
+    # near-misses around each pattern
+    outs = [r.data_json.encode() for r in stored]
+    outs += [orjson.dumps(p, option=orjson.OPT_SORT_KEYS) for p in risky]
+    outs += [b'{"a":1e5}', b'{"a":2E-3}', b'{"a":3e+1}', b'{"a":0.00001}',
+             b'{"e":"e+1"}', b'{"x1e":"-"}', b'{"a":0.0001}', b'{"E":1}',
+             b'{"s":"9e"}', b'{"s":"e9"}', b'{"a":10.000}', b'{}']
+    n = len(outs)
+    assert rc._risky_rows(outs, n) == {
+        i for i, o in enumerate(outs) if rc._FLOAT_RISK.search(o)}
+    assert 0 < len(rc._risky_rows(outs, n)) < n
