@@ -536,6 +536,7 @@ def _decode_arrow_batches(batches, emit_media_ref: bool = True):
     pa_schema = to_arrow_schema(
         ENTITY_SCHEMA if emit_media_ref else ENTITY_SCHEMA_NOREF)
     loads = orjson.loads
+    unknown = _convert_entity_rec({"entity_type": "UNKNOWN"})
     for batch in batches:
         n = batch.num_rows
         if n == 0:
@@ -554,10 +555,11 @@ def _decode_arrow_batches(batches, emit_media_ref: bool = True):
         append = recs.append
         for i in range(n):
             try:
-                payload = loads(refs[i])
-            except (TypeError, ValueError):
-                payload = {"entity_type": "UNKNOWN"}
-            append(_convert_entity_rec(payload))
+                append(_convert_entity_rec(loads(refs[i])))
+            except (AttributeError, TypeError, ValueError):
+                # NULL, unparseable or not a JSON object: an UNKNOWN
+                # error row, never a failed batch
+                append(unknown)
         cols = dict(zip(_REC_COLS, zip(*recs)))
         arrays = [pa.array(doc_ids, pa.string()),
                   pa.array(offsets, pa.int32())]

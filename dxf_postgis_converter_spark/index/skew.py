@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from .grid import cell_col, cell_res
 
 DEFAULT_CAP = 100_000
@@ -52,12 +53,12 @@ def adaptive_cell_index(
     """
     out = df.withColumn("cell", cell_col(F.col(x_col), F.col(y_col), base_res))
     for res in range(base_res + 1, max_res + 1):
-        # truncate lineage each round: the plan otherwise doubles per
-        # iteration (cold ∪ resplit both reference the previous round's
-        # whole tree) and blows up the driver. On a real cluster each
-        # round would instead land in the stage's checkpoint table
-        # (plans/lineage.py run_stage) — same truncation, durable.
-        out = out.localCheckpoint(eager=True)
+        # truncate lineage each round (hot_cells' aggregate materializes
+        # it): the plan otherwise doubles per iteration (cold ∪ resplit
+        # both reference the previous round's whole tree) and blows up the
+        # driver. On a real cluster each round would land in the stage's
+        # checkpoint table (plans/lineage.py run_stage): same cut, durable.
+        out = materialize(out)
         hot = hot_cells(out, cap=cap).select("cell")
         if hot.isEmpty():
             break

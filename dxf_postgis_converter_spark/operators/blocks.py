@@ -13,13 +13,15 @@ self-join loop ... not expressible as a single plan").
 Scale notes: the frontier shrinks monotonically (visited set filters),
 each round is one equi-join; block-definition tables are small relative
 to entities (thousands of blocks vs 10^12 entities) so edges broadcast.
-Lineage is truncated per round like index/skew.py.
+Lineage is truncated per round by session.materialize, like skew.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import materialize
 
 
 def insert_roots(entities: DataFrame) -> DataFrame:
@@ -44,7 +46,7 @@ def block_closure(roots: DataFrame, edges: DataFrame, max_depth: int = 32) -> Da
     pathological inputs, mirroring the recursion depth limit).
     """
     edges = F.broadcast(edges.select("parent", "child").distinct())
-    visited = roots.select("doc_id", "block").distinct().localCheckpoint(eager=True)
+    visited = materialize(roots.select("doc_id", "block").distinct())
     frontier = visited
     for _ in range(max_depth):
         children = (
@@ -52,11 +54,10 @@ def block_closure(roots: DataFrame, edges: DataFrame, max_depth: int = 32) -> Da
             .select("doc_id", F.col("child").alias("block"))
             .distinct()
         )
-        new = children.join(visited, ["doc_id", "block"], "left_anti") \
-            .localCheckpoint(eager=True)
+        new = materialize(children.join(visited, ["doc_id", "block"], "left_anti"))
         if new.isEmpty():
             break
-        visited = visited.unionByName(new).localCheckpoint(eager=True)
+        visited = materialize(visited.unionByName(new))
         frontier = new
     return visited
 

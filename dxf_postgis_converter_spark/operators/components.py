@@ -23,17 +23,19 @@ cross-validation twin for tests.
 
 Scale shape per round: two groupBy-min + two joins, all keyed on node
 id, map-side combinable; the edge set shrinks monotonically toward one
-edge per non-center node. Each round's edges are localCheckpoint'ed so
-the logical plan stays flat (driver-OOM guard, same as index/skew.py's
-adaptive split loop). Convergence detection is a single (count,
-xor-of-hashes) aggregate per round — O(1) driver data, no extra
-shuffle of the full edge set.
+edge per non-center node. Each round's edges go through
+session.materialize so the logical plan stays flat (driver-OOM guard, as
+in index/skew.py). Convergence detection is a single (count,
+xor-of-hashes) aggregate per round, which also materializes the round —
+O(1) driver data, no extra shuffle of the full edge set.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import materialize
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -80,17 +82,15 @@ def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
     minimum node id reachable from `id` (a canonical, join-stable group
     key). Nodes = every endpoint appearing in edges (self-loops allowed:
     the node labels itself)."""
-    nodes = (edges.select(F.col(src).alias("id"))
-             .unionByName(edges.select(F.col(dst).alias("id")))
-             .distinct()
-             .localCheckpoint())
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col("u") != F.col("v"))
-         .distinct()
-         .localCheckpoint())
+    nodes = materialize(edges.select(F.col(src).alias("id"))
+                        .unionByName(edges.select(F.col(dst).alias("id")))
+                        .distinct())
+    e = materialize(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+                    .filter(F.col("u") != F.col("v"))
+                    .distinct())
     fp = _edge_fingerprint(e)
     for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint()
+        e = materialize(_small_star(_large_star(e)))
         new_fp = _edge_fingerprint(e)
         if new_fp == fp:
             break
@@ -108,20 +108,16 @@ def _label_propagation(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
     an independent cross-validation twin for the star-contraction path."""
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     sym = e.unionByName(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    labels = (sym.select(F.col("s").alias("id")).distinct()
-              .withColumn("component", F.col("id"))
-              .localCheckpoint())
+    labels = materialize(sym.select(F.col("s").alias("id")).distinct()
+                         .withColumn("component", F.col("id")))
     for _ in range(max_iter):
         nb = (sym.join(labels.withColumnRenamed("id", "d_id"),
                        sym.d == F.col("d_id"))
               .groupBy(F.col("s").alias("id"))
               .agg(F.min("component").alias("nb_component")))
-        new = (labels.join(nb, "id", "left")
-               .select("id",
-                       F.least(F.col("component"),
-                               F.coalesce("nb_component", "component"))
-                       .alias("component"))
-               .localCheckpoint())
+        new = materialize(labels.join(nb, "id", "left").select(
+            "id", F.least(F.col("component"), F.coalesce("nb_component", "component"))
+            .alias("component")))
         changed = (new.alias("n").join(labels.alias("o"), "id")
                    .filter(F.col("n.component") != F.col("o.component"))
                    .limit(1).count())

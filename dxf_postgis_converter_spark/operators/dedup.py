@@ -4,12 +4,12 @@ exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
 Scale design:
 - exact dedup is a hash-groupBy — one shuffle on a 32-char key, map-side
   combine free via aggregation.
-- MinHash/LSH: signatures are computed in ONE Arrow-batched pandas stage
-  (numpy matrix of k hash functions over shingle sets); banding turns
-  near-dup search into an equi-join on (band_id, band_hash) — the classic
-  shuffle-friendly formulation. Candidate pairs are verified with exact
-  Jaccard; pair generation uses a self-join per bucket, with oversized
-  buckets capped (logged) to bound the quadratic corner.
+- MinHash/LSH: signatures are all JVM (xxhash64 over word shingles,
+  min-aggregated per doc); banding turns near-dup search into an
+  equi-join on (band_id, band_hash) — the classic shuffle-friendly
+  formulation. Candidate pairs are verified with exact Jaccard; pair
+  generation uses a self-join per bucket, and buckets above max_bucket
+  are dropped to bound the quadratic corner.
 - SimHash: 64-bit signature, hamming ≤ d via 4-block pigeonhole join.
 - embedding near-dup: random-hyperplane LSH buckets + exact cosine verify.
 """
@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import fingerprint, normalize_text
+from ..session import materialize
 
 _LOG = logging.getLogger(__name__)
 
@@ -142,14 +143,12 @@ def minhash_lsh_pairs(
     want = docs.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < want:
         src = src.repartition(want, F.col(id_col))
-    # lazy checkpoint: the gram arrays feed the signature aggregate AND
-    # both sides of the verify join — without the barrier the shingle
-    # expressions re-execute once per consumer (3× total; guide §3.3
-    # "materialise an intermediate"). Lazy, so the first downstream
-    # action materializes it exactly once.
-    base = src.select(F.col(id_col),
-                      word_shingles(F.col(text_col), shingle_n).alias("_grams")) \
-        .localCheckpoint(eager=False)
+    # barrier: the gram arrays feed the signature aggregate AND both
+    # sides of the verify join — without it the shingle expressions
+    # re-execute once per consumer (3× total; guide §3.3 "materialise an
+    # intermediate")
+    base = materialize(src.select(
+        F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("_grams")))
     # signatures via explode + hash-aggregate: one physical sig row per doc
     # (map-side partial min makes the shuffle one 64-long row per doc).
     # This materialization barrier matters: a pure-expression sig column
@@ -160,16 +159,16 @@ def minhash_lsh_pairs(
     # integer hashes instead of 64 string hashes per gram.
     eg = base.select(id_col, F.explode("_grams").alias("_g")) \
         .select(id_col, F.xxhash64("_g").alias("_gh"))
-    sig = (eg.groupBy(id_col)
-           .agg(*[F.min(F.xxhash64(F.lit(k), "_gh")).alias(f"_h{k}")
-                  for k in range(num_hashes)])
-           .select(F.col(id_col), F.array(*[f"_h{k}" for k in range(num_hashes)]).alias("sig"))
-           # one row per doc; checkpointed BEFORE the band explode so the
-           # cache holds each sig once, not bands× — the hot-bucket count,
-           # the a-side and the b-side all re-derive their (cheap) band
-           # columns from this one materialization instead of re-running
-           # the whole shingle→explode→hash→aggregate tower per consumer
-           .localCheckpoint(eager=False))
+    # one row per doc; materialized BEFORE the band explode so it holds
+    # each sig once, not bands× — the hot-bucket count, the a-side and
+    # the b-side all re-derive their (cheap) band columns from this one
+    # materialization instead of re-running the whole
+    # shingle→explode→hash→aggregate tower per consumer
+    sig = materialize(
+        eg.groupBy(id_col)
+        .agg(*[F.min(F.xxhash64(F.lit(k), "_gh")).alias(f"_h{k}")
+               for k in range(num_hashes)])
+        .select(F.col(id_col), F.array(*[f"_h{k}" for k in range(num_hashes)]).alias("sig")))
     sig = sig.withColumn("_band", F.explode(F.sequence(F.lit(0), F.lit(bands - 1))))
     sig = sig.withColumn("_bhash", F.xxhash64(F.slice(F.col("sig"), F.col("_band") * r + 1, r)))
     buckets = sig.select(id_col, "sig", "_band", "_bhash")
@@ -222,15 +221,13 @@ def ngram_jaccard_pairs(
     want = docs.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < want:  # small-file scan: see minhash note
         src = src.repartition(want, F.col(id_col))
-    # lazy checkpoints (same rationale as minhash_lsh_pairs): the gram
-    # arrays are consumed by the inverted index AND both verify sides,
-    # and the exploded index by the stop-gram count AND both candidate
-    # sides — barriers make each tower execute once
-    base = src.select(F.col(id_col),
-                      word_shingles(F.col(text_col), shingle_n).alias("_grams")) \
-        .localCheckpoint(eager=False)
-    e = base.select(id_col, F.explode("_grams").alias("_g")) \
-        .localCheckpoint(eager=False)
+    # barriers (same rationale as minhash_lsh_pairs): the gram arrays
+    # are consumed by the inverted index AND both verify sides, and the
+    # exploded index by the stop-gram count AND both candidate sides —
+    # barriers make each tower execute once
+    base = materialize(src.select(
+        F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("_grams")))
+    e = materialize(base.select(id_col, F.explode("_grams").alias("_g")))
     df_cap = e.groupBy("_g").count().filter(F.col("count") > max_gram_df).drop("count")
     e = e.join(F.broadcast(df_cap), "_g", "left_anti")
     a = e.select(F.col(id_col).alias("id_a"), "_g")
@@ -271,11 +268,10 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
                   max_hamming: int = 3, shingle_n: int = 4) -> DataFrame:
     """Pairs with hamming(simhash) ≤ max_hamming via 4-block pigeonhole:
     any pair within distance 3 shares at least one exact 16-bit block."""
-    # lazy checkpoint: the signature stage is a Python (mapInPandas) pass —
-    # without the barrier it executes once per self-join side (2× the
-    # whole Python boundary; guide §4)
-    s = simhash_signatures(docs, id_col, text_col, shingle_n) \
-        .localCheckpoint(eager=False)
+    # barrier: the signature stage is a Python (mapInPandas) pass —
+    # without it it executes once per self-join side (2× the whole
+    # Python boundary; guide §4)
+    s = materialize(simhash_signatures(docs, id_col, text_col, shingle_n))
     block_vals = F.array(*[
         F.shiftright(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF)) for i in range(4)])
     blocks = s.select(id_col, "simhash", F.posexplode(block_vals).alias("_blk", "_bval"))
@@ -345,14 +341,13 @@ def embedding_neardup_pairs(
             F.sequence(F.lit(0), F.lit(n_bands - 1)),
             lambda b: F.array_join(F.slice(bits, b * n_planes + F.lit(1),
                                            n_planes), ""))
-        # lazy checkpoint: the b·r hyperplane dot products per vector are
-        # the expensive tower here, and es is consumed by the bucket-size
+        # barrier: the b·r hyperplane dot products per vector are the
+        # expensive tower here, and es is consumed by the bucket-size
         # count, the hot semi-join, the rep aggregate and both candidate
         # sides — the barrier runs the tower once (rows are only
-        # (id, band, sig) — the vectors themselves are NOT cached)
-        es = e.select(F.col(id_col),
-                      F.posexplode(band_sigs).alias("_band", "_sig")) \
-            .localCheckpoint(eager=False)
+        # (id, band, sig) — the vectors themselves are NOT stored)
+        es = materialize(e.select(
+            F.col(id_col), F.posexplode(band_sigs).alias("_band", "_sig")))
         sizes = es.groupBy("_band", "_sig").count()
         hot = sizes.filter(F.col("count") > max_bucket).drop("count")
         cold = es.join(F.broadcast(hot), ["_band", "_sig"], "left_anti")

@@ -241,7 +241,7 @@ def _expand_batches(batches, max_depth: int):
             if dj is None:
                 continue  # decode already reported this row's error
             try:
-                payload = orjson.loads(dj)
+                recs = expand_payload(orjson.loads(dj), max_depth=max_depth)
             except Exception as e:
                 # same no-silent-drops contract as decode: a corrupt
                 # payload yields an ERROR record, not a vanished insert
@@ -250,7 +250,7 @@ def _expand_batches(batches, max_depth: int):
                              f"INSERT payload unparseable: "
                              f"{type(e).__name__}: {e}"))
                 continue
-            for rec in expand_payload(payload, max_depth=max_depth):
+            for rec in recs:
                 rows.append((doc_id, off, handle) + rec)
         if rows:
             yield pa.RecordBatch.from_arrays(

@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 from ..index.grid import (
     EXTENT, cell_col, cell_ix, cell_iy, k_ring_col, _IX_SHIFT, _RES_SHIFT,
 )
+from ..session import materialize
 
 # levels the most recent knn_join selected, as [("oneshot", sorted
 # levels)] — an introspection hook for tests
@@ -91,17 +92,17 @@ def knn_join(
     counts the pyramid starts from (module doc). With fewer than k
     targets in total every probe is absent from the result.
 
-    Spark shape: 2 internal barriers (the target count; the
-    level-selection materialization) plus the eager checkpoint of the
-    result, whatever the input's size or density.
+    Spark shape: 2 internal actions (the target count; the per-level
+    selection count), whatever the input's size or density. The result
+    is materialized lazily: the caller's first action runs the join.
     """
     spark = probes.sparkSession
-    t = targets.select(
+    t = materialize(targets.select(
         F.col(target_id_col),
         F.col(x_col).alias("t_x"),
         F.col(y_col).alias("t_y"),
-    ).persist()
-    # density probe (ONE action, which also materializes the cache):
+    ))
+    # density probe (ONE action, which also materializes t):
     # exact per-res-cell counts. Everything scheduled from here is driver
     # arithmetic over ≤4^res dict entries — at cluster scale this is the
     # query you'd answer from catalog statistics. Counts are split by
@@ -116,7 +117,6 @@ def knn_join(
     n_targets = sum(r["n"] for r in counts0)
     global _LAST_SCHEDULE
     if n_targets < k:
-        t.unpersist()
         _LAST_SCHEDULE = [("oneshot", [])]
         return spark.createDataFrame(
             [], schema=f"{probe_id_col} string, {target_id_col} string, "
@@ -263,34 +263,32 @@ def knn_join(
         F.array(cell_col(F.col("p_x"), F.col("p_y"), floor_lvl)))
     anc = p1.select(
         probe_id_col, "p_x", "p_y", F.explode(anc_cells).alias("cell"))
-    # lazy checkpoint + the per-level count as its materializing action:
-    # one job computes the counts pyramid + selection, truncates their
-    # lineage, and returns the level set the join below needs
-    sel = (anc.join(cnt3, "cell", "inner")
-           .filter(F.col("n3") >= k)
-           .groupBy(probe_id_col, "p_x", "p_y")
-           .agg(F.max("cell").alias("p_cell"))
-           .withColumn("lvl", (F.col("p_cell")
-                               / F.lit(1 << _RES_SHIFT)).cast("int"))
-           # AQE coalesces the selection aggregate to a handful of
-           # partitions; the ring explode below does ~49× the rows of
-           # its input per task, so spread the checkpoint blocks wide
-           # enough for every core to get several waves
-           .repartition(par * 4)
-           .localCheckpoint(eager=False))
+    # the per-level count is sel's materializing action: one job computes
+    # the counts pyramid + selection, truncates their lineage, and
+    # returns the level set the join below needs
+    sel = materialize(anc.join(cnt3, "cell", "inner")
+                     .filter(F.col("n3") >= k)
+                     .groupBy(probe_id_col, "p_x", "p_y")
+                     .agg(F.max("cell").alias("p_cell"))
+                     .withColumn("lvl", (F.col("p_cell") / F.lit(
+                         1 << _RES_SHIFT)).cast("int"))
+                     # AQE coalesces the selection aggregate to a handful
+                     # of partitions; the ring explode below does ~49× the
+                     # rows of its input per task, so spread the blocks
+                     # wide enough for every core to get several waves
+                     .repartition(par * 4))
     by_lvl = {r["lvl"]: r["n"] for r in
               sel.groupBy("lvl").agg(F.count(F.lit(1)).alias("n")).collect()}
     used = sorted(by_lvl)
     _LAST_SCHEDULE = [("oneshot", used)]
     if not used:  # pragma: no cover — unreachable once n_targets ≥ k
-        t.unpersist()
         return spark.createDataFrame(
             [], schema=f"{probe_id_col} string, {target_id_col} string, "
                        "dist double, rank int")
 
     # 4. single candidate join: probe ring-3 cells vs targets keyed at
-    #    each USED level (union of narrow per-level projections of the
-    #    cached table — one broadcast build in total). Fine branches keep
+    #    each USED level (union of narrow per-level projections of t —
+    #    one broadcast build in total). Fine branches keep
     #    only targets whose dilated res-neighborhood justifies that level;
     #    the driver knows each branch's row count exactly from the
     #    density probe, so the join-side decision needs no estimate.
@@ -348,7 +346,7 @@ def knn_join(
         ring = ring.filter(
             at_floor | (gap_x * gap_x + gap_y * gap_y <= safe * safe))
         # join side from exact driver-side counts: broadcast the exploded
-        # probe ring when small (streams the cached target branches
+        # probe ring when small (streams the materialized target branches
         # map-side with no shuffle at all), else broadcast the
         # level-exploded target side when it fits (≲50 MB keyed), else
         # shuffle both on cell — the standard path at cluster scale
@@ -373,13 +371,6 @@ def knn_join(
              if b is not None]
     cand = reduce(DataFrame.unionByName, parts)
     w = Window.partitionBy(probe_id_col).orderBy(F.col("dist"), F.col(target_id_col))
-    out = (cand.withColumn("rank", F.row_number().over(w))
-           .filter(F.col("rank") <= k)
-           .select(probe_id_col, target_id_col, "dist", "rank")
-           .localCheckpoint())
-    # the EAGER checkpoint is the join's one heavy job; with the result
-    # materialized and its lineage truncated, the target cache has no
-    # remaining consumer (sel's checkpoint blocks are freed when the
-    # DataFrame is garbage-collected)
-    t.unpersist()
-    return out
+    return materialize(cand.withColumn("rank", F.row_number().over(w))
+                       .filter(F.col("rank") <= k)
+                       .select(probe_id_col, target_id_col, "dist", "rank"))

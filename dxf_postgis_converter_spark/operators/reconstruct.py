@@ -72,10 +72,11 @@ def _risky_rows(outs: list, n_rows: int) -> set[int]:
     11 µs/row over 615-byte rows). Cross-row false positives are
     impossible: every row starts '{' and ends '}', so neither pattern
     can span a boundary. A false positive would only cost the stdlib
-    re-dump on that row; the masks below match the regex exactly."""
+    re-dump on that row; the masks below match the regex exactly. A None
+    row (an unparseable payload) is never returned."""
     import numpy as np
 
-    buf = b"".join(outs)
+    buf = b"".join(filter(None, outs))
     a = np.frombuffer(buf, dtype=np.uint8)
     if len(a) < 3:
         return set()
@@ -110,7 +111,7 @@ def _risky_rows(outs: list, n_rows: int) -> set[int]:
     if pos.size == 0:
         return set()
     offs = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum([len(o) for o in outs], out=offs[1:])
+    np.cumsum([len(o) if o else 0 for o in outs], out=offs[1:])
     return set(np.unique(np.searchsorted(offs, pos, side="right") - 1).tolist())
 
 
@@ -139,7 +140,8 @@ def _rebuild_arrow_batches(batches):
     of the string column — no utf-8 → str decode), cut by _rt_payload,
     and the output string column is assembled straight from the
     serialized bytes via Array.from_buffers — no pandas block, no
-    per-row str."""
+    per-row str. A NULL, unparseable or non-object data_json yields a
+    NULL media_ref, so span_mismatches reports its document."""
     import numpy as np
     import pyarrow as pa
 
@@ -151,7 +153,12 @@ def _rebuild_arrow_batches(batches):
             continue
         idx = batch.schema.get_field_index
         djs = batch.column(idx("data_json")).cast(pa.binary()).to_pylist()
-        outs = [dumps(_rt_payload(loads(dj)), option=opt) for dj in djs]
+        outs = []
+        for dj in djs:
+            try:
+                outs.append(dumps(_rt_payload(loads(dj)), option=opt))
+            except (AttributeError, TypeError, ValueError):
+                outs.append(None)
         # rows whose orjson rendering has a float-risk pattern re-dump
         # through the canonical stdlib serializer. They are parsed again
         # rather than kept: holding every row's dict until the scan makes

@@ -33,11 +33,13 @@ Scale notes:
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..geometry.wkb import parse_wkb
+from ..geometry.wkb import MULTIPOLYGON_Z, POLYGON_Z, parse_wkb
 from ..index.grid import cell_col, covers_col
 
 DEFAULT_RES = 6  # cell = 128 world units; zone covers stay small
@@ -69,9 +71,21 @@ def _ring_edges(ring: np.ndarray) -> np.ndarray:
     return np.hstack([ring, np.roll(ring, -1, axis=0)])
 
 
+def _polygon_parts(wkb) -> list | None:
+    """The polygon parts (each a list of rings) of a zone's WKB, or None
+    when it is NULL, truncated or not a (multi)polygon."""
+    try:
+        code, geom = parse_wkb(wkb)
+    except (struct.error, AssertionError, TypeError, ValueError):
+        return None
+    return [geom] if code == POLYGON_Z else geom if code == MULTIPOLYGON_Z else None
+
+
 def _edge_batches(batches):
     """mapInArrow body: (zone_id, geometry_wkb) → (zone_id, parts), one
-    inner list per polygon part holding the edges of all its rings."""
+    inner list per polygon part holding the edges of all its rings. A
+    zone whose WKB is not a readable (multi)polygon gets no row, so it
+    covers nothing."""
     import pyarrow as pa
 
     def offsets(lens):
@@ -80,10 +94,12 @@ def _edge_batches(batches):
         return pa.array(offs)
 
     for batch in batches:
-        edges, part_lens, zone_lens = [], [], []
-        for wkb in batch.column(1).to_pylist():
-            _, geom = parse_wkb(wkb)
-            parts = geom if len(geom) and isinstance(geom[0], list) else [geom]
+        ids, edges, part_lens, zone_lens = [], [], [], []
+        for zone_id, wkb in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+            parts = _polygon_parts(wkb)
+            if parts is None:
+                continue
+            ids.append(zone_id)
             for rings in parts:
                 ring_edges = [_ring_edges(r) for r in rings]
                 edges.extend(ring_edges)
@@ -96,7 +112,7 @@ def _edge_batches(batches):
             offsets(zone_lens), pa.ListArray.from_arrays(offsets(part_lens), flat))
         # zone ids as fresh buffers: the output never references the input batch
         yield pa.RecordBatch.from_arrays(
-            [pa.array(batch.column(0).to_pylist(), pa.string()), parts_arr],
+            [pa.array(ids, pa.string()), parts_arr],
             names=["zone_id", "parts"])
 
 

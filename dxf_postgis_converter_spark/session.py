@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -90,6 +90,20 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """The engine's one materialization barrier: ``df`` with its lineage
+    truncated, for an intermediate that several consumers (or the rounds
+    of a driver loop, whose plan then stays flat) would recompute.
+
+    Lazy: the next action over the result stores it, so the barrier adds
+    no job of its own. Its blocks are freed when the DataFrame is
+    garbage-collected, so there is nothing to unpersist. A failed task
+    recomputes only its own partition; durability across executor loss
+    belongs to ``plans/lineage.py``'s checkpoint tables, not here.
+    """
+    return df.localCheckpoint(eager=False)
 
 
 def _driver_memory() -> str:

@@ -6,14 +6,16 @@ only point inward).
 Layer order (inward = allowed):
 
     geometry            pure numpy kernels — NO pyspark, NO intra-package
-    index               cell/skew column algebra — geometry only
+    session             session factory + the one materialization policy
+                        (materialize) — NO intra-package imports
+    index               cell/skew column algebra — geometry, session
     functions           scalar/decode library — geometry, index
     corpus              synthetic data + canonical JSON — geometry at
                         module level (the sources.dxf_files seam is a
                         sanctioned FUNCTION-LEVEL lazy import: dxf_files
                         imports corpus for the span schema, so the
                         reverse edge must stay deferred)
-    operators           corpus, functions, geometry, index
+    operators           corpus, functions, geometry, index, session
     sources             + exactly operators.merge_modes (the snapshot
                         store applies the merge algebra)
     plans               sources and inward
@@ -36,12 +38,12 @@ ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 # module-level (eager) imports allowed per layer; "" = top-level modules
 _ALLOWED = {
     "geometry": set(),
-    "index": {"geometry"},
+    "index": {"geometry", "session"},
     "functions": {"geometry", "index"},
     "corpus.py": {"geometry"},
     "replicas.py": set(),  # pure oracle replicas — stdlib/numpy only
     "session.py": set(),
-    "operators": {"corpus", "functions", "geometry", "index"},
+    "operators": {"corpus", "functions", "geometry", "index", "session"},
     "sources": {"corpus", "functions", "geometry", "index", "operators"},
     "plans": {"sources", "corpus", "functions", "geometry", "index"},
     "streaming": {"operators", "sources", "corpus", "functions",

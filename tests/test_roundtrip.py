@@ -64,12 +64,29 @@ def test_reconstruction_report(docs):
 
 
 def test_mismatch_detected_when_corrupted(spark, docs, rebuilt):
-    """Negative control: drop one media span from one doc → mismatch."""
+    """Negative control: drop one media span from one doc → mismatch. And
+    a NULL, an unparseable or a non-object stored data_json is a
+    mismatch of its document, not a failed rebuild."""
     corrupted = rebuilt.withColumn(
         "spans",
         F.when(F.col("doc_id") == rebuilt.select("doc_id").first().doc_id,
                F.slice("spans", 1, F.size("spans") - 1)).otherwise(F.col("spans")))
     assert span_mismatches(docs, corrupted).count() == 1
+
+    ents = decode_documents(docs)
+    bad_docs = [r.doc_id for r in ents.select("doc_id").distinct()
+                .orderBy("doc_id").limit(3).collect()]
+    bad_json = dict(zip(bad_docs, [None, "{not json", "[1]"]))
+    first = ents.groupBy("doc_id").agg(F.min("span_offset").alias("first"))
+    hit = (F.col("doc_id").isin(bad_docs)
+           & (F.col("span_offset") == F.col("first")))
+    pick = F.create_map(*[F.lit(x) for kv in bad_json.items() for x in kv])
+    bad = (ents.join(first, "doc_id")
+           .withColumn("data_json", F.when(hit, pick[F.col("doc_id")])
+                       .otherwise(F.col("data_json")))
+           .drop("first"))
+    mism = span_mismatches(docs, reconstruct_documents(bad, text_spans(docs)))
+    assert sorted(r.doc_id for r in mism.collect()) == sorted(bad_docs)
 
 
 def test_save_selected_by_handles(spark, docs):
