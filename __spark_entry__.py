@@ -898,11 +898,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
         qs = e.filter(F.col("vec_id") < 3).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
-        # query_path="distributed" pins the r6 scale path (Arrow-batched
-        # probe assignment, zero driver collect) under the driver gate;
-        # the driver/broadcast path is A/B-pinned equal in test_similarity
         return ivf_topk(e.filter(F.col("vec_id") >= 3), qs, k=5,
-                        n_centroids=16, n_probe=4, query_path="distributed")
+                        n_centroids=16, n_probe=4)
     q["q_ivf_topk"] = q_ivf_topk
 
     def q_lsh_ann_topk(spark, sf_dir):  # hyperplane-LSH ANN (recall<1 by design)

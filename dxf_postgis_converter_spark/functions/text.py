@@ -52,16 +52,6 @@ def punct_ratio(text: Column) -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise(punct / n)
 
 
-def stopword_ratio(text: Column) -> Column:
-    """Fraction of tokens that are (en|ru) stopwords."""
-    stop = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
-            "и", "в", "на", "с", "по", "не", "что", "это", "как", "для"]
-    toks = F.split(F.lower(F.trim(text)), r"\s+")
-    n = token_count(text)
-    hits = F.size(F.filter(toks, lambda t: t.isin(stop)))
-    return F.when(n == 0, F.lit(0.0)).otherwise(hits / n)
-
-
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality: length band + low punct + word-ish tokens.
     Weights are arbitrary but fixed; documented for the oracle."""

@@ -12,6 +12,8 @@ Layout (little-endian, ISO codes):
   linestring z   = 01 ea030000 (1002) + u32 n + n*3 f64
   polygon z      = 01 eb030000 (1003) + u32 nrings + rings(u32 n + n*3 f64)
   multipolygon z = 01 ee030000 (1006) + u32 ngeoms + full polygon WKBs
+Decode also reads the 2-D codes (1/2/3/6, two f64 per vertex) that most
+writers emit, as the Z geometry with z = 0.
 """
 
 from __future__ import annotations
@@ -82,9 +84,22 @@ def wkb_multipolygon(polygons) -> bytes:
 def parse_wkb(buf: bytes):
     """Decode → (geom_code, rings) where rings is:
     POINT: (1,3) array; LINESTRING: (n,3) array (single array);
-    POLYGON: list[(n,3)]; MULTIPOLYGON: list[list[(n,3)]]."""
+    POLYGON: list[(n,3)]; MULTIPOLYGON: list[list[(n,3)]].
+    2-D input (ISO codes 1/2/3/6) decodes to the Z code with z = 0."""
     code, rings, _ = _parse_at(buf, 0)
     return code, rings
+
+
+# 2-D ISO codes → their Z twins; 2-D vertices are read with z = 0
+_Z_OF_2D = {1: POINT_Z, 2: LINESTRING_Z, 3: POLYGON_Z, 6: MULTIPOLYGON_Z}
+
+
+def _xyz(buf: bytes, n: int, off: int, dims: int):
+    """(n,3) vertex array at off and the offset just past it."""
+    a = np.frombuffer(buf, dtype="<f8", count=dims * n, offset=off).reshape(n, dims)
+    if dims == 2:
+        a = np.hstack([a, np.zeros((n, 1))])
+    return a, off + 8 * dims * n
 
 
 def _parse_at(buf: bytes, off: int):
@@ -92,23 +107,23 @@ def _parse_at(buf: bytes, off: int):
     if bo != 1:
         raise ValueError("big-endian WKB not supported")
     off += 5
+    dims = 2 if code in _Z_OF_2D else 3
+    code = _Z_OF_2D.get(code, code)
     if code == POINT_Z:
-        a = np.frombuffer(buf, dtype="<f8", count=3, offset=off).reshape(1, 3)
-        return code, a, off + 24
+        a, off = _xyz(buf, 1, off, dims)
+        return code, a, off
     if code == LINESTRING_Z:
         (n,) = struct.unpack_from("<I", buf, off)
-        off += 4
-        a = np.frombuffer(buf, dtype="<f8", count=3 * n, offset=off).reshape(n, 3)
-        return code, a, off + 24 * n
+        a, off = _xyz(buf, n, off + 4, dims)
+        return code, a, off
     if code == POLYGON_Z:
         (nr,) = struct.unpack_from("<I", buf, off)
         off += 4
         rings = []
         for _ in range(nr):
             (n,) = struct.unpack_from("<I", buf, off)
-            off += 4
-            rings.append(np.frombuffer(buf, dtype="<f8", count=3 * n, offset=off).reshape(n, 3))
-            off += 24 * n
+            a, off = _xyz(buf, n, off + 4, dims)
+            rings.append(a)
         return code, rings, off
     if code == MULTIPOLYGON_Z:
         (ng,) = struct.unpack_from("<I", buf, off)
@@ -134,13 +149,3 @@ def wkb_bbox(buf: bytes):
     xs = np.concatenate([a[:, 0] for a in arrs])
     ys = np.concatenate([a[:, 1] for a in arrs])
     return float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max())
-
-
-def geom_xy(buf: bytes) -> np.ndarray:
-    """All (x,y) vertices of a WKB as an (n,2) array (for exact predicates)."""
-    code, g = parse_wkb(buf)
-    if code in (POINT_Z, LINESTRING_Z):
-        return g[:, :2]
-    if code == POLYGON_Z:
-        return np.vstack([r[:, :2] for r in g])
-    return np.vstack([r[:, :2] for poly in g for r in poly])

@@ -204,11 +204,6 @@ def propagate_selection_up(entities_selected: DataFrame) -> DataFrame:
         F.max(F.col("selected").cast("int")).cast("boolean").alias("selected"))
 
 
-def propagate_selection_docs(layers_selected: DataFrame) -> DataFrame:
-    return layers_selected.groupBy("doc_id").agg(
-        F.max(F.col("selected").cast("int")).cast("boolean").alias("selected"))
-
-
 def cascade_selection_down(entities: DataFrame, selected_layers: DataFrame) -> DataFrame:
     """Selecting a layer selects all its entities (select_entity_use_case
     _set_selected_recursive): semi-join marks children selected."""

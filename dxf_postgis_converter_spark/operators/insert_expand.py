@@ -159,8 +159,14 @@ def _walk(block_entities, xf: _Xform, parent_attrs: dict, path: str,
                         f"{len(block_entities)} block entities not expanded"))
         return
     for i, be in enumerate(block_entities):
-        etype = str(be.get("dxftype", "UNKNOWN"))
         p = f"{path}/{i}" if path else str(i)
+        if not isinstance(be, dict):
+            out.append((p, depth, "UNKNOWN", str(insert_layer or ""),
+                        None, None, None, None, None, None, None,
+                        f"block entity is not an object: "
+                        f"{type(be).__name__}"))
+            continue
+        etype = str(be.get("dxftype", "UNKNOWN"))
         geoms = be.get("geometries") or {}
         attrs = _inherit_byblock(be.get("attributes") or {}, parent_attrs)
         if etype == "INSERT":

@@ -214,13 +214,16 @@ def reconstruct_documents(entities: DataFrame, texts: DataFrame) -> DataFrame:
 
 
 def span_mismatches(original: DataFrame, rebuilt: DataFrame) -> DataFrame:
-    """doc_ids whose span sequence differs (missing doc counts as
-    mismatch). Full outer join + array equality — one shuffle on doc_id."""
+    """doc_ids whose span sequence differs. Full outer join + array
+    equality — one shuffle on doc_id. A document the rebuild lacks is
+    compared as an empty span array (an empty document has nothing to
+    regroup); one only the rebuild has is a mismatch."""
     a = original.select("doc_id", F.col("spans").alias("spans_a"))
     b = rebuilt.select("doc_id", F.col("spans").alias("spans_b"))
+    spans_b = F.coalesce(F.col("spans_b"), F.array().cast(b.schema["spans_b"].dataType))
     return (
         a.join(b, "doc_id", "full_outer")
-        .filter(~F.coalesce(F.col("spans_a") == F.col("spans_b"), F.lit(False)))
+        .filter(~F.coalesce(F.col("spans_a") == spans_b, F.lit(False)))
         .select("doc_id")
     )
 

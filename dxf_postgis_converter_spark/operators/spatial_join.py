@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..geometry.wkb import MULTIPOLYGON_Z, POLYGON_Z, parse_wkb
 from ..index.grid import cell_col, covers_col
+from ..index.skew import salt_col
 
 DEFAULT_RES = 6  # cell = 128 world units; zone covers stay small
 
@@ -72,13 +73,15 @@ def _ring_edges(ring: np.ndarray) -> np.ndarray:
 
 
 def _polygon_parts(wkb) -> list | None:
-    """The polygon parts (each a list of rings) of a zone's WKB, or None
-    when it is NULL, truncated or not a (multi)polygon."""
+    """The polygon parts (each a non-empty list of rings) of a zone's
+    WKB, or None when it is NULL, truncated, not a (multi)polygon or has
+    no ring at all."""
     try:
         code, geom = parse_wkb(wkb)
     except (struct.error, AssertionError, TypeError, ValueError):
         return None
-    return [geom] if code == POLYGON_Z else geom if code == MULTIPOLYGON_Z else None
+    parts = [geom] if code == POLYGON_Z else geom if code == MULTIPOLYGON_Z else []
+    return [rings for rings in parts if rings] or None
 
 
 def _edge_batches(batches):
@@ -173,7 +176,7 @@ def point_in_polygon_join(
     p = probes.withColumn("cell", cell_col(px, py, res))
     join_keys = ["cell"]
     if n_salt > 1:
-        p = p.withColumn("salt", F.pmod(F.xxhash64(F.col(probe_id_col)), F.lit(n_salt)).cast("int"))
+        p = p.withColumn("salt", salt_col(probe_id_col, n_salt))
         join_keys.append("salt")
 
     cand = p.join(cover, join_keys, "inner").join(edges, "zone_id", "left")

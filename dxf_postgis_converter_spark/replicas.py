@@ -197,8 +197,8 @@ def _rerank_topk(cands: dict[int, tuple], queries: dict[int, list[float]],
 
 
 def lsh_topk(emb: list[tuple[int, list[float]]], queries: list[tuple[int, list[float]]],
-             k: int, n_planes: int = 8, seed: int = 1234,
-             multiprobe: bool = True) -> list[tuple[int, int, float, int]]:
+             k: int, n_planes: int = 8,
+             seed: int = 1234) -> list[tuple[int, int, float, int]]:
     dim = len(emb[0][1])
     planes = _planes(dim, n_planes, seed)
     esig = {i: _sig_bits(v, planes) for i, v in emb}
@@ -206,10 +206,8 @@ def lsh_topk(emb: list[tuple[int, list[float]]], queries: list[tuple[int, list[f
     pairs = set()
     for qid, qv in queries:
         s0 = _sig_bits(qv, planes)
-        probes = {s0}
-        if multiprobe:
-            for i in range(n_planes):
-                probes.add(s0[:i] + ("0" if s0[i] == "1" else "1") + s0[i + 1:])
+        probes = {s0} | {s0[:i] + ("0" if s0[i] == "1" else "1") + s0[i + 1:]
+                         for i in range(n_planes)}
         for vid, s in esig.items():
             if s in probes:
                 pairs.add((qid, vid))

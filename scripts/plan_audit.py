@@ -259,7 +259,7 @@ def main() -> int:
     all_ok &= audit(
         sections, "IVF top-k (distributed query side)",
         ivf_topk(emb_scan.filter("vec_id >= 5"), qs_scan, k=5,
-                 centroids=cents, n_probe=4, query_path="distributed"),
+                 centroids=cents, n_probe=4),
         [("query probes are a distributed map, not a driver collect "
           "(no LocalTableScan anywhere: both sides come from real scans)",
           lambda p: "LocalTableScan" not in p["simple"]

@@ -147,6 +147,28 @@ def test_error_containment_and_layer_fallback():
     assert r_ok["err"] is None and r_ok["layer"] == "Walls"
 
 
+def test_non_object_block_entity_gets_own_error_record():
+    """Block entities that are not JSON objects each get their own error
+    record; the valid LINE beside them still expands, and the INSERT is
+    not reported unparseable."""
+    import pyarrow as pa
+
+    from dxf_postgis_converter_spark.operators.insert_expand import _expand_batches
+
+    line = _be("LINE", {"start": [0.0, 0.0, 0.0], "end": [1.0, 1.0, 0.0]})
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(["d1"]), pa.array([0], pa.int32()), pa.array(["A1"]),
+         pa.array([json.dumps(_payload([1, None, "x", line], layer="Walls"))])],
+        names=["doc_id", "span_offset", "handle", "data_json"])
+    out = pa.Table.from_batches(list(_expand_batches(iter([batch]), 32))).to_pylist()
+    assert [r["block_path"] for r in out] == ["0", "1", "2", "3"]
+    for r in out[:3]:
+        assert r["entity_type"] == "UNKNOWN" and r["layer"] == "Walls"
+        assert "not an object" in r["error"] and r["geometry_wkb"] is None
+    assert out[3]["entity_type"] == "LINE" and out[3]["error"] is None
+    assert out[3]["geometry_wkb"] is not None
+
+
 def test_max_depth_bounds_expansion():
     leaf = _be("POINT", {"location": [0.0, 0.0, 0.0]})
     nest = leaf

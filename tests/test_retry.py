@@ -5,6 +5,7 @@ attempts per task) with a 1g driver heap. A pass-through mapInArrow over
 each input raises on the first attempt of partition 0, so every job that
 computes that partition fails one task and retries it. knn_join and
 minhash_lsh_pairs, whose intermediates go through session.materialize,
+and decode_documents, whose Arrow batches go through a Python worker,
 must return exactly the rows of an unfailed run. The child gets its own
 process group, which is killed whatever happens, so no JVM or Python
 worker outlives the test.
@@ -22,6 +23,8 @@ import json, os, sys
 from pyspark import TaskContext
 import pyspark.sql.functions as F
 from dxf_postgis_converter_spark.session import get_spark
+from dxf_postgis_converter_spark.corpus import generate_documents
+from dxf_postgis_converter_spark.functions.decode import decode_documents
 from dxf_postgis_converter_spark.operators.knn import knn_join
 from dxf_postgis_converter_spark.operators.dedup import minhash_lsh_pairs
 
@@ -55,21 +58,27 @@ try:
         if i % 4 == 0:  # a near-duplicate: one token changed
             rows.append((f"n{i:03d}", " ".join(toks[:-1] + ["zz"])))
     docs = spark.createDataFrame(rows, "doc_id string, text string").repartition(3)
+    spans = generate_documents(spark, 24, num_partitions=3)
 
-    def both(p, t, d):
+    def run(p, t, d, s):
         knn = knn_join(p, t, k=5, res=6).collect()
         mh = minhash_lsh_pairs(d, jaccard_threshold=0.5).collect()
-        return (sorted(tuple(r) for r in knn), sorted(tuple(r) for r in mh))
+        dec = decode_documents(s).collect()
+        return (sorted(tuple(r) for r in knn), sorted(tuple(r) for r in mh),
+                sorted(repr(tuple(r)) for r in dec))
 
-    clean = both(probes, targets, docs)
-    failed = both(probes.mapInArrow(flaky("probes"), probes.schema),
-                  targets.mapInArrow(flaky("targets"), targets.schema),
-                  docs.mapInArrow(flaky("docs"), docs.schema))
+    clean = run(probes, targets, docs, spans)
+    failed = run(probes.mapInArrow(flaky("probes"), probes.schema),
+                 targets.mapInArrow(flaky("targets"), targets.schema),
+                 docs.mapInArrow(flaky("docs"), docs.schema),
+                 spans.mapInArrow(flaky("spans"), spans.schema))
     tags = [m.split("-")[0] for m in os.listdir(marks)]
     print(json.dumps({
         "knn_rows": len(clean[0]), "minhash_rows": len(clean[1]),
+        "decode_rows": len(clean[2]),
         "knn_same": clean[0] == failed[0], "minhash_same": clean[1] == failed[1],
-        "failures": {t: tags.count(t) for t in ("probes", "targets", "docs")}}))
+        "decode_same": clean[2] == failed[2],
+        "failures": {t: tags.count(t) for t in ("probes", "targets", "docs", "spans")}}))
 finally:
     spark.stop()
 '''
@@ -98,5 +107,6 @@ def test_retried_task_gives_identical_knn_and_minhash(tmp_path):
     res = json.loads(next(line for line in reversed(log.splitlines())
                           if line.startswith('{"knn_rows"')))
     assert res["knn_rows"] == 300 * 5 and res["minhash_rows"] > 0, res
-    assert res["knn_same"] and res["minhash_same"], res
+    assert res["decode_rows"] > 0, res
+    assert res["knn_same"] and res["minhash_same"] and res["decode_same"], res
     assert all(n >= 1 for n in res["failures"].values()), res

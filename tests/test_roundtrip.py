@@ -89,6 +89,32 @@ def test_mismatch_detected_when_corrupted(spark, docs, rebuilt):
     assert sorted(r.doc_id for r in mism.collect()) == sorted(bad_docs)
 
 
+def test_empty_text_only_and_one_point_documents_roundtrip(spark, docs):
+    """An empty document, a text-only one and a one-POINT one round-trip
+    with no mismatch: the empty document has no row to regroup, so the
+    rebuild lacks it and it compares as empty spans. A document that only
+    the rebuild has, or a non-empty one the rebuild lacks, still
+    mismatches."""
+    from dxf_postgis_converter_spark.corpus import SPANS_SCHEMA
+
+    point_ref = (docs.select(F.explode("spans").alias("s"))
+                 .filter(F.col("s.media_ref").contains('"entity_type":"POINT"'))
+                 .first().s.media_ref)
+    small = spark.createDataFrame([
+        ("empty", []),
+        ("text_only", [("text", "just words", "", 0)]),
+        ("one_point", [("media", "", point_ref, 0)]),
+    ], SPANS_SCHEMA)
+    rebuilt = reconstruct_documents(decode_documents(small), text_spans(small)).cache()
+    assert sorted(r.doc_id for r in rebuilt.collect()) == ["one_point", "text_only"]
+    assert span_mismatches(small, rebuilt).count() == 0
+    extra = small.filter("doc_id = 'one_point'").withColumn("doc_id", F.lit("rebuild_only"))
+    assert [r.doc_id for r in span_mismatches(small, rebuilt.unionByName(extra)).collect()] \
+        == ["rebuild_only"]
+    assert [r.doc_id for r in span_mismatches(
+        small, rebuilt.filter("doc_id != 'text_only'")).collect()] == ["text_only"]
+
+
 def test_save_selected_by_handles(spark, docs):
     """S11: unselected media spans removed, text spans + order kept."""
     from dxf_postgis_converter_spark.operators.reconstruct import save_selected_by_handles

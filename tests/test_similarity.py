@@ -62,7 +62,7 @@ def test_lsh_topk_recall_clustered(spark):
         [(f"q{i}", [float(x) for x in v]) for i, v in enumerate(qvecs)],
         "query_id string, query_vec array<double>")
     exact = brute(vecs, qvecs, 10)
-    got = lsh_topk(emb, qs, k=10, n_planes=8, multiprobe=True).collect()
+    got = lsh_topk(emb, qs, k=10, n_planes=8).collect()
     by_q = {}
     for r in got:
         by_q.setdefault(r.query_id, set()).add(r.vec_id)
@@ -97,63 +97,34 @@ def test_ivf_recall_vs_bruteforce(spark):
     assert recall >= 0.9
 
 
-def test_ivf_query_paths_identical(spark):
-    """VERDICT r5 item 5: the distributed query side (Arrow-batched probe
-    assignment, no driver collect) must produce EXACTLY the rows of the
-    driver/broadcast path — same probes (the (q−c)² distance expansion is
-    shared bitwise), same candidates, same rerank."""
+def test_ivf_probes_follow_stable_order_under_duplicate_centroid_ties(spark):
+    """Exact probe-distance ties (every centroid duplicated) resolve in
+    centroid index order: each query's probe set is exactly numpy's
+    stable argsort of its (q − c)² distances, cut at n_probe."""
     import numpy as np
-    from dxf_postgis_converter_spark.operators.similarity import ivf_topk
-
-    rng = np.random.default_rng(11)
-    centers = rng.standard_normal((6, 12)) * 4
-    vecs = [(i, (centers[i % 6] + rng.standard_normal(12) * 0.5).tolist())
-            for i in range(300)]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    qs = emb.filter("vec_id < 8").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
-    base = emb.filter("vec_id >= 8")
-    kw = dict(k=5, n_centroids=8, n_probe=3)
-    drv = {tuple(r) for r in ivf_topk(base, qs, query_path="driver", **kw).collect()}
-    dist = {tuple(r) for r in ivf_topk(base, qs, query_path="distributed", **kw).collect()}
-    assert drv == dist and len(drv) == 8 * 5
-    # auto dispatch: tiny query set stays on the driver path (same rows
-    # either way — this pins the dispatcher doesn't error)
-    auto = {tuple(r) for r in ivf_topk(base, qs, query_path="auto", **kw).collect()}
-    assert auto == drv
-
-
-def test_ivf_paths_identical_under_duplicate_centroid_ties(spark):
-    """ADVICE r6: exact probe-distance ties (duplicate centroids) must
-    resolve identically on the driver's 1-D argsort and the distributed
-    2-D argsort — both are kind='stable' now, so tied centroids are taken
-    in index order on either path."""
-    import numpy as np
-    from dxf_postgis_converter_spark.operators.similarity import ivf_topk
+    from dxf_postgis_converter_spark.operators.similarity import ivf_query_probes
 
     rng = np.random.default_rng(5)
-    # duplicate every centroid: every query's probe distances tie pairwise
     base_c = rng.standard_normal((4, 8))
     centroids = np.vstack([base_c, base_c])
-    vecs = [(i, (base_c[i % 4] + rng.standard_normal(8) * 0.3).tolist())
-            for i in range(120)]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    qs = emb.filter("vec_id < 6").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"))
-    base = emb.filter("vec_id >= 6")
-    kw = dict(k=4, n_centroids=8, n_probe=3, centroids=centroids)
-    drv = {tuple(r) for r in
-           ivf_topk(base, qs, query_path="driver", **kw).collect()}
-    dist = {tuple(r) for r in
-           ivf_topk(base, qs, query_path="distributed", **kw).collect()}
-    assert drv == dist and len(drv) > 0
+    qvecs = [(base_c[i % 4] + rng.standard_normal(8) * 0.3).tolist() for i in range(6)]
+    qs = spark.createDataFrame(list(enumerate(qvecs)),
+                               "query_id long, query_vec array<double>")
+    got = {}
+    for r in ivf_query_probes(qs, centroids, n_probe=3).collect():
+        got.setdefault(r.query_id, set()).add(r.centroid_id)
+    for qid, qv in enumerate(qvecs):
+        d2 = ((np.asarray(qv) - centroids) ** 2).sum(axis=1)
+        exp = np.argsort(d2, kind="stable")[:3]
+        # the nearest base centroid's pair ties, so both copies are probed
+        assert exp[1] == exp[0] + 4
+        assert got[qid] == set(exp.tolist())
 
 
 def test_ivf_distributed_plan_has_no_query_collect(spark):
-    """The large-query path must not funnel the query side through the
-    driver: no LocalTableScan of probe rows (createDataFrame) in the
-    plan — the query side enters as a MapInPandas over the real scan."""
+    """The query side never funnels through the driver: no LocalTableScan
+    of probe rows (createDataFrame) in the plan — the query side enters
+    as a MapInPandas over its own input."""
     import contextlib
     import io
 
@@ -167,8 +138,7 @@ def test_ivf_distributed_plan_has_no_query_collect(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
     base = emb.filter("vec_id >= 4")
     centroids = np.asarray([v for _, v in vecs[4:20]], dtype=np.float64)
-    df = ivf_topk(base, qs, k=3, n_centroids=16, n_probe=2,
-                  centroids=centroids, query_path="distributed")
+    df = ivf_topk(base, qs, k=3, n_centroids=16, n_probe=2, centroids=centroids)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("simple")

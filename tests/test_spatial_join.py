@@ -1,5 +1,7 @@
 """PIP join & bbox-intersects join vs brute-force O(N*M) oracles."""
 
+import struct
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -39,10 +41,23 @@ def brute_pip(points, zone_rings):
     return pairs
 
 
+def _wkb_2d(geom) -> bytearray:
+    """A parsed (multi)polygon re-encoded as 2-D ISO WKB: x, y only."""
+    def polygon(rings):
+        return struct.pack("<BII", 1, 3, len(rings)) + b"".join(
+            struct.pack("<I", len(r)) + np.ascontiguousarray(r[:, :2]).tobytes()
+            for r in rings)
+    if isinstance(geom[0], list):
+        return bytearray(struct.pack("<BII", 1, 6, len(geom))
+                         + b"".join(polygon(p) for p in geom))
+    return bytearray(polygon(geom))
+
+
 @pytest.fixture(scope="module")
 def adversarial_probes(spark, zones_df, zone_rings):
     """Probes where ray casting goes wrong first, against the zones plus
-    one poly zone copied with kind NULL: every ring vertex and edge
+    one poly zone copied twice, once with kind NULL and once re-encoded as
+    2-D WKB (ISO codes 3/6, no z): every ring vertex and edge
     midpoint (hole boundaries and the horizontal edges of rect-shaped
     rings included), each midpoint moved 1e-9 off its edge to either
     side, points a quarter of the way along each horizontal edge and
@@ -51,8 +66,12 @@ def adversarial_probes(spark, zones_df, zone_rings):
     rng = np.random.default_rng(11)
     poly = zones_df.filter("kind = 'poly'").orderBy("zone_id").first()
     zones = zones_df.unionByName(spark.createDataFrame(
-        [poly.asDict() | {"zone_id": "null_kind", "kind": None}], zones_df.schema))
-    rings = dict(zone_rings, null_kind=zone_rings[poly.zone_id])
+        [poly.asDict() | {"zone_id": "null_kind", "kind": None},
+         poly.asDict() | {"zone_id": "wkb_2d",
+                          "geometry_wkb": _wkb_2d(zone_rings[poly.zone_id])}],
+        zones_df.schema))
+    rings = dict(zone_rings, null_kind=zone_rings[poly.zone_id],
+                 wkb_2d=zone_rings[poly.zone_id])
     xy = []
     for z in zones_df.collect():
         geom = zone_rings[z.zone_id]
