@@ -6,8 +6,9 @@ Shape matches BASELINE.json input_hint exactly:
             spans array<struct<kind:string, text:string,
                                media_ref:string, offset:int>>)
 
-- media spans carry one DXF entity payload as canonical JSON (sorted keys,
-  compact separators) mirroring the reference triple
+- media spans carry one DXF entity payload as canonical JSON
+  (functions.decode.canonical_dumps: orjson, sorted keys, compact)
+  mirroring the reference triple
   {entity_type, name, handle, layer, attributes, geometries, extra_data}
   (postgis_entity_repository.py:238-243); per-type geometry dicts follow
   dxf_reader.py extractors (see FIXTURES.md §2 table).
@@ -29,7 +30,6 @@ postgis_entity_converter.py:272) + concave polygons.
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import uuid
@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .functions.decode import canonical_dumps
 from .geometry import tessellate as tess
 from .geometry.wkb import wkb_multipolygon, wkb_polygon
 
@@ -51,7 +52,9 @@ SEED = 42
 # v4: INSERT spans embed deterministic block-definition closures
 # (block_closures()) so C14' virtual-entity expansion is exercised —
 # and gateable — on the synthetic corpus, not only on real ingests
-CORPUS_VERSION = 4
+# v5: payloads and params_json are written by functions.decode's
+# canonical_dumps (orjson floats: 0.000073, -7e-6, not 7.3e-05, -7e-06)
+CORPUS_VERSION = 5
 EXTENT = 8192.0  # world is [0, EXTENT)^2 — power of two for the quadtree grid
 HOT_FRACTION = 0.05
 HOT_WINDOW = (1000.0, 1000.0, 1080.0, 1080.0)  # dense CAD sheet extent
@@ -202,15 +205,10 @@ def doc_id_for(index: int) -> str:
     return str(uuid.UUID(int=(index * 0x9E3779B97F4A7C15 + SEED) % (1 << 128)))
 
 
-def canonical_dumps(obj) -> str:
-    """Canonical JSON: sorted keys, compact separators, no ASCII escaping
-    (stdlib float notation)."""
-    return json.dumps(obj, ensure_ascii=False, sort_keys=True, separators=(",", ":"))
-
-
 def canonical_media_ref(etype, name, handle, layer, attributes, geometries, extra_data) -> str:
-    """THE canonical payload serialization — generator and reconstructor
-    must both use this for span-sequence equality to be byte-exact."""
+    """THE canonical payload: the seven keys through canonical_dumps, the
+    serializer the rebuild writes with too, so span sequences round-trip
+    byte-exact."""
     return canonical_dumps({
         "attributes": attributes,
         "entity_type": etype,

@@ -16,10 +16,11 @@ Spark shape:  documents(doc_id, spans)
              geometry_wkb, geom_type, xmin, ymin, xmax, ymax,
              data_json, media_ref)
 
-`data_json` is the canonical-JSON round-trip payload
+`data_json` is the round-trip payload
 {entity_type, name, handle, layer, attributes, geometries, extra_data} —
 the analogue of the reference's JSONB `data` column
-(postgis_entity_repository.py:238-243).
+(postgis_entity_repository.py:238-243) — written by `canonical_dumps`,
+the one JSON serializer of the engine (the corpus payloads use it too).
 """
 
 from __future__ import annotations
@@ -405,16 +406,20 @@ def _encode(kind, coords):
     return wkb_multipolygon(arrs), "MULTIPOLYGON", (xs.min(), ys.min(), xs.max(), ys.max())
 
 
-def _dumps(obj) -> str:
-    """Sorted-key JSON for data_json. Its byte format is not contractual
-    (only the reconstructed media_ref must byte-match the corpus canonical
-    form — see operators/reconstruct.py), so orjson's float notation is
-    fine here."""
+def canonical_dumps(obj) -> str:
+    """THE canonical JSON of the engine: orjson's compact sorted-key
+    rendering (shortest round-trip floats, e.g. ``0.000073``, ``1e-7``).
+    The corpus payloads (corpus.canonical_media_ref), zone params_json,
+    decode's data_json, INSERT expansion and the round-trip rebuild all
+    write through here, so a rebuilt media_ref byte-matches the corpus.
+    A value orjson cannot write but stdlib can (a numpy float64, a
+    non-str dict key) renders with stdlib once and is re-dumped here, so
+    it comes out in the same bytes as its native equivalent."""
     try:
         return orjson.dumps(obj, option=orjson.OPT_SORT_KEYS).decode()
-    except TypeError:  # exotic value types: defer to stdlib
-        return json.dumps(obj, ensure_ascii=False, sort_keys=True,
-                          separators=(",", ":"))
+    except TypeError:
+        return orjson.dumps(orjson.loads(json.dumps(obj)),
+                            option=orjson.OPT_SORT_KEYS).decode()
 
 
 def convert_entity(payload: dict):
@@ -469,7 +474,7 @@ def _convert_entity_rec(payload: dict) -> tuple:
     if bbox is None:
         bbox = (None, None, None, None)
     return (handle, layer, etype, name, wkb, gtype,
-            bbox[0], bbox[1], bbox[2], bbox[3], _dumps(data), error)
+            bbox[0], bbox[1], bbox[2], bbox[3], canonical_dumps(data), error)
 
 
 ENTITY_SCHEMA = T.StructType([

@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..functions.decode import _CONVERTERS, _dumps, _encode
+from ..functions.decode import _CONVERTERS, _encode, canonical_dumps
 
 # entity kinds whose extra_data.rotation is a drawn orientation that the
 # placement rotation must compose with (TEXT/MTEXT/ATTRIB glyph angle)
@@ -147,32 +147,49 @@ def expand_payload(payload: dict, max_depth: int = 32) -> list[tuple]:
     return records
 
 
+def _fault(path: str, depth: int, etype: str, layer, error: str) -> tuple:
+    """An expansion record with no geometry and an error message."""
+    return (path, depth, etype, str(layer or ""),
+            None, None, None, None, None, None, None, error)
+
+
 def _walk(block_entities, xf: _Xform, parent_attrs: dict, path: str,
           depth: int, max_depth: int, out: list, insert_layer: str):
     if depth > max_depth:
         if block_entities:
             # no-silent-drops contract: trimming a non-empty closure must
             # leave an ERROR record, like the corrupt-payload path
-            out.append((path, depth, "INSERT", str(insert_layer or ""),
-                        None, None, None, None, None, None, None,
-                        f"max_depth {max_depth} exceeded at {path!r}: "
-                        f"{len(block_entities)} block entities not expanded"))
+            out.append(_fault(path, depth, "INSERT", insert_layer,
+                              f"max_depth {max_depth} exceeded at {path!r}: "
+                              f"{len(block_entities)} block entities not expanded"))
         return
     for i, be in enumerate(block_entities):
         p = f"{path}/{i}" if path else str(i)
         if not isinstance(be, dict):
-            out.append((p, depth, "UNKNOWN", str(insert_layer or ""),
-                        None, None, None, None, None, None, None,
-                        f"block entity is not an object: "
-                        f"{type(be).__name__}"))
+            out.append(_fault(p, depth, "UNKNOWN", insert_layer,
+                              f"block entity is not an object: "
+                              f"{type(be).__name__}"))
             continue
         etype = str(be.get("dxftype", "UNKNOWN"))
         geoms = be.get("geometries") or {}
-        attrs = _inherit_byblock(be.get("attributes") or {}, parent_attrs)
+        try:
+            # a malformed attributes map, or a nested INSERT's placement
+            # or closure, faults this block entity only — never its
+            # siblings or the top-level INSERT
+            attrs = _inherit_byblock(be.get("attributes") or {}, parent_attrs)
+            if etype == "INSERT":
+                children = be.get("block_entities") or []
+                if not isinstance(children, list):
+                    raise TypeError("block_entities is not a list: "
+                                    f"{type(children).__name__}")
+                child_xf = xf.compose(_Xform.from_insert(geoms))
+        except Exception as e:
+            out.append(_fault(p, depth, "UNKNOWN", insert_layer,
+                              f"{etype}: {type(e).__name__}: {e}"))
+            continue
         if etype == "INSERT":
-            _walk(be.get("block_entities") or [],
-                  xf.compose(_Xform.from_insert(geoms)), attrs,
-                  p, depth + 1, max_depth, out, insert_layer)
+            _walk(children, child_xf, attrs, p, depth + 1, max_depth, out,
+                  insert_layer)
             continue
         cv = _CONVERTERS.get(etype)
         error = None
@@ -186,12 +203,12 @@ def _walk(block_entities, xf: _Xform, parent_attrs: dict, path: str,
                 kind, coords, updates = cv(geoms)
                 new_extra.update(updates)
                 coords = xf.apply(kind, coords)
+                if etype in _ROTATED_TYPES:
+                    new_extra["rotation"] = \
+                        float(new_extra.get("rotation") or 0.0) + xf.rot
             except Exception as e:  # same containment contract as decode
                 kind = coords = None
                 error = f"{etype}: {type(e).__name__}: {e}"
-        if etype in _ROTATED_TYPES and not error:
-            new_extra["rotation"] = float(new_extra.get("rotation") or 0.0) \
-                + xf.rot
         wkb, gtype, bbox = _encode(kind, coords)
         layer = str(attrs.get("layer") or insert_layer or "")
         data = {
@@ -206,7 +223,8 @@ def _walk(block_entities, xf: _Xform, parent_attrs: dict, path: str,
         if bbox is None:
             bbox = (None, None, None, None)
         out.append((p, depth, etype, layer, wkb, gtype,
-                    bbox[0], bbox[1], bbox[2], bbox[3], _dumps(data), error))
+                    bbox[0], bbox[1], bbox[2], bbox[3], canonical_dumps(data),
+                    error))
 
 
 EXPANDED_SCHEMA = T.StructType([

@@ -12,8 +12,8 @@ Reference semantics (import_use_case.py:424-530):
 
 On Iceberg these are overwritePartitions / MERGE INTO / anti-join append;
 here each returns the new target state as a DataFrame plus a report of
-per-layer counts (mirroring the reference's import report, :596-598), and
-`ParquetEntityStore` persists state for the lineage/resume tests.
+per-layer counts (mirroring the reference's import report, :596-598).
+sources/snapshot_store.SnapshotTable.merge persists the new state.
 """
 
 from __future__ import annotations
@@ -74,40 +74,3 @@ def import_report(source: DataFrame) -> DataFrame:
         F.count(F.col("geometry_wkb")).alias("n_with_geometry"),
     )
 
-
-class ParquetEntityStore:
-    """Minimal persistent target emulating the per-layer PostGIS tables as
-    ONE partitioned dataset (SURVEY §4.2: per-layer tables → layer column).
-    Writes partitioned by (doc_id bucket) for pruning; read returns a
-    plain DataFrame."""
-
-    def __init__(self, spark, path: str):
-        self.spark = spark
-        self.path = path
-
-    def exists(self) -> bool:
-        import os
-
-        return os.path.exists(self.path)
-
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
-
-    def write(self, df: DataFrame, mode: str = "overwrite") -> None:
-        df.write.mode(mode).parquet(self.path)
-
-    def merge(self, source: DataFrame, mode: ImportMode) -> DataFrame:
-        if not self.exists():
-            new_state = source
-        else:
-            new_state = apply_mode(self.read(), source, mode)
-        # materialize then swap (parquet has no transactional MERGE; on
-        # Iceberg this whole method is one MERGE INTO / overwritePartitions)
-        tmp = self.path + "._staging"
-        new_state.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        if self.exists():
-            shutil.rmtree(self.path)
-        shutil.move(tmp, self.path)
-        return self.read()

@@ -22,20 +22,20 @@ data_json (geometries/attributes untouched; postgis_entity_repository.py
 :238-243 JSONB shape) and the corpus's extra_data contract pins which
 keys were source keys vs converter-derived updates
 (postgis_entity_converter.py:137-142 merges converter output into
-extra_data; we strip it back off).
+extra_data; we strip it back off). The rebuilt payload is written by
+functions.decode.canonical_dumps, the one serializer that also wrote the
+corpus payload, so the bytes match with no second pass.
 """
 
 from __future__ import annotations
-
-import re
 
 import orjson
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..corpus import SPANS_SCHEMA, canonical_dumps
-from ..functions.decode import bytes_string_array
+from ..corpus import SPANS_SCHEMA
+from ..functions.decode import bytes_string_array, canonical_dumps
 
 # source-payload extra_data keys (corpus contract; everything else in the
 # stored extra_data was merged in by a converter and is not part of the
@@ -53,73 +53,10 @@ _REF_SCHEMA = T.StructType([
 ])
 
 
-# floats whose rendering might differ between orjson and stdlib json:
-# fixed-notation values below 1e-4 (stdlib switches to exponent there) or
-# any exponent-notation number. Rows whose orjson bytes match this
-# re-serialize through corpus.canonical_dumps — the canonical format.
-# Sound because every disagreement case necessarily leaves one of these
-# byte patterns in the orjson output; false positives only cost the slow
-# path on that row. _risky_rows is the batched scan; this regex is the
-# reference it must match exactly.
-_FLOAT_RISK = re.compile(rb"0\.0000|\d[eE][-+]?\d")
-
-
-def _risky_rows(outs: list, n_rows: int) -> set[int]:
-    """Row indices whose serialized bytes contain a float-risk pattern
-    (the _FLOAT_RISK regex), found by ONE vectorized scan over the
-    batch's concatenated bytes instead of n_rows regex searches — the
-    per-row regex was ~half the rebuild stage's Python time (measured
-    11 µs/row over 615-byte rows). Cross-row false positives are
-    impossible: every row starts '{' and ends '}', so neither pattern
-    can span a boundary. A false positive would only cost the stdlib
-    re-dump on that row; the masks below match the regex exactly. A None
-    row (an unparseable payload) is never returned."""
-    import numpy as np
-
-    buf = b"".join(filter(None, outs))
-    a = np.frombuffer(buf, dtype=np.uint8)
-    if len(a) < 3:
-        return set()
-    # exponent notation \d[eE][-+]?\d: gather e/E POSITIONS (two cheap
-    # full passes), then check neighbours by fancy-indexing only those —
-    # 'e' occurs ~once per 40 bytes in this JSON, so the neighbour work
-    # is ~2% of a full-width mask cascade (which measured SLOWER than
-    # the per-row regex it replaced)
-    pe = np.flatnonzero((a == 101) | (a == 69))
-    pe = pe[(pe > 0) & (pe < len(a) - 1)]
-    hits = []
-    if pe.size:
-        prev, nxt = a[pe - 1], a[pe + 1]
-        isdig = (prev >= 48) & (prev <= 57)
-        hits.append(pe[isdig & (nxt >= 48) & (nxt <= 57)])
-        p2 = pe[isdig & ((nxt == 43) | (nxt == 45))]
-        p2 = p2[p2 < len(a) - 2]
-        if p2.size:
-            n2 = a[p2 + 2]
-            hits.append(p2[(n2 >= 48) & (n2 <= 57)])
-    # fixed notation below 1e-4: the literal "0.0000" via memchr-fast find
-    i = buf.find(b"0.0000")
-    lit = []
-    while i != -1:
-        lit.append(i)
-        i = buf.find(b"0.0000", i + 1)
-    if lit:
-        hits.append(np.asarray(lit, dtype=np.int64))
-    if not hits:
-        return set()
-    pos = np.concatenate(hits)
-    if pos.size == 0:
-        return set()
-    offs = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum([len(o) if o else 0 for o in outs], out=offs[1:])
-    return set(np.unique(np.searchsorted(offs, pos, side="right") - 1).tolist())
-
-
 def _rt_payload(d: dict) -> dict:
     """A parsed data_json cut to the media_ref payload, IN PLACE: the
     seven canonical keys with their defaults, extra_data filtered to
-    RT_EXTRA_KEYS (orjson preserves the stored canonical key order, and
-    OPT_SORT_KEYS re-canonicalizes the rebuilt extra_data)."""
+    RT_EXTRA_KEYS (canonical_dumps sorts the keys on the way out)."""
     extra = d.get("extra_data", {}) or {}
     d["attributes"] = d.get("attributes", {}) or {}
     d["entity_type"] = d.get("entity_type", "")
@@ -138,15 +75,14 @@ def _rebuild_arrow_batches(batches):
     """mapInArrow rebuild: doc_id/span_offset pass through untouched as
     Arrow arrays; data_json is parsed from BYTES (zero-copy binary view
     of the string column — no utf-8 → str decode), cut by _rt_payload,
-    and the output string column is assembled straight from the
-    serialized bytes via Array.from_buffers — no pandas block, no
-    per-row str. A NULL, unparseable or non-object data_json yields a
-    NULL media_ref, so span_mismatches reports its document."""
+    re-serialized by canonical_dumps, and the output string column is
+    assembled from the utf-8 bytes via Array.from_buffers — no pandas
+    block. A NULL, unparseable or non-object data_json yields a NULL
+    media_ref, so span_mismatches reports its document."""
     import numpy as np
     import pyarrow as pa
 
-    loads, dumps = orjson.loads, orjson.dumps
-    opt = orjson.OPT_SORT_KEYS
+    loads = orjson.loads
     for batch in batches:
         n = batch.num_rows
         if n == 0:
@@ -156,16 +92,9 @@ def _rebuild_arrow_batches(batches):
         outs = []
         for dj in djs:
             try:
-                outs.append(dumps(_rt_payload(loads(dj)), option=opt))
+                outs.append(canonical_dumps(_rt_payload(loads(dj))).encode())
             except (AttributeError, TypeError, ValueError):
                 outs.append(None)
-        # rows whose orjson rendering has a float-risk pattern re-dump
-        # through the canonical stdlib serializer. They are parsed again
-        # rather than kept: holding every row's dict until the scan makes
-        # the cyclic GC re-traverse them (measured +50 % on this loop
-        # over 12 740 stored rows).
-        for i in _risky_rows(outs, n):
-            outs[i] = canonical_dumps(_rt_payload(loads(djs[i]))).encode()
         refs = bytes_string_array(outs)
         # deep-copy the passthrough columns (take allocates fresh
         # buffers): the output batch must not reference the input

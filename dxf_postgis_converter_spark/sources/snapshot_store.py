@@ -69,7 +69,7 @@ class CommitConflict(RuntimeError):
 
 
 # identity under which append_stream_batch records its epoch high-water
-# mark when the caller passes no stream_id (legacy single-sink tables)
+# mark when the caller passes no stream_id (single-sink tables)
 _DEFAULT_STREAM = "default"
 
 
@@ -203,16 +203,10 @@ class SnapshotTable:
     def _stream_hwms(self, version: int | None) -> dict[str, int]:
         """Per-stream-identity high-water marks of committed foreachBatch
         epoch ids (Iceberg keys its streaming commit dedup by query id the
-        same way). Legacy manifests carried a single ``max_stream_batch``
-        scalar — read it as the "default" stream's mark."""
+        same way)."""
         if version is None:
             return {}
-        m = self._manifest(version)
-        hwms = dict(m.get("stream_batches") or {})
-        legacy = m.get("max_stream_batch", -1)
-        if legacy >= 0 and hwms.get(_DEFAULT_STREAM, -1) < legacy:
-            hwms[_DEFAULT_STREAM] = legacy
-        return hwms
+        return dict(self._manifest(version).get("stream_batches") or {})
 
     def _commit(self, files: list[dict], operation: str,
                 schema_json: dict, expected_parent: int | None,
@@ -228,8 +222,7 @@ class SnapshotTable:
         the dedup no longer depends on retained history (ADVICE r5), and
         since round 7 it is KEYED by stream identity (ADVICE r6) so a
         second streaming query cannot be silently swallowed by the first
-        one's mark. ``max_stream_batch`` mirrors the default stream's mark
-        for legacy readers."""
+        one's mark."""
         os.makedirs(self._snap_dir, exist_ok=True)
         head = self.current_version()
         if head != expected_parent:
@@ -249,7 +242,6 @@ class SnapshotTable:
             "schema": schema_json,
             "files": files,
             "stream_batches": hwms,
-            "max_stream_batch": hwms.get(_DEFAULT_STREAM, -1),
         }
         tmp = os.path.join(self._snap_dir, f".tmp-{manifest['snapshot_id']}.json")
         with open(tmp, "w") as f:
@@ -679,7 +671,6 @@ class Catalog:
         self.spark = spark
         self.warehouse = warehouse
         self._dir = os.path.join(warehouse, "_catalog")
-        self._legacy = os.path.join(warehouse, "_catalog.json")
 
     def _versions(self) -> list[int]:
         if not os.path.isdir(self._dir):
@@ -692,9 +683,6 @@ class Catalog:
         if vs:
             with open(os.path.join(self._dir, f"v{vs[-1]}.json")) as f:
                 return json.load(f), vs[-1]
-        if os.path.exists(self._legacy):  # pre-r6 single-file layout
-            with open(self._legacy) as f:
-                return json.load(f), None
         return {}, None
 
     def _save(self, tables: dict, expected: int | None) -> None:

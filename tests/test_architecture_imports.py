@@ -10,8 +10,9 @@ Layer order (inward = allowed):
                         (materialize) — NO intra-package imports
     index               cell/skew column algebra — geometry, session
     functions           scalar/decode library — geometry, index
-    corpus              synthetic data + canonical JSON — geometry at
-                        module level (the sources.dxf_files seam is a
+    corpus              synthetic data — geometry and functions (the
+                        canonical JSON serializer) at module level
+                        (the sources.dxf_files seam is a
                         sanctioned FUNCTION-LEVEL lazy import: dxf_files
                         imports corpus for the span schema, so the
                         reverse edge must stay deferred)
@@ -40,7 +41,7 @@ _ALLOWED = {
     "geometry": set(),
     "index": {"geometry", "session"},
     "functions": {"geometry", "index"},
-    "corpus.py": {"geometry"},
+    "corpus.py": {"functions", "geometry"},
     "replicas.py": set(),  # pure oracle replicas — stdlib/numpy only
     "session.py": set(),
     "operators": {"corpus", "functions", "geometry", "index", "session"},

@@ -169,6 +169,30 @@ def test_non_object_block_entity_gets_own_error_record():
     assert out[3]["geometry_wkb"] is not None
 
 
+def test_malformed_nested_insert_fields_fault_only_their_entity():
+    """A nested INSERT whose block_entities, geometries or attributes has
+    the wrong JSON type, and a TEXT whose rotation is not a number, each
+    get their own error record at their block path; the LINE beside them
+    still expands and the top-level INSERT is not reported unparseable."""
+    line = _be("LINE", {"start": [0.0, 0.0, 0.0], "end": [1.0, 1.0, 0.0]})
+    ins = {"insert": [0.0, 0.0, 0.0], "name": "N"}
+    bad = [_be("INSERT", ins, block_name="N", block_entities=5),
+           _be("INSERT", 5, block_name="N", block_entities=[line]),
+           {"dxftype": "INSERT", "geometries": ins, "attributes": 5,
+            "block_name": "N", "block_entities": [line]},
+           _be("TEXT", {"insert": [0.0, 0.0, 0.0], "text": "t",
+                        "rotation": "x"})]
+    recs = expand_payload(_payload([line] + bad, layer="Walls"))
+    assert [r[0] for r in recs] == ["0", "1", "2", "3", "4"]
+    assert recs[0][2] == "LINE" and recs[0][-1] is None and recs[0][4] is not None
+    for r in recs[1:4]:
+        assert r[2] == "UNKNOWN" and r[3] == "Walls"
+        assert r[4] is None and r[-1].startswith("INSERT: ")
+    assert "block_entities is not a list" in recs[1][-1]
+    assert recs[4][2] == "TEXT" and recs[4][4] is None
+    assert recs[4][-1].startswith("TEXT: ValueError")
+
+
 def test_max_depth_bounds_expansion():
     leaf = _be("POINT", {"location": [0.0, 0.0, 0.0]})
     nest = leaf

@@ -1,13 +1,13 @@
 """Import merge modes (J5-J7): set-algebra semantics vs the reference's
-per-mode behaviour (import_use_case.py:424-530), plus the persistent
-store round-trip."""
+per-mode behaviour (import_use_case.py:424-530), plus the import report.
+SnapshotTable.merge, the store that persists a merge, is covered in
+test_snapshot_store."""
 
 import pyspark.sql.functions as F
 import pytest
 
 from dxf_postgis_converter_spark.operators.merge_modes import (
     ImportMode,
-    ParquetEntityStore,
     add_objects,
     apply_mode,
     import_report,
@@ -76,11 +76,8 @@ def test_apply_mode_dispatch(target, source):
         _rows(overwrite_layers(target, source))
 
 
-def test_store_merge_roundtrip(spark, target, source, tmp_path):
-    store = ParquetEntityStore(spark, str(tmp_path / "ents"))
-    store.merge(target.withColumn("geometry_wkb", F.lit(b"")), ImportMode.OVERWRITE_LAYERS)
-    state = store.merge(source.withColumn("geometry_wkb", F.lit(b"")), ImportMode.ADD_OBJECTS)
-    got = {tuple(r) for r in state.drop("geometry_wkb").collect()}
-    assert got == _rows(add_objects(target, source))
+def test_import_report_counts_merged_state(target, source):
+    state = add_objects(target.withColumn("geometry_wkb", F.lit(b"")),
+                        source.withColumn("geometry_wkb", F.lit(b"")))
     rep = {(r.doc_id, r.layer): r.n_entities for r in import_report(state).collect()}
     assert rep[("d1", "L1")] == 3

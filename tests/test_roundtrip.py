@@ -141,15 +141,12 @@ def test_save_selected_by_handles(spark, docs):
 
 
 def test_rebuild_matches_canonical_media_ref(spark, docs):
-    """Golden: the Arrow rebuild (batched float-risk scan, in-place
-    extra_data filter, from_buffers output) equals corpus
-    canonical_media_ref of each stored payload with extra_data cut to
-    RT_EXTRA_KEYS — including rows that trip the float-risk fallback to
-    the stdlib serializer — and the batched risk scan equals the
-    _FLOAT_RISK regex row by row."""
+    """Golden: the Arrow rebuild (in-place extra_data filter,
+    from_buffers output) equals corpus canonical_media_ref of each stored
+    payload with extra_data cut to RT_EXTRA_KEYS — including payloads
+    stored with stdlib float notation."""
     import json
 
-    import orjson
     import pyarrow as pa
 
     from dxf_postgis_converter_spark.corpus import canonical_media_ref
@@ -169,8 +166,8 @@ def test_rebuild_matches_canonical_media_ref(spark, docs):
     stored = ents.collect()
     assert via_arrow == {(r.doc_id, r.span_offset): golden(r.data_json)
                          for r in stored}
-    # synthetic risky payloads: exponent-notation and sub-1e-4 floats must
-    # come out in the stdlib canonical form
+    # payloads stored with stdlib float notation (exponent forms and
+    # floats below 1e-4) come out in the canonical orjson form
     risky = [
         {"attributes": {}, "entity_type": "POINT",
          "extra_data": {"dxftype": "POINT", "v": 1e30},
@@ -187,17 +184,35 @@ def test_rebuild_matches_canonical_media_ref(spark, docs):
          pa.array(djs)], names=["doc_id", "span_offset", "data_json"])
     out = list(rc._rebuild_arrow_batches([batch]))[0].column(2).to_pylist()
     assert out == [golden(dj) for dj in djs]
-    assert "1e-07" in out[0]          # stdlib exponent form, not orjson's
-    assert "1.234e-05" in out[1]
-    # the vectorized scan against its reference regex over a batch of
-    # serialized rows: the stored corpus, the risky payloads and
-    # near-misses around each pattern
-    outs = [r.data_json.encode() for r in stored]
-    outs += [orjson.dumps(p, option=orjson.OPT_SORT_KEYS) for p in risky]
-    outs += [b'{"a":1e5}', b'{"a":2E-3}', b'{"a":3e+1}', b'{"a":0.00001}',
-             b'{"e":"e+1"}', b'{"x1e":"-"}', b'{"a":0.0001}', b'{"E":1}',
-             b'{"s":"9e"}', b'{"s":"e9"}', b'{"a":10.000}', b'{}']
-    n = len(outs)
-    assert rc._risky_rows(outs, n) == {
-        i for i, o in enumerate(outs) if rc._FLOAT_RISK.search(o)}
-    assert 0 < len(rc._risky_rows(outs, n)) < n
+    assert "1e-7" in out[0] and "1e-07" not in out[0]
+    assert "0.00001234" in out[1] and "1.234e-05" not in out[1]
+
+
+def test_corpus_media_refs_are_canonical_fixed_points():
+    """Every corpus payload re-serializes to itself, byte for byte —
+    including the floats below 1e-4 that stdlib and orjson render
+    differently (docs 77 and 177 carry some)."""
+    import orjson
+
+    from dxf_postgis_converter_spark.corpus import build_document
+    from dxf_postgis_converter_spark.functions.decode import canonical_dumps
+
+    for i in range(200):
+        for s in build_document(i)[1]:
+            if s["kind"] == "media":
+                ref = s["media_ref"]
+                assert canonical_dumps(orjson.loads(ref)) == ref, (i, s["offset"])
+
+
+def test_canonical_dumps_fallback_matches_native_bytes():
+    """Values orjson cannot write (a numpy float, an int dict key) take
+    the stdlib fallback and still come out in the canonical bytes."""
+    import numpy as np
+
+    from dxf_postgis_converter_spark.functions.decode import canonical_dumps
+
+    native = {"a": 7.3e-05, "b": {"1": -7e-06, "x": [1.5]}}
+    exotic = {"b": {1: np.float64(-7e-06), "x": [np.float64(1.5)]},
+              "a": np.float64(7.3e-05)}
+    assert canonical_dumps(exotic) == canonical_dumps(native) \
+        == '{"a":0.000073,"b":{"1":-7e-6,"x":[1.5]}}'

@@ -380,28 +380,6 @@ def test_concurrent_same_batch_stream_appends_dedupe(spark, tmp_path):
     assert on_disk == referenced
 
 
-def test_catalog_legacy_single_file_migrates(spark, tmp_path):
-    """A pre-r6 single-file catalog (_catalog.json) loads transparently;
-    the first mutation claims versioned v0 and later reads prefer it."""
-    import json
-
-    from dxf_postgis_converter_spark.sources.snapshot_store import Catalog
-
-    wh = tmp_path / "wh"
-    wh.mkdir()
-    legacy_path = str(wh / "old_table_dir")
-    (wh / "_catalog.json").write_text(json.dumps({"old": legacy_path}))
-    cat = Catalog(spark, str(wh))
-    assert cat.tables() == {"old": legacy_path}
-    assert cat.load("old").path == legacy_path
-    cat.create("new")  # first mutation migrates to _catalog/v0.json
-    assert (wh / "_catalog" / "v0.json").exists()
-    assert set(cat.tables()) == {"old", "new"}
-    cat.rename("old", "older")
-    assert set(cat.tables()) == {"older", "new"}
-    assert cat.load("older").path == legacy_path  # pointer preserved
-
-
 def test_catalog_concurrent_creates_all_land(spark, tmp_path):
     """ADVICE r5: two concurrent creates must BOTH land (the old
     read-modify-write silently lost one — last save wins — leaving that
