@@ -414,11 +414,13 @@ def canonical_dumps(obj) -> str:
     write through here, so a rebuilt media_ref byte-matches the corpus.
     A value orjson cannot write but stdlib can (a numpy float64, a
     non-str dict key) renders with stdlib once and is re-dumped here, so
-    it comes out in the same bytes as its native equivalent."""
+    it comes out in the same bytes as its native equivalent — a NaN or
+    ±Infinity as ``null``, which stdlib would write as ``NaN``."""
     try:
         return orjson.dumps(obj, option=orjson.OPT_SORT_KEYS).decode()
     except TypeError:
-        return orjson.dumps(orjson.loads(json.dumps(obj)),
+        return orjson.dumps(json.loads(json.dumps(obj),
+                                       parse_constant=lambda _: None),
                             option=orjson.OPT_SORT_KEYS).decode()
 
 

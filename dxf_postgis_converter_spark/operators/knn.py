@@ -48,13 +48,17 @@ straight to the floor, and the floor is exempt from both distance
 prunes: its completeness comes from whole-grid ring coverage, not from a
 radius.
 
-Everything is JVM column arithmetic. Join sides are picked from exact
-driver-side counts (checkpointed sources defeat Catalyst's estimates):
-broadcast the small exploded probe ring, else the level-exploded target
-union when it fits, else shuffle both on cell. The placement is decided
-per cell from observed density — the adaptive-replication idea of
-*Parallel Spatial Join Processing with Adaptive Replication* (EDBT
-2025) — not from a fixed probe-count threshold.
+Everything is JVM column arithmetic. The driver-side tables (the sub-res
+counts and the dilated depth map) are Arrow local relations, planned as
+``LocalTableScan``: reading them starts no Python worker, neither in
+their broadcast builds nor under the final join. Join sides are picked
+from exact driver-side counts (checkpointed sources defeat Catalyst's
+estimates): broadcast the small exploded probe ring, else the
+level-exploded target union when it fits, else shuffle both on cell.
+The placement is decided per cell from observed density — the
+adaptive-replication idea of *Parallel Spatial Join Processing with
+Adaptive Replication* (EDBT 2025) — not from a fixed probe-count
+threshold.
 """
 
 from __future__ import annotations
@@ -62,13 +66,35 @@ from __future__ import annotations
 import math
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 from ..index.grid import (
     EXTENT, cell_col, cell_ix, cell_iy, k_ring_col, _IX_SHIFT, _RES_SHIFT,
 )
 from ..session import materialize
+
+
+def _local_table(spark: SparkSession, ddl: str,
+                 columns: list | None = None) -> DataFrame:
+    """A driver-side table (``columns`` in ``ddl`` order; None = empty)
+    as an Arrow local relation. It plans as a ``LocalTableScan``, so
+    scanning it — a broadcast build, or its reuse under a later join —
+    starts no Python worker; a list of tuples would plan as
+    ``Scan ExistingRDD`` over a PythonRDD."""
+    pa_schema = to_arrow_schema(DataType.fromDDL(ddl))
+    return spark.createDataFrame(pa.table(
+        columns or [[] for _ in pa_schema], schema=pa_schema))
+
+
+def _empty_result(spark: SparkSession, probe_id_col: str,
+                  target_id_col: str) -> DataFrame:
+    return _local_table(spark, f"{probe_id_col} string, {target_id_col} "
+                               "string, dist double, rank int")
+
 
 # levels the most recent knn_join selected, as [("oneshot", sorted
 # levels)] — an introspection hook for tests
@@ -118,9 +144,7 @@ def knn_join(
     global _LAST_SCHEDULE
     if n_targets < k:
         _LAST_SCHEDULE = [("oneshot", [])]
-        return spark.createDataFrame(
-            [], schema=f"{probe_id_col} string, {target_id_col} string, "
-                       "dist double, rank int")
+        return _empty_result(spark, probe_id_col, target_id_col)
     max_depth = ((16 - res) // 2) * 2
 
     # d*(n): deepest EVEN offset d where the cell's ring-1 neighborhood
@@ -184,22 +208,25 @@ def knn_join(
             key = (ix >> 2, iy >> 2)
             up[key] = up.get(key, 0) + n
         lvl_counts[L] = up
-    sub_rows = [((L << _RES_SHIFT) | (ix << _IX_SHIFT) | iy, n)
-                for L, m in lvl_counts.items() for (ix, iy), n in m.items()]
+    sub_cells = [(L << _RES_SHIFT) | (ix << _IX_SHIFT) | iy
+                 for L, m in lvl_counts.items() for (ix, iy) in m]
+    sub_ns = [n for m in lvl_counts.values() for n in m.values()]
     floor_lvl = sub_levels[-1]
     if out_n:
         # out-of-extent targets count ONLY at the floor, where ring-1
         # (and ring-3) cover the whole clamped grid — one row suffices:
         # every floor cell's ring-1 contains every floor cell
-        sub_rows.append(((floor_lvl << _RES_SHIFT), out_n))
-    sub_df = spark.createDataFrame(sub_rows, "cell long, n long")
+        sub_cells.append(floor_lvl << _RES_SHIFT)
+        sub_ns.append(out_n)
+    sub_df = _local_table(spark, "cell long, n long", [sub_cells, sub_ns])
 
     # 1. fine counts pyramid, density-local: each target explodes only to
     #    the levels its dilated res-neighborhood can select
     depth_rows = sorted(set(dil1) | set(dil2))
-    depth_df = spark.createDataFrame(
-        [(c, dil1.get(c, 0), dil2.get(c, 0)) for c in depth_rows],
-        "d_cell long, p_dil int, t_dil int") if depth_rows else None
+    depth_df = _local_table(
+        spark, "d_cell long, p_dil int, t_dil int",
+        [depth_rows, [dil1.get(c, 0) for c in depth_rows],
+         [dil2.get(c, 0) for c in depth_rows]]) if depth_rows else None
     if depth_df is not None and fine_levels:
         t2 = (t.withColumn("_rc", cell_col(F.col("t_x"), F.col("t_y"), res))
               .join(F.broadcast(depth_df.select("d_cell", "t_dil")),
@@ -282,9 +309,7 @@ def knn_join(
     used = sorted(by_lvl)
     _LAST_SCHEDULE = [("oneshot", used)]
     if not used:  # pragma: no cover — unreachable once n_targets ≥ k
-        return spark.createDataFrame(
-            [], schema=f"{probe_id_col} string, {target_id_col} string, "
-                       "dist double, rank int")
+        return _empty_result(spark, probe_id_col, target_id_col)
 
     # 4. single candidate join: probe ring-3 cells vs targets keyed at
     #    each USED level (union of narrow per-level projections of t —

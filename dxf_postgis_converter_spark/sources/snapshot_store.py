@@ -52,8 +52,10 @@ import shutil
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from ..operators.merge_modes import ImportMode, apply_mode
@@ -437,19 +439,20 @@ class SnapshotTable:
         touched_idx = {i for i, f in enumerate(manifest["files"])
                        if f["stat_min"] is None}
         if ranges:
-            rdf = self.spark.createDataFrame(
-                [(i, lo, hi) for i, lo, hi in ranges],
-                StructType.fromJson({"type": "struct", "fields": [
-                    {"name": "_idx", "type": "integer", "nullable": False,
-                     "metadata": {}},
-                    {"name": "_lo", "type": next(
-                        f["type"] for f in schema_json["fields"]
-                        if f["name"] == _STAT_COL), "nullable": True,
-                     "metadata": {}},
-                    {"name": "_hi", "type": next(
-                        f["type"] for f in schema_json["fields"]
-                        if f["name"] == _STAT_COL), "nullable": True,
-                     "metadata": {}}]}))
+            stat_type = next(f["type"] for f in schema_json["fields"]
+                             if f["name"] == _STAT_COL)
+            rschema = StructType.fromJson({"type": "struct", "fields": [
+                {"name": "_idx", "type": "integer", "nullable": False,
+                 "metadata": {}},
+                {"name": "_lo", "type": stat_type, "nullable": True,
+                 "metadata": {}},
+                {"name": "_hi", "type": stat_type, "nullable": True,
+                 "metadata": {}}]})
+            # an Arrow local relation (LocalTableScan): its broadcast
+            # build starts no Python worker, as a list of tuples would
+            rdf = self.spark.createDataFrame(pa.table(
+                [list(c) for c in zip(*ranges)],
+                schema=to_arrow_schema(rschema)))
             hits = (source.select(_STAT_COL).distinct()
                     .join(F.broadcast(rdf),
                           (F.col(_STAT_COL) >= F.col("_lo"))

@@ -268,6 +268,47 @@ def main() -> int:
           lambda p: "CartesianProduct" not in p["simple"]
           and "BroadcastNestedLoopJoin" not in p["simple"])])
 
+    # 9. kNN: the operator's driver-side tables (sub-res counts, depth
+    #    maps) are Arrow local relations, so no leaf of the plan is a
+    #    PythonRDD and no broadcast build of them starts a Python worker.
+    #    materialize is patched to identity here: a checkpoint's own plan
+    #    is an ExistingRDD scan by design. Inputs are parquet; the dense
+    #    cluster puts the fine-level branch into the plan.
+    import pyarrow as pa
+    import pyarrow.parquet as pa_parquet
+
+    import dxf_postgis_converter_spark.operators.knn as knn_mod
+
+    knn_in = []
+    for name, pts in (
+            ("probe_id", np.vstack([rng.uniform(0, 8192, size=(60, 2)),
+                                    rng.normal(900, 15, size=(20, 2))])),
+            ("target_id", np.vstack([rng.uniform(0, 8192, size=(1500, 2)),
+                                     rng.normal(900, 15, size=(500, 2))]))):
+        path = os.path.join(tmp, f"knn_{name}.parquet")
+        pa_parquet.write_table(pa.table({name: [f"{name[0]}{i}" for i in range(len(pts))],
+                                  "x": pts[:, 0], "y": pts[:, 1]}), path)
+        knn_in.append(spark.read.parquet(path))
+    materialize = knn_mod.materialize
+    knn_mod.materialize = lambda df: df
+    try:
+        all_ok &= audit(
+            sections, "kNN join (counts-pyramid radius proof)",
+            knn_mod.knn_join(*knn_in, k=3, res=6),
+            [("driver-side tables are LocalTableScans: no PythonRDD leaf "
+              "(no Scan ExistingRDD)",
+              lambda p: "LocalTableScan" in p["simple"]
+              and "ExistingRDD" not in p["simple"]),
+             ("no Python stage",
+              lambda p: not re.search(r"MapIn|EvalPython|InPandas",
+                                      p["simple"])),
+             ("candidate join is an equi-join on cell, not a cartesian "
+              "product",
+              lambda p: "CartesianProduct" not in p["simple"]
+              and "BroadcastNestedLoopJoin" not in p["simple"])])
+    finally:
+        knn_mod.materialize = materialize
+
     lines = [
         "# PLAN_AUDIT — physical plans of the flagship operators",
         "",

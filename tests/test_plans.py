@@ -206,9 +206,68 @@ def test_knn_oneshot_job_count_input_independent(spark):
 
     uniform = jobs("knn-jc-u", uniform_t)
     dense = jobs("knn-jc-d", dense_t)
-    # identical job count whatever the density asks for (measured 19 on
+    # identical job count whatever the density asks for (measured 17 on
     # both at local[4]; not a bound — AQE may split stages differently)
     assert uniform == dense, (uniform, dense)
+
+
+def _knn_parquet_inputs(spark, tmp_path):
+    """kNN probes and targets from parquet files written with pyarrow, so
+    every leaf of a kNN plan is a file scan or one of the operator's own
+    driver-side tables. The targets hold a dense cluster with some
+    probes inside it, so those probes select fine levels and the plan
+    carries the fine-level branch and both broadcasts of the depth
+    table."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(11)
+    tpts = np.vstack([rng.uniform(0, 8192, size=(1500, 2)),
+                      rng.normal(loc=(900, 900), scale=15, size=(500, 2))])
+    ppts = np.vstack([rng.uniform(0, 8192, size=(60, 2)),
+                      rng.normal(loc=(900, 900), scale=15, size=(20, 2))])
+    out = []
+    for name, pre, pts in (("probe_id", "p", ppts), ("target_id", "t", tpts)):
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table({
+            name: [f"{pre}{i}" for i in range(len(pts))],
+            "x": pts[:, 0], "y": pts[:, 1]}), path)
+        out.append(spark.read.parquet(path))
+    return out
+
+
+def test_knn_driver_tables_are_local_relations(spark, tmp_path, monkeypatch):
+    """kNN's driver-side tables (the sub-res counts and the depth maps)
+    are Arrow local relations: no leaf of the plan is a PythonRDD, so no
+    broadcast build or reuse of them starts a Python worker. materialize
+    is patched to identity, because a checkpoint's own plan is an
+    ExistingRDD scan by design."""
+    import dxf_postgis_converter_spark.operators.knn as knn_mod
+
+    monkeypatch.setattr(knn_mod, "materialize", lambda df: df)
+    probes, targets = _knn_parquet_inputs(spark, tmp_path)
+    out = knn_mod.knn_join(probes, targets, k=3, res=6)
+    assert any(L > 6 for L in knn_mod._LAST_SCHEDULE[0][1])  # fine branch
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan[:3000]
+    assert "ExistingRDD" not in plan, plan[:3000]
+
+
+def test_knn_repeated_call_compiles_nothing(spark, tmp_path):
+    """A second identical knn_join call in one session reuses every
+    generated class: the codegen cache holds a whole call's classes, so
+    a warm call pays no Janino compile."""
+    from dxf_postgis_converter_spark.operators.knn import knn_join
+
+    compiles = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+                .CodegenMetrics.METRIC_COMPILATION_TIME())
+    probes, targets = _knn_parquet_inputs(spark, tmp_path)
+    first = knn_join(probes, targets, k=3, res=6).collect()
+    before = compiles.getCount()
+    second = knn_join(probes, targets, k=3, res=6).collect()
+    assert compiles.getCount() - before == 0
+    assert sorted(first) == sorted(second)
 
 
 def test_export_and_roundtrip_plans_single_python_stage(spark, docs_df, tmp_path):

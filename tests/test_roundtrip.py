@@ -216,3 +216,17 @@ def test_canonical_dumps_fallback_matches_native_bytes():
               "a": np.float64(7.3e-05)}
     assert canonical_dumps(exotic) == canonical_dumps(native) \
         == '{"a":0.000073,"b":{"1":-7e-6,"x":[1.5]}}'
+
+
+def test_canonical_dumps_fallback_nan_is_null():
+    """A non-finite numpy float takes the stdlib fallback, which writes
+    ``NaN``/``Infinity``; the canonical bytes carry ``null``, as orjson
+    writes a native NaN."""
+    import numpy as np
+
+    from dxf_postgis_converter_spark.functions.decode import canonical_dumps
+
+    assert canonical_dumps({"a": np.float64("nan")}) \
+        == canonical_dumps({"a": float("nan")}) == '{"a":null}'
+    assert canonical_dumps({"a": [np.float64("inf"), -np.float64("inf")]}) \
+        == '{"a":[null,null]}'
