@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from dxf_postgis_converter_spark.functions.decode import decode_documents, text_spans
 from dxf_postgis_converter_spark.functions.naming import (
-    TRANSLIT, normalize_handle, short_id, table_name,
+    TRANSLIT, helmert_apply, normalize_handle, short_id, table_name,
 )
 from dxf_postgis_converter_spark.functions.text import (
     fingerprint, lang_id, normalize_text, quality_score, token_count,
@@ -259,59 +259,6 @@ _TOKC_SQL = ("CASE WHEN trim(text) = '' THEN 0 ELSE "
 # queries
 # ---------------------------------------------------------------------------
 
-# queries that have (or will have, this round) at least one driver-gate
-# row — r1∪r2∪r3 ∪ the r4 front below. New registrations absent from
-# this ledger are auto-fronted into the sampled window (ADVICE r3).
-# displaced hand-picked front entries from the most recent queries()
-# call — empty unless auto-enroll trimmed the window (ADVICE r4)
-_DISPLACED: list[str] = []
-
-# Registered + oracle'd + selfcheck-covered, but DEFERRED from window
-# auto-enrollment for ONE round. r7 deferred q_insert_expand (the r7
-# rotation was exactly saturated); r8 empties the set as promised —
-# q_insert_expand auto-fronts into the r8 window (mechanism in
-# queries()), displacing exactly the deliberately-last front entry
-# (q_circle_tessellation_bbox, see front list note).
-_DEFER_AUTO_ENROLL = frozenset()
-
-_EVER_GATED = frozenset([
-    # r5 auto-enrolled (rows landed in CORRECTNESS_r05) + r6 hand-fronted
-    "q_knn_dense", "q_events_dedup_stream", "q_pii_redaction",
-    "q_repetition", "q_export_roundtrip", "q_snapshot_merge",
-    "q_video_frames", "q_contamination", "q_export_mleader",
-    "q_3dface_triangle_rule", "q_adaptive_cell_stats", "q_ann_topk",
-    "q_anti_join", "q_arc_tessellation_bbox", "q_area_circle_lines",
-    "q_area_rect_outside", "q_area_rect_points", "q_audio_stats",
-    "q_bbox_join_zones", "q_block_closure", "q_bylayer_style",
-    "q_catalog_columns", "q_circle_tessellation_bbox", "q_clean_funnel",
-    "q_content_sizes", "q_counts_exists", "q_dedup_groups", "q_dedup_keep",
-    "q_ellipse_tessellation_bbox", "q_embedding_neardup",
-    "q_embedding_neardup_lsh", "q_embedding_norms",
-    "q_entity_type_layer_counts", "q_events_hourly", "q_events_hourly_stream",
-    "q_exact_dup_groups", "q_except", "q_filter_project", "q_fingerprints",
-    "q_frame_sample", "q_geom_type_dist", "q_handle_norm", "q_hatch_paths",
-    "q_hatch_signatures", "q_helix_tessellation_bbox", "q_helmert",
-    "q_image_features_sample", "q_insert_attrib_dist", "q_ivf_topk",
-    "q_join_customer_orders", "q_knn_points", "q_lang_id",
-    "q_layer_fingerprints", "q_layer_reconcile", "q_lineage_resume",
-    "q_lsh_ann_topk", "q_lwpolyline_signature", "q_merge_add_objects",
-    "q_merge_overwrite_layers", "q_merge_overwrite_objects",
-    "q_minhash_pairs", "q_multileader_signature", "q_ngram_jaccard_pairs",
-    "q_orderby_limit", "q_pack_sequences", "q_payload_sizes",
-    "q_pip_holed_multi", "q_pip_poly_zones", "q_pip_rect_zones",
-    "q_pip_salted", "q_pip_stream",
-    "q_pricing_summary", "q_quality", "q_raster_align",
-    "q_ray_xline_endpoints", "q_resize_images", "q_rolling_fingerprints",
-    "q_roundtrip_mismatches", "q_save_selected", "q_selection_cascade",
-    "q_selection_propagation", "q_selection_subtract", "q_semi_join",
-    "q_sessionize", "q_simhash_pairs", "q_span_kind_counts",
-    "q_spans_per_doc", "q_stratified_sample", "q_svg_previews",
-    "q_table_names", "q_text_color_dist", "q_text_span_tokens",
-    "q_tile_counts_points", "q_tile_pyramid", "q_tile_zxy", "q_token_stats",
-    "q_topk_window", "q_union_distinct", "q_upsert_merge", "q_word_tokens",
-])
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
@@ -477,12 +424,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_helmert(spark, sf_dir):  # F7 conformal transform as column expr
         p = load_table(spark, sf_dir, "part")
-        a, b, tx, ty = 2.0, 0.5, 100.0, -50.0
-        return p.select(
-            "p_partkey",
-            F.round(F.lit(tx) + F.lit(a) * F.col("p_size") - F.lit(b) * F.col("p_retailprice"), 6).alias("x2"),
-            F.round(F.lit(ty) + F.lit(b) * F.col("p_size") + F.lit(a) * F.col("p_retailprice"), 6).alias("y2"),
-        )
+        x2, y2 = helmert_apply(F.col("p_size"), F.col("p_retailprice"),
+                               (2.0, 0.5, 100.0, -50.0))
+        return p.select("p_partkey", F.round(x2, 6).alias("x2"),
+                        F.round(y2, 6).alias("y2"))
     q["q_helmert"] = q_helmert
 
     # ---------------- corpus: interleaved documents ----------------
@@ -1339,69 +1284,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return video_frame_stats(synthetic_assets(spark, 90))
     q["q_video_frames"] = q_video_frames
 
-    # The driver's correctness gate samples the FIRST 50 registered
-    # queries (r1/r2 evidence: checked set == registration order head).
-    # Rotation policy (VERDICT r3 item 1): every query's most recent
-    # driver row must stay ≤2 rounds old. Round 8 (VERDICT r7 item 1):
-    # rotate the 50 queries whose latest driver row is r6 — the keys of
-    # CORRECTNESS_r06.json — back into the window. 51 candidates chase 50
-    # slots this round (the deferred q_insert_expand auto-fronts as
-    # unseen), so ONE r6 query is displaced to r9; the displacement is
-    # deliberate: q_circle_tessellation_bbox sits LAST so the auto-enroll
-    # trim takes exactly it — the full-circle kernel is the simplest of
-    # the four tessellation-bbox near-twins (arc/ellipse/helix keep their
-    # distinct parameterizations in-window) and its fixed cos/sin grid is
-    # additionally pinned by tests and the r7 SVG/decode rows.
-    front = [
-        # last driver row r6 — rotate back into the window (50)
-        "q_3dface_triangle_rule", "q_anti_join", "q_arc_tessellation_bbox",
-        "q_area_circle_lines", "q_area_rect_points", "q_bbox_join_zones",
-        "q_contamination", "q_counts_exists",
-        "q_dedup_groups", "q_ellipse_tessellation_bbox",
-        "q_entity_type_layer_counts",
-        "q_events_hourly", "q_except", "q_export_mleader",
-        "q_filter_project", "q_handle_norm", "q_hatch_paths",
-        "q_helix_tessellation_bbox", "q_image_features_sample",
-        "q_insert_attrib_dist",
-        "q_ivf_topk", "q_join_customer_orders", "q_lineage_resume",
-        "q_merge_add_objects", "q_merge_overwrite_layers",
-        "q_multileader_signature",
-        "q_orderby_limit", "q_payload_sizes", "q_pip_holed_multi",
-        "q_pip_rect_zones", "q_pip_salted", "q_pip_stream",
-        "q_pricing_summary", "q_ray_xline_endpoints", "q_resize_images",
-        "q_selection_cascade", "q_selection_propagation",
-        "q_selection_subtract",
-        "q_semi_join", "q_span_kind_counts", "q_spans_per_doc",
-        "q_table_names", "q_text_color_dist", "q_text_span_tokens",
-        "q_tile_counts_points", "q_tile_zxy", "q_topk_window",
-        "q_union_distinct", "q_upsert_merge",
-        # deliberately last: displaced to r9 by q_insert_expand's
-        # auto-enrollment (recorded in _DISPLACED)
-        "q_circle_tessellation_bbox",
-    ]
-    # the gate samples exactly this many queries — a longer front would
-    # silently push its own tail out of the window
-    GATE_SAMPLE = 50
-    assert len(front) == GATE_SAMPLE, len(front)
-    assert set(front) <= set(q), sorted(set(front) - set(q))
-    # Auto-enroll (ADVICE r3): any registration not yet in the ever-gated
-    # ledger below jumps ahead of the hand-picked rotation, so a future
-    # query cannot silently miss the driver window. ADVICE r4 (medium):
-    # prepending must TRIM the hand-picked front to keep the window at
-    # exactly GATE_SAMPLE — otherwise the tail silently falls out of the
-    # sampled head. Displaced names are recorded (module global) so the
-    # window composition stays explicit and testable; the assert keeps
-    # displacement confined to the expendable changed-paths tail.
-    unseen = [k for k in q if k not in _EVER_GATED and k not in front
-              and k not in _DEFER_AUTO_ENROLL]
-    global _DISPLACED
-    _DISPLACED = front[GATE_SAMPLE - len(unseen):] if unseen else []
-    assert len(unseen) <= 9, (
-        f"{len(unseen)} auto-enrolled queries would displace rotation "
-        f"entries that must stay in the window: {unseen}")
-    front = (unseen + front)[:GATE_SAMPLE]
-    assert len(front) == GATE_SAMPLE, len(front)
-    return {**{k: q[k] for k in front}, **q}
+    return q
 
 
 # ---------------------------------------------------------------------------

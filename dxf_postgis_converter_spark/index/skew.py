@@ -14,9 +14,9 @@ All three are plain DataFrame code, no planner extensions:
   (hot rows only), so total work is O(rows · hot-depth), and the result
   is a mixed-resolution cell column whose per-cell population is
   bounded — the partitioning key for downstream joins/writes.
-- ``salt_col`` / ``salted_repartition``: deterministic salt from a row
-  key, spreading any residual hot cell across ``n_salt`` reducers (the
-  join-side replication lives in spatial_join.zone_cover_cells).
+- ``salt_col``: deterministic salt from a row key, spreading any
+  residual hot cell across ``n_salt`` reducers (the join-side
+  replication lives in spatial_join.zone_cover_cells).
 """
 
 from __future__ import annotations
@@ -73,17 +73,6 @@ def adaptive_cell_index(
 def salt_col(key_col: str, n_salt: int) -> F.Column:
     """Deterministic salt in [0, n_salt) from a stable row key."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_salt)).cast("int")
-
-
-def salted_repartition(df: DataFrame, cell: str = "cell",
-                       key_col: str = "handle", n_salt: int = 8,
-                       num_partitions: int | None = None) -> DataFrame:
-    """Repartition on (cell, salt) so one hot cell spreads over n_salt
-    partitions — the pre-shuffle step before co-located writes/joins."""
-    salted = df.withColumn("_salt", salt_col(key_col, n_salt))
-    if num_partitions:
-        return salted.repartition(num_partitions, F.col(cell), F.col("_salt"))
-    return salted.repartition(F.col(cell), F.col("_salt"))
 
 
 def cell_population_stats(df: DataFrame, cell: str = "cell") -> DataFrame:

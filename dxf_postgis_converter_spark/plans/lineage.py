@@ -163,14 +163,3 @@ def run_stage_from_table(
     return run_stage(spark, stage=stage, snapshot_id=sid,
                      source=table.read(version=v), transform=transform,
                      out_dir=out_dir, lineage=lineage, **kw)
-
-
-def stage_metrics(spark: SparkSession, lineage: LineageLog) -> DataFrame:
-    """Operational rollup: per (stage, snapshot) bucket/row totals."""
-    return (
-        lineage.read(spark)
-        .groupBy("stage", "snapshot_id")
-        .agg(F.countDistinct(BUCKET_COL).alias("n_buckets"),
-             F.sum("row_count").alias("total_rows"),
-             F.max("ts").alias("last_update"))
-    )

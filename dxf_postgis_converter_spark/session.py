@@ -106,8 +106,11 @@ def materialize(df: DataFrame) -> DataFrame:
     truncated, for an intermediate that several consumers (or the rounds
     of a driver loop, whose plan then stays flat) would recompute.
 
-    Lazy: the next action over the result stores it, so the barrier adds
-    no job of its own. Its blocks are freed when the DataFrame is
+    Lazy above its shuffles: over a plan with an exchange, AQE runs the
+    shuffle stages when the call is made (it finalizes them to build the
+    checkpoint RDD); the remaining work runs, and is stored, at the next
+    action over the result. A plan with no exchange runs no job at call
+    time. Its blocks are freed when the DataFrame is
     garbage-collected, so there is nothing to unpersist. A failed task
     recomputes only its own partition; durability across executor loss
     belongs to ``plans/lineage.py``'s checkpoint tables, not here.

@@ -70,20 +70,6 @@ class CommitConflict(RuntimeError):
     (their join result is stale)."""
 
 
-# identity under which append_stream_batch records its epoch high-water
-# mark when the caller passes no stream_id (single-sink tables)
-_DEFAULT_STREAM = "default"
-
-
-class StreamBatchRegression(RuntimeError):
-    """A streaming batch id arrived STRICTLY below its stream's committed
-    high-water mark. Within one Structured Streaming query epochs only
-    grow, so this means a reset checkpoint or a second query sharing the
-    same stream identity — skipping it as 'already committed' would be
-    silent data loss (ADVICE r6). Pass a distinct ``stream_id`` per
-    query/checkpoint to dedup independently."""
-
-
 def _file_stats(path: str) -> dict:
     """Per-file stats from the parquet footer (rows, bytes, min/max of
     the pruning column) — the manifest is built driver-side from
@@ -202,39 +188,17 @@ class SnapshotTable:
                     {"path": os.path.relpath(full, self.path)} | _file_stats(full))
         return entries
 
-    def _stream_hwms(self, version: int | None) -> dict[str, int]:
-        """Per-stream-identity high-water marks of committed foreachBatch
-        epoch ids (Iceberg keys its streaming commit dedup by query id the
-        same way)."""
-        if version is None:
-            return {}
-        return dict(self._manifest(version).get("stream_batches") or {})
-
     def _commit(self, files: list[dict], operation: str,
-                schema_json: dict, expected_parent: int | None,
-                stream_batch: int | None = None,
-                stream_id: str = None) -> int:
+                schema_json: dict, expected_parent: int | None) -> int:
         """Claim the next version atomically. ``expected_parent`` pins the
         snapshot this commit was planned against — a mismatch at claim
-        time means a concurrent writer won and the plan is stale.
-
-        Every manifest carries ``stream_batches`` (per-stream-identity
-        high-water marks of committed foreachBatch epoch ids) forward from
-        its parent, so stream replay dedup survives ``expire_snapshots`` —
-        the dedup no longer depends on retained history (ADVICE r5), and
-        since round 7 it is KEYED by stream identity (ADVICE r6) so a
-        second streaming query cannot be silently swallowed by the first
-        one's mark."""
+        time means a concurrent writer won and the plan is stale."""
         os.makedirs(self._snap_dir, exist_ok=True)
         head = self.current_version()
         if head != expected_parent:
             raise CommitConflict(
                 f"planned against v{expected_parent}, head is v{head}")
         version = 0 if head is None else head + 1
-        hwms = self._stream_hwms(head)
-        if stream_batch is not None:
-            sid = stream_id or _DEFAULT_STREAM
-            hwms[sid] = max(hwms.get(sid, -1), int(stream_batch))
         manifest = {
             "version": version,
             "snapshot_id": uuid.uuid4().hex,
@@ -243,7 +207,6 @@ class SnapshotTable:
             "committed_at": time.time(),
             "schema": schema_json,
             "files": files,
-            "stream_batches": hwms,
         }
         tmp = os.path.join(self._snap_dir, f".tmp-{manifest['snapshot_id']}.json")
         with open(tmp, "w") as f:
@@ -320,89 +283,6 @@ class SnapshotTable:
                                     self._refresh_schema(schema_json), head)
             except CommitConflict:
                 if attempt == _retries:
-                    raise
-        raise AssertionError("unreachable")
-
-    def append_stream_batch(self, df: DataFrame, batch_id: int,
-                            stream_id: str | None = None,
-                            _retries: int = 3) -> int | None:
-        """Idempotent per-micro-batch append for ``foreachBatch`` sinks:
-        the batch id is recorded in the snapshot ``operation`` and a
-        replayed batch (foreachBatch's at-least-once contract) is skipped
-        — Iceberg's streaming epoch-id commit dedup. Returns the committed
-        version, or None when this batch id already has a snapshot.
-
-        Dedup is primarily the head manifest's per-stream high-water mark
-        (``stream_batches``, carried forward by EVERY commit), so it
-        survives ``expire_snapshots`` (ADVICE r5: the old operation-string
-        scan forgot batches once their snapshots were expired and a replay
-        re-appended duplicate rows). The mark is KEYED by ``stream_id``
-        (Iceberg keys by query id the same way): distinct streaming
-        queries into one table must pass distinct ids to dedup
-        independently. Within one identity, Structured Streaming epoch ids
-        are strictly increasing, so a replay can only ever be of the mark
-        itself — a batch id STRICTLY below the mark means a reset
-        checkpoint (epochs restarted at 0) or a second query sharing the
-        default identity, and silently skipping it would be silent data
-        loss: it raises ``StreamBatchRegression`` instead (ADVICE r6).
-        The operation-string scan stays as a belt-and-braces check over
-        retained history.
-
-        Concurrent replays of the SAME batch are safe: the loser's
-        ``CommitConflict`` triggers a re-check, finds the winner's
-        snapshot, drops its own staged files, and skips."""
-        sid = stream_id or _DEFAULT_STREAM
-        op = (f"stream-append:batch={int(batch_id)}" if sid == _DEFAULT_STREAM
-              else f"stream-append:stream={sid}:batch={int(batch_id)}")
-
-        def committed() -> bool:
-            hwm = self._stream_hwms(self.current_version()).get(sid, -1)
-            if int(batch_id) < hwm:
-                raise StreamBatchRegression(
-                    f"stream '{sid}' batch {int(batch_id)} is below the "
-                    f"committed high-water mark {hwm}: a replay can only "
-                    f"be of the mark itself. This is a reset checkpoint "
-                    f"or a second streaming query sharing the identity — "
-                    f"pass a distinct stream_id per query/checkpoint.")
-            if int(batch_id) == hwm:
-                return True
-            return any(self._manifest(v)["operation"] == op
-                       for v in self._versions())
-
-        def drop_staged(files) -> None:
-            if files:
-                shutil.rmtree(os.path.join(self.path, os.path.dirname(
-                    files[0]["path"])), ignore_errors=True)
-
-        if committed():
-            return None
-        schema_json = self._schema_json(df)
-        new_files = self._stage_files(df.select(
-            *[f["name"] for f in schema_json["fields"]]))
-        for attempt in range(_retries + 1):
-            # the dedup check must be bound to the head the commit is
-            # planned against: read head FIRST, then scan history — any
-            # same-batch commit that lands after the scan also bumps the
-            # head past `head`, so our _commit(expected_parent=head) loses
-            # the version claim and we re-check. (Checking only before the
-            # loop is a TOCTOU hole: a racing replay's commit advances the
-            # head we then plan against fresh, no conflict, duplicate rows
-            # — caught by test_concurrent_same_batch_stream_appends_dedupe.)
-            head = self.current_version()
-            if committed():
-                drop_staged(new_files)  # a concurrent replay won
-                return None
-            carried = [] if head is None else self._manifest(head)["files"]
-            try:
-                return self._commit(carried + new_files, op,
-                                    self._refresh_schema(schema_json), head,
-                                    stream_batch=int(batch_id),
-                                    stream_id=sid)
-            except CommitConflict:
-                if attempt == _retries:
-                    if committed():
-                        drop_staged(new_files)
-                        return None
                     raise
         raise AssertionError("unreachable")
 
@@ -505,8 +385,7 @@ class SnapshotTable:
         for v in versions:
             m = self._manifest(v)
             op = m["operation"]
-            is_append = op == "append" or op.startswith("stream-append:")
-            if not is_append and not include_rewrites:
+            if op != "append" and not include_rewrites:
                 raise ValueError(
                     f"v{v} is '{op}' — not an append; incremental rows "
                     "would over-report (pass include_rewrites=True to "

@@ -1,42 +1,10 @@
-"""SQL surface: register the engine's tables as temp views so everything
-downstream is plain ``spark.sql`` (S15 catalog scans —
-postgis_connection.py:139-160 lists schemas/tables; here the catalog is
-Spark's own).
-
-Views:
-  documents(doc_id, spans)           — the interleaved corpus
-  entities(doc_id, span_offset, …)   — decoded (cached per session)
-  zones(zone_id, kind, …)            — the polygon side
-plus the driver testdata tables when a sf_dir is given.
-"""
+"""Catalog introspection over Spark's own catalog (S15 —
+postgis_connection.py:139-160 reads the catalog to list schemas, tables
+and columns)."""
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-
-from ..corpus import load_documents, load_zones
-from ..functions.decode import decode_documents
-from .tables import TESTDATA_TABLES, load_table
-
-
-def register_views(spark: SparkSession, sf: float = 0.001,
-                   testdata_dir: str | None = None) -> list[str]:
-    """Create/replace the engine temp views; returns the view names."""
-    docs = load_documents(spark, sf)
-    docs.createOrReplaceTempView("documents_corpus")
-    decode_documents(docs).createOrReplaceTempView("entities")
-    load_zones(spark, sf).createOrReplaceTempView("zones")
-    names = ["documents_corpus", "entities", "zones"]
-    if testdata_dir:
-        for t in TESTDATA_TABLES:
-            load_table(spark, testdata_dir, t).createOrReplaceTempView(t)
-            names.append(t)
-    return names
-
-
-def list_catalog_tables(spark: SparkSession) -> list[str]:
-    """S15: enumerate visible tables/views via the Spark catalog."""
-    return sorted(t.name for t in spark.catalog.listTables())
 
 
 def column_ordinals(spark: SparkSession, tables: list[str]):

@@ -16,8 +16,6 @@ sinks go through foreachBatch → the lineage-checkpointed writer
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -110,29 +108,6 @@ def write_stream_exactly_once(stream_df: DataFrame, out_dir: str,
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("_batch").parquet(out_dir))
-
-    return (stream_df.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir))
-
-
-def write_stream_to_snapshot_table(stream_df: DataFrame, table,
-                                   checkpoint_dir: str,
-                                   stream_id: str | None = None):
-    """Exactly-once streaming sink into a SnapshotTable: every micro-batch
-    commits ONE snapshot via ``append_stream_batch`` (batch id recorded in
-    the operation, replays deduped — Iceberg's streaming epoch-id rule).
-    Because each commit is an APPEND, downstream consumers can follow the
-    table with ``table.changes(v)`` as an incremental CDC read. Returns
-    the DataStreamWriter (caller starts it).
-
-    ``stream_id`` keys the replay-dedup high-water mark (default: the
-    checkpoint dir's basename, so distinct checkpoints dedup
-    independently and a SECOND query into the same table is not silently
-    swallowed by the first one's mark — ADVICE r6)."""
-    sid = stream_id or os.path.basename(os.path.normpath(checkpoint_dir))
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        table.append_stream_batch(batch_df, batch_id, stream_id=sid)
 
     return (stream_df.writeStream.foreachBatch(sink)
             .option("checkpointLocation", checkpoint_dir))

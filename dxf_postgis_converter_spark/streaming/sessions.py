@@ -1,39 +1,19 @@
 """Gap-based sessionization — the engine's custom stateful operator.
 
-Batch twin: pure window functions (lag → gap flag → running sum =
-session index; the gaps-and-islands formulation, fully SQL-expressible —
-the DuckDB oracle for q_sessionize).
+Pure window functions (lag → gap flag → running sum = session index; the
+gaps-and-islands formulation, fully SQL-expressible — the DuckDB oracle
+for q_sessionize).
 
-Streaming twin: ``applyInPandasWithState`` keyed by user, carrying
-(session start, last ts, event count, value sum) across micro-batches
-and emitting a session row when the watermark passes last_ts + gap.
-Parity contract: for a fully-drained availableNow run, the emitted
-sessions equal the batch twin's output (tests/test_streaming_sessions.py).
-
-Scale: batch = one shuffle on user_id + one window sort; streaming state
-is O(open sessions per user) and expires via the event-time timeout.
+Scale: one shuffle on user_id + one window sort.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 DEFAULT_GAP_MIN = 30
-
-SESSION_SCHEMA = T.StructType([
-    T.StructField("user_id", T.LongType()),
-    T.StructField("session_start", T.TimestampType()),
-    T.StructField("session_end", T.TimestampType()),
-    T.StructField("n_events", T.LongType()),
-    T.StructField("total_value", T.DoubleType()),
-])
 
 
 def sessionize_batch(events: DataFrame, gap_min: int = DEFAULT_GAP_MIN) -> DataFrame:
@@ -52,69 +32,4 @@ def sessionize_batch(events: DataFrame, gap_min: int = DEFAULT_GAP_MIN) -> DataF
              F.round(F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 2)
              .alias("total_value"))
         .drop("_sid")
-    )
-
-
-def _session_fn(gap_min: int):
-    gap_s = gap_min * 60
-
-    def fn(key: Any, pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        rows = pd.concat(list(pdfs)) if not isinstance(pdfs, pd.DataFrame) else pdfs
-        out = []
-        if state.hasTimedOut:
-            if state.exists:
-                start, end, n, total = state.get
-                out.append((user_id, start, end, n, round(total, 2)))
-                state.remove()
-        else:
-            # Interval-merge sweep: new events are intervals [ts, ts]; the
-            # open session from state is an interval [start, end] whose
-            # internal gaps are already <= gap. Sorting all intervals by
-            # start and merging adjacent ones whose gap is <= gap_s is
-            # exactly what the batch twin's global sort computes — so any
-            # number of late events (within the watermark) merge with each
-            # other AND with the open session identically to batch
-            # (ADVICE r2: the old per-event walk emitted two late events
-            # within gap of each other as two single-event sessions).
-            items = [(ts.to_pydatetime(), ts.to_pydatetime(), 1, float(v))
-                     for ts, v in zip(rows["ts"], rows["value"])]
-            if state.exists:
-                items.append(state.get)
-            items.sort(key=lambda it: (it[0], it[1]))
-            cur = items[0]
-            for s2, e2, n2, t2 in items[1:]:
-                cs, ce, cn, ct = cur
-                if (s2 - ce).total_seconds() > gap_s:
-                    # earlier session, already > gap before the next one:
-                    # emit closed (late data for it would be beyond the
-                    # watermark by construction of the open session)
-                    out.append((user_id, cs, ce, cn, round(ct, 2)))
-                    cur = (s2, e2, n2, t2)
-                else:
-                    cur = (cs, max(ce, e2), cn + n2, ct + t2)
-            start, end, n, total = cur
-            state.update((start, end, n, total))
-            # close the session once event time passes end + gap
-            state.setTimeoutTimestamp(int(end.timestamp() * 1000) + gap_s * 1000)
-        yield pd.DataFrame(out, columns=[f.name for f in SESSION_SCHEMA.fields])
-
-    return fn
-
-
-def sessionize_stream(events: DataFrame, gap_min: int = DEFAULT_GAP_MIN,
-                      watermark: str = "2 hours") -> DataFrame:
-    """Streaming sessionization via applyInPandasWithState (event-time
-    timeout = session close). Emits each session exactly once."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _session_fn(gap_min),
-            outputStructType=SESSION_SCHEMA,
-            stateStructType="session_start timestamp, session_end timestamp, "
-                            "n_events long, total_value double",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
     )

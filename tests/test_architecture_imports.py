@@ -177,3 +177,72 @@ def test_no_package_module_imports_entry_or_tests():
                 if head in ("__spark_entry__", "tests", "scripts", "bench"):
                     bad.append(f"{rel}:{node.lineno} imports {n}")
     assert not bad, "\n".join(bad)
+
+
+# Top-level names with no caller outside tests/ that stay on purpose:
+# Python twins of the reference's own code ("mirror") and independent
+# implementations the tests check the engine against ("oracle").
+_NO_CALLER_OK = {
+    "import_report": "mirror",
+    "reconstruction_report": "mirror",
+    "propagate_selection_up": "mirror",
+    "circle_bbox_inside": "mirror",
+    "circle_bbox_overlap": "mirror",
+    "export_content": "mirror",
+    "parse_payload": "mirror",
+    "scan_dxf_files": "mirror",
+    "dxf_files_to_documents": "mirror",
+    "read_world_file": "mirror",
+    "Catalog": "mirror",
+    "transliterate_py": "oracle",
+    "unescape_dxf_unicode_py": "oracle",
+    "dxf_unicode_unescape": "oracle",
+    "helmert_fit": "oracle",
+    "points_covered": "oracle",
+    "_label_propagation": "oracle",
+}
+
+# what counts as a caller: the package itself and the programs that run it
+_CALLER_ROOTS = (PKG, "perfbench", "scripts", "__spark_entry__.py", "bench.py")
+
+
+def _names_used(node) -> set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def test_every_package_definition_has_a_caller():
+    """Every top-level function or class in the package is referenced
+    from code outside tests/ — its own body does not count — or is a
+    named mirror/oracle exemption. A capability only its own test calls
+    is dead code."""
+    repo = os.path.dirname(ROOT)
+    defined: dict[str, str] = {}
+    used: set[str] = set()
+    for root in _CALLER_ROOTS:
+        path = os.path.join(repo, root)
+        files = ([path] if os.path.isfile(path) else
+                 [os.path.join(d, f) for d, _, fs in os.walk(path)
+                  for f in fs if f.endswith(".py")])
+        for full in files:
+            tree = ast.parse(open(full, encoding="utf-8").read(), filename=full)
+            for node in tree.body:
+                if root == PKG and isinstance(
+                        node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                               ast.ClassDef)):
+                    defined[node.name] = os.path.relpath(full, repo)
+                    used |= _names_used(node) - {node.name}
+                else:
+                    used |= _names_used(node)
+    uncalled = sorted(f"{defined[n]}: {n}" for n in set(defined) - used
+                      if n not in _NO_CALLER_OK)
+    assert not uncalled, "no caller outside tests/:\n" + "\n".join(uncalled)
+    stale = sorted(n for n in _NO_CALLER_OK if n not in defined or n in used)
+    assert not stale, f"exemptions that are gone or now called: {stale}"

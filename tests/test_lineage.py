@@ -8,7 +8,6 @@ from dxf_postgis_converter_spark.plans.lineage import (
     BUCKET_COL,
     LineageLog,
     run_stage,
-    stage_metrics,
 )
 
 N_BUCKETS = 8
@@ -90,7 +89,10 @@ def test_new_snapshot_not_confused(spark, docs_df, dirs):
     s = run_stage(spark, stage="decode", snapshot_id="v2", source=docs_df,
                   transform=_transform, out_dir=out_dir, lineage=log, n_buckets=N_BUCKETS)
     assert s["processed_buckets"] == N_BUCKETS  # v2 resumes nothing from v1
-    m = {(r.stage, r.snapshot_id): r for r in stage_metrics(spark, log).collect()}
+    m = {(r.stage, r.snapshot_id): r for r in log.read(spark)
+         .groupBy("stage", "snapshot_id")
+         .agg(F.countDistinct(BUCKET_COL).alias("n_buckets"),
+              F.sum("row_count").alias("total_rows")).collect()}
     assert m[("decode", "v1")].n_buckets == N_BUCKETS
     assert m[("decode", "v2")].n_buckets == N_BUCKETS
     assert m[("decode", "v1")].total_rows == m[("decode", "v2")].total_rows
@@ -145,7 +147,8 @@ def test_run_stage_from_snapshot_table(spark, docs_df, dirs, tmp_path):
                               lineage=log, n_buckets=N_BUCKETS)
     assert s3["processed_buckets"] == N_BUCKETS
 
-    sids = {r.snapshot_id for r in stage_metrics(spark, log).collect()}
+    sids = {r.snapshot_id
+            for r in log.read(spark).select("snapshot_id").distinct().collect()}
     assert sids == {src._manifest(0)["snapshot_id"],
                     src._manifest(1)["snapshot_id"]}
     # the final out_dir state reflects the NEW snapshot's full input

@@ -211,6 +211,33 @@ def test_knn_oneshot_job_count_input_independent(spark):
     assert uniform == dense, (uniform, dense)
 
 
+def test_materialize_runs_shuffle_stages_at_call(spark):
+    """session.materialize is lazy only above its shuffles: over a plan
+    with an exchange, AQE runs the shuffle stages when the call is made;
+    over a plan with none, the call runs no job. The remaining work runs
+    at the next action."""
+    from dxf_postgis_converter_spark.session import materialize
+
+    sc = spark.sparkContext
+
+    def jobs(name, df):
+        sc.setJobGroup(name, "materialize job-count probe")
+        try:
+            out = materialize(df)
+            at_call = len(sc.statusTracker().getJobIdsForGroup(name))
+            out.count()
+            total = len(sc.statusTracker().getJobIdsForGroup(name))
+        finally:
+            sc.setJobGroup(None, None)
+        return at_call, total
+
+    grouped = spark.range(200_000).groupBy((F.col("id") % 97).alias("k")).count()
+    at_call, total = jobs("mat-exchange", grouped)
+    assert at_call >= 1 and total > at_call, (at_call, total)
+    at_call, total = jobs("mat-narrow", spark.range(200_000).filter("id % 3 = 0"))
+    assert at_call == 0 and total >= 1, (at_call, total)
+
+
 def _knn_parquet_inputs(spark, tmp_path):
     """kNN probes and targets from parquet files written with pyarrow, so
     every leaf of a kNN plan is a file scan or one of the operator's own

@@ -9,7 +9,7 @@ from dxf_postgis_converter_spark.index.skew import (
     adaptive_cell_index,
     cell_population_stats,
     hot_cells,
-    salted_repartition,
+    salt_col,
 )
 
 CAP = 50
@@ -61,7 +61,7 @@ def test_adaptive_respects_max_res(skewed_points):
 
 def test_salted_repartition_spreads_hot_cell(skewed_points):
     base = skewed_points.withColumn("cell", cell_col(F.col("x"), F.col("y"), 6))
-    salted = salted_repartition(base, n_salt=8, num_partitions=16)
+    salted = base.repartition(16, F.col("cell"), salt_col("handle", 8))
     sizes = salted.groupBy(F.spark_partition_id().alias("p")).count().collect()
     # hot cell (500+ rows) must not land in a single partition
     assert max(r["count"] for r in sizes) < 500

@@ -344,42 +344,6 @@ def test_clustered_compaction_tightens_pruning(table, spark):
     assert table.read().count() == 9  # 8 original rows + 1 merged insert
 
 
-def test_concurrent_same_batch_stream_appends_dedupe(spark, tmp_path):
-    """Two replays of the SAME micro-batch race: exactly one snapshot
-    lands, the loser cleans up its staged files, rows appear once."""
-    import threading
-
-    t = SnapshotTable(spark, str(tmp_path / "stream_race"))
-    t.append(_ents(spark, "seed", "L0", ["s"]))
-    results, errors = [], []
-
-    def writer():
-        try:
-            df = _ents(spark, "docB", "L1", ["b1", "b2"])
-            results.append(t.append_stream_batch(df, batch_id=7))
-        except Exception as e:  # noqa: BLE001
-            errors.append(repr(e))
-
-    threads = [threading.Thread(target=writer) for _ in range(4)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert not errors
-    assert sorted(r is None for r in results) == [False, True, True, True]
-    ops = [h["operation"] for h in t.history()]
-    assert ops.count("stream-append:batch=7") == 1
-    assert t.read().count() == 3  # seed + b1 + b2, exactly once
-    # losers' staged files are gone: disk holds exactly the files some
-    # manifest references, nothing more
-    on_disk = {os.path.relpath(os.path.join(r, f), t.path)
-               for r, _, fs in os.walk(t._data_dir) for f in fs
-               if f.endswith(".parquet")}
-    referenced = {p for v in t._versions()
-                  for p in (f["path"] for f in t._manifest(v)["files"])}
-    assert on_disk == referenced
-
-
 def test_catalog_concurrent_creates_all_land(spark, tmp_path):
     """ADVICE r5: two concurrent creates must BOTH land (the old
     read-modify-write silently lost one — last save wins — leaving that
@@ -409,57 +373,6 @@ def test_catalog_concurrent_creates_all_land(spark, tmp_path):
         cat.create("t0")
     cat.rename("t0", "t9")
     assert "t9" in cat.tables() and "t0" not in cat.tables()
-
-
-def test_stream_batch_dedup_survives_expiry(spark, tmp_path):
-    """ADVICE r5: replay dedup must not depend on retained history — the
-    per-stream high-water mark rides EVERY manifest, so a replay of the
-    mark batch whose snapshot was expired (and even after later
-    non-stream commits) is still skipped. Since round 7 (ADVICE r6) a
-    batch STRICTLY below the mark is not a legal replay within one
-    stream identity (epochs only grow) and raises instead of silently
-    skipping."""
-    from dxf_postgis_converter_spark.sources.snapshot_store import (
-        StreamBatchRegression,
-    )
-    t = SnapshotTable(spark, str(tmp_path / "ledger"))
-    assert t.append_stream_batch(_ents(spark, "d0", "L0", ["a"]), batch_id=0) is not None
-    assert t.append_stream_batch(_ents(spark, "d1", "L0", ["b"]), batch_id=1) is not None
-    t.expire_snapshots(keep_last=1, older_than_s=0.0)
-    assert t.append_stream_batch(_ents(spark, "d1", "L0", ["b"]), batch_id=1) is None
-    t.append(_ents(spark, "d2", "L0", ["c"]))  # non-stream commit carries the mark
-    assert t.append_stream_batch(_ents(spark, "d1", "L0", ["b"]), batch_id=1) is None
-    assert t.append_stream_batch(_ents(spark, "d3", "L0", ["d"]), batch_id=2) is not None
-    # a regressed epoch (reset checkpoint / identity collision) is LOUD,
-    # not silently swallowed — and writes nothing
-    with pytest.raises(StreamBatchRegression, match="below the"):
-        t.append_stream_batch(_ents(spark, "dX", "L0", ["x"]), batch_id=0)
-    assert t.read().count() == 4  # a, b, c, d — each exactly once
-
-
-def test_stream_batch_marks_keyed_by_stream_identity(spark, tmp_path):
-    """ADVICE r6: a SECOND streaming query into the same table (its
-    epochs restart at 0) must not be swallowed by the first query's
-    high-water mark — marks are keyed by stream_id, and each identity
-    dedups its own replays independently."""
-    t = SnapshotTable(spark, str(tmp_path / "two_streams"))
-    assert t.append_stream_batch(_ents(spark, "a0", "L0", ["a"]),
-                                 batch_id=0, stream_id="qA") is not None
-    assert t.append_stream_batch(_ents(spark, "a1", "L0", ["b"]),
-                                 batch_id=1, stream_id="qA") is not None
-    # second query, fresh checkpoint: epoch 0 again — must COMMIT
-    assert t.append_stream_batch(_ents(spark, "b0", "L0", ["c"]),
-                                 batch_id=0, stream_id="qB") is not None
-    # each identity's replay-of-mark still dedups
-    assert t.append_stream_batch(_ents(spark, "a1", "L0", ["b"]),
-                                 batch_id=1, stream_id="qA") is None
-    assert t.append_stream_batch(_ents(spark, "b0", "L0", ["c"]),
-                                 batch_id=0, stream_id="qB") is None
-    assert t.read().count() == 3
-    # marks survive expiry per identity
-    t.expire_snapshots(keep_last=1, older_than_s=0.0)
-    assert t.append_stream_batch(_ents(spark, "b0", "L0", ["c"]),
-                                 batch_id=0, stream_id="qB") is None
 
 
 def test_changes_from_expired_base_fails_loudly(table, spark):

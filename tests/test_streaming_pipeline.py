@@ -92,64 +92,3 @@ def test_pip_stream_sink_resume_heals_partial_batch(spark, docs_df, zones_df,
     key = lambda r: (r.doc_id, r.handle, r.zone_id)
     assert sorted(map(key, got)) == sorted(map(key, want))
     assert len(want) > 0
-
-
-def test_stream_into_snapshot_table_exactly_once_cdc(spark, docs_df, zones_df,
-                                                     tmp_path_factory):
-    """Stream → SnapshotTable: one append snapshot per micro-batch keyed
-    by batch id, replay deduped, and the whole run is consumable as an
-    incremental changes() read (append-only ⇒ exact CDC) that equals the
-    batch pipeline's rows."""
-    from dxf_postgis_converter_spark.sources.snapshot_store import SnapshotTable
-    from dxf_postgis_converter_spark.streaming.events import (
-        write_stream_to_snapshot_table,
-    )
-
-    src = str(tmp_path_factory.mktemp("snap_stream_src"))
-    ck = str(tmp_path_factory.mktemp("snap_stream_ck"))
-    docs_df.repartition(6).write.mode("overwrite").parquet(src)
-    table = SnapshotTable(spark, str(tmp_path_factory.mktemp("snap_tbl") / "t"))
-
-    hits = streaming_zone_hits(
-        read_document_stream(spark, src, max_files_per_trigger=2), zones_df
-    ).select("doc_id", "handle", "zone_id")
-    q = (write_stream_to_snapshot_table(hits, table, ck)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    hist = table.history()
-    assert len(hist) >= 2  # maxFilesPerTrigger=2 over 6 files → ≥2 batches
-    ops = [h["operation"] for h in hist]
-    # r7: the replay mark is keyed by stream identity (default: the
-    # checkpoint basename), recorded in the operation string
-    import os as _os
-    sid = _os.path.basename(_os.path.normpath(ck))
-    assert all(op.startswith(f"stream-append:stream={sid}:batch=")
-               for op in ops)
-    assert len(set(ops)) == len(ops)  # one snapshot per distinct batch
-
-    batch_docs = spark.read.parquet(src)
-    ents = decode_documents(batch_docs, keep_media_ref=False)
-    pts = ents.filter(F.col("geom_type") == "POINT").select(
-        "doc_id", "handle", F.col("xmin").alias("x"), F.col("ymin").alias("y"))
-    want = point_in_polygon_join(pts, zones_df, res=6) \
-        .select("doc_id", "handle", "zone_id").collect()
-    key = lambda r: (r.doc_id, r.handle, r.zone_id)
-    assert sorted(map(key, table.read().collect())) == sorted(map(key, want))
-
-    # append-only history ⇒ incremental read is exact CDC: changes(0)
-    # is precisely the full table minus v0's rows (as multisets)
-    from collections import Counter
-    inc = Counter(map(key, table.changes(0).collect()))
-    full = Counter(map(key, table.read().collect()))
-    v0 = Counter(map(key, table.read(version=0).collect()))
-    assert inc == full - v0 and sum(inc.values()) > 0
-
-    # replaying an already-committed batch id UNDER THE SAME stream
-    # identity is a no-op (the mark batch is the only legal replay)
-    max_batch = max(int(h["operation"].rsplit("=", 1)[1]) for h in hist)
-    n_before = table.read().count()
-    assert table.append_stream_batch(
-        table.read(version=0), max_batch, stream_id=sid) is None
-    assert table.read().count() == n_before
-    assert len(table.history()) == len(hist)

@@ -1,16 +1,12 @@
-"""Custom stateful operator: gap sessionization — batch twin vs
-applyInPandasWithState streaming twin."""
+"""Custom stateful operator: gap sessionization over window functions."""
 
 import datetime as dt
 
 import pyspark.sql.functions as F
 import pytest
 
-from dxf_postgis_converter_spark.streaming.events import EVENTS_SCHEMA, read_event_stream
-from dxf_postgis_converter_spark.streaming.sessions import (
-    sessionize_batch,
-    sessionize_stream,
-)
+from dxf_postgis_converter_spark.streaming.events import EVENTS_SCHEMA
+from dxf_postgis_converter_spark.streaming.sessions import sessionize_batch
 
 EVENTS = "/root/testdata/sf0.001/events.parquet"
 
@@ -38,147 +34,3 @@ def test_batch_gap_splits(spark):
     s = sessionize_batch(e, gap_min=30).orderBy("session_start").collect()
     assert len(s) == 2
     assert s[0].n_events == 3 and s[1].n_events == 2
-
-
-def test_stream_matches_batch(spark, small_events, tmp_path_factory):
-    """Drained availableNow stream (with per-user flush sentinels to push
-    the watermark past every real session) == batch twin on real sessions."""
-    gap = 30
-    max_ts = small_events.agg(F.max("ts")).first()[0]
-    flush_ts = max_ts + dt.timedelta(days=2)
-    sentinels = small_events.select("user_id").distinct().select(
-        F.lit(10**9).alias("event_id"), F.lit(flush_ts).alias("ts"),
-        "user_id", F.lit("flush").alias("event_type"), F.lit(0.0).alias("value"))
-    full = small_events.select(*[f.name for f in EVENTS_SCHEMA.fields]).unionByName(sentinels)
-
-    src = str(tmp_path_factory.mktemp("sess_src"))
-    ck = str(tmp_path_factory.mktemp("sess_ck"))
-    full.write.mode("overwrite").parquet(src)
-
-    stream = sessionize_stream(read_event_stream(spark, src), gap_min=gap,
-                               watermark="0 seconds")
-    q = (stream.writeStream.format("memory").queryName("sess_out")
-         .outputMode("append").option("checkpointLocation", ck)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.sql(
-        f"SELECT * FROM sess_out WHERE session_start < timestamp'{flush_ts}'").collect()
-
-    want = sessionize_batch(small_events, gap_min=gap).collect()
-    key = lambda r: (r.user_id, r.session_start, r.session_end, r.n_events, r.total_value)
-    assert sorted(map(key, got)) == sorted(map(key, want))
-
-
-class _FakeState:
-    """Minimal GroupState stub for unit-testing _session_fn logic."""
-
-    def __init__(self):
-        self._v = None
-        self.hasTimedOut = False
-        self.timeout_ts = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def remove(self):
-        self._v = None
-
-    def setTimeoutTimestamp(self, ts):
-        self.timeout_ts = ts
-
-
-def _run_batch(fn, state, rows):
-    import pandas as pd
-    pdf = pd.DataFrame(rows, columns=["ts", "value"])
-    pdf["ts"] = pd.to_datetime(pdf["ts"])
-    return list(fn((1,), iter([pdf]), state))
-
-
-def test_stream_late_event_extends_session_backwards():
-    """A late-but-valid event in a later micro-batch with ts < the open
-    session's start must move session_start earlier (batch-twin parity)."""
-    from dxf_postgis_converter_spark.streaming.sessions import _session_fn
-
-    fn = _session_fn(30)
-    st = _FakeState()
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    _run_batch(fn, st, [(base + dt.timedelta(minutes=10), 1.0),
-                        (base + dt.timedelta(minutes=20), 2.0)])
-    assert st.get[0] == base + dt.timedelta(minutes=10)
-    # batch 2: event BEFORE the open session start, within the gap
-    _run_batch(fn, st, [(base + dt.timedelta(minutes=5), 4.0)])
-    start, end, n, total = st.get
-    assert start == base + dt.timedelta(minutes=5)   # extended backwards
-    assert end == base + dt.timedelta(minutes=20)
-    assert n == 3 and total == 7.0
-
-
-def test_stream_late_event_outside_gap_is_own_session():
-    from dxf_postgis_converter_spark.streaming.sessions import _session_fn
-
-    fn = _session_fn(30)
-    st = _FakeState()
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    _run_batch(fn, st, [(base, 1.0)])
-    # 2 hours earlier than the open session: emitted as its own session
-    out = _run_batch(fn, st, [(base - dt.timedelta(hours=2), 5.0)])
-    emitted = out[0]
-    assert len(emitted) == 1
-    r = emitted.iloc[0]
-    assert r["n_events"] == 1 and r["total_value"] == 5.0
-    assert st.get[0] == base  # open session untouched
-
-
-def test_stream_multiple_late_events_merge_like_batch():
-    """ADVICE r2: two late events within gap of each other (both > gap
-    before the open session) must form ONE merged session, as the batch
-    twin's global sort would — not two single-event sessions."""
-    from dxf_postgis_converter_spark.streaming.sessions import _session_fn
-
-    fn = _session_fn(30)
-    st = _FakeState()
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    _run_batch(fn, st, [(base, 1.0)])
-    out = _run_batch(fn, st, [(base - dt.timedelta(hours=3), 5.0),
-                              (base - dt.timedelta(hours=3) + dt.timedelta(minutes=10), 2.0),
-                              (base - dt.timedelta(hours=3) + dt.timedelta(minutes=20), 3.0)])
-    emitted = out[0]
-    assert len(emitted) == 1
-    r = emitted.iloc[0]
-    assert r["n_events"] == 3 and r["total_value"] == 10.0
-    assert r["session_start"] == base - dt.timedelta(hours=3)
-    assert r["session_end"] == base - dt.timedelta(hours=3) + dt.timedelta(minutes=20)
-    assert st.get[0] == base  # open session untouched
-
-
-def test_stream_late_events_straddling_two_islands():
-    """Late events forming two separate islands before the open session:
-    both emitted closed, correctly grouped."""
-    from dxf_postgis_converter_spark.streaming.sessions import _session_fn
-
-    fn = _session_fn(30)
-    st = _FakeState()
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    _run_batch(fn, st, [(base, 1.0)])
-    out = _run_batch(fn, st, [
-        (base - dt.timedelta(hours=6), 1.0),
-        (base - dt.timedelta(hours=6) + dt.timedelta(minutes=5), 1.0),
-        (base - dt.timedelta(hours=2), 7.0),
-    ])
-    emitted = out[0]
-    assert len(emitted) == 2
-    a, b = emitted.iloc[0], emitted.iloc[1]
-    assert a["n_events"] == 2 and a["total_value"] == 2.0
-    assert b["n_events"] == 1 and b["total_value"] == 7.0
-    # a late event within gap of the open session still merges into it
-    _run_batch(fn, st, [(base - dt.timedelta(minutes=25), 4.0)])
-    start, end, n, total = st.get
-    assert start == base - dt.timedelta(minutes=25) and n == 2 and total == 5.0
